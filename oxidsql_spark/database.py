@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions import local_rows_df
+
 
 class AnalyzerError(ValueError):
     """Facade-level analysis error (the reference's AnalyzerError)."""
@@ -374,8 +376,8 @@ class OxidSparkDatabase:
                     for n, (p, ch, pc) in c.get("fk", {}).items()
                 ]
             )
-            return self.spark.createDataFrame(
-                sorted(rows), "contract string, definition string"
+            return local_rows_df(
+                self.spark, sorted(rows), "contract string, definition string"
             )
         mv = _CREATE_MV_RE.match(s)
         if mv:
@@ -437,7 +439,8 @@ class OxidSparkDatabase:
             del self._functions[fname]
             return None
         if re.match(r"^\s*SHOW\s+FUNCTIONS\s*;?\s*$", s, re.IGNORECASE):
-            return self.spark.createDataFrame(
+            return local_rows_df(
+                self.spark,
                 [(n, d) for n, d in sorted(self._functions.items())],
                 "function_name string, definition string",
             )
@@ -445,7 +448,8 @@ class OxidSparkDatabase:
         if am:
             return self._alter_add_column(am.group(1).lower(), am.group(2))
         if re.match(r"^\s*SHOW\s+VIEWS\s*;?\s*$", s, re.IGNORECASE):
-            return self.spark.createDataFrame(
+            return local_rows_df(
+                self.spark,
                 [(n, d.strip()) for n, d in sorted(self._views.items())],
                 "view_name string, definition string",
             )
@@ -454,8 +458,8 @@ class OxidSparkDatabase:
         if _INSERT_RE.match(s):
             return self._insert(s)
         if re.match(r"^\s*SHOW\s+TABLES\s*;?\s*$", s, re.IGNORECASE):
-            return self.spark.createDataFrame(
-                [(t,) for t in sorted(self._tables)], "table_name string"
+            return local_rows_df(
+                self.spark, [(t,) for t in sorted(self._tables)], "table_name string"
             )
         hm = re.match(r"^\s*DESCRIBE\s+HISTORY\s+(\w+)\s*;?\s*$", s, re.IGNORECASE)
         if hm:
@@ -465,7 +469,8 @@ class OxidSparkDatabase:
             name = dm.group(1).lower()
             if name not in self._tables:
                 raise AnalyzerError(f"unknown table '{name}'")
-            return self.spark.createDataFrame(
+            return local_rows_df(
+                self.spark,
                 [(c.name, c.sql_repr()) for c in self._tables[name]],
                 "col_name string, data_type string",
             )
@@ -499,13 +504,15 @@ class OxidSparkDatabase:
         if sv:
             name = sv.group(1).lower()
             if name in self._matviews:
-                return self.spark.createDataFrame(
-                    [(v,) for v in self._mv_view(name).versions()], "version int"
+                return local_rows_df(
+                    self.spark,
+                    [(v,) for v in self._mv_view(name).versions()],
+                    "version int",
                 )
             if not self.storage_dir or name not in self._tables:
                 raise AnalyzerError(f"'{name}' is not a durable versioned table")
-            return self.spark.createDataFrame(
-                [(v,) for v in self._vt(name).versions()], "version int"
+            return local_rows_df(
+                self.spark, [(v,) for v in self._vt(name).versions()], "version int"
             )
         if _VERSION_AS_OF_RE.search(s):
             return self._sql_time_travel(s)
@@ -581,8 +588,10 @@ class OxidSparkDatabase:
         if fmt == "csv":
             w = w.option("header", True)
         getattr(w, fmt)(path)
-        return self.spark.createDataFrame(
-            [(df.count(), fmt, path)], "rows_copied long, format string, path string"
+        return local_rows_df(
+            self.spark,
+            [(df.count(), fmt, path)],
+            "rows_copied long, format string, path string",
         )
 
     def _copy_from(self, m: "re.Match[str]") -> DataFrame:
@@ -634,8 +643,8 @@ class OxidSparkDatabase:
         if name in self._stats:
             self._stats[name].update(aligned)
             self._save_stats(name)
-        return self.spark.createDataFrame(
-            [(n, fmt, path)], "rows_loaded long, format string, path string"
+        return local_rows_df(
+            self.spark, [(n, fmt, path)], "rows_loaded long, format string, path string"
         )
 
     def _copy_from_dead_letter(
@@ -738,7 +747,8 @@ class OxidSparkDatabase:
                     self._save_stats(name)
         finally:
             flagged.unpersist()
-        return self.spark.createDataFrame(
+        return local_rows_df(
+            self.spark,
             [(n_good, n_dead, fmt, dl_path)],
             "rows_loaded long, rows_dead long, format string, dead_letter string",
         )
@@ -782,7 +792,8 @@ class OxidSparkDatabase:
         live.createOrReplaceTempView(name)
         self._view_base[name] = live
         self._row_buf[name] = []
-        return self.spark.createDataFrame(
+        return local_rows_df(
+            self.spark,
             [(next_v, n_files, ",".join(zcols))],
             "version int, n_files int, zorder_by string",
         )
@@ -800,8 +811,8 @@ class OxidSparkDatabase:
             removed = self._mv_view(name).vacuum(keep_last=keep)
         else:
             removed = self._require_versioned(name).vacuum(keep_last=keep)
-        return self.spark.createDataFrame(
-            [(v,) for v in removed], "removed_version int"
+        return local_rows_df(
+            self.spark, [(v,) for v in removed], "removed_version int"
         )
 
     def _merge_sql(self, m: "re.Match[str]") -> None:
@@ -979,7 +990,7 @@ class OxidSparkDatabase:
         rows = [r for r in rep.collect() if r.violations > 0]
         if not rows:
             return None
-        return self.spark.createDataFrame(rows, "check string, violations bigint")
+        return local_rows_df(self.spark, rows, "check string, violations bigint")
 
     # -- materialized views (incremental aggregate maintenance) ----------
 
@@ -1142,8 +1153,8 @@ class OxidSparkDatabase:
             version = av.rebuild(self._mv_base_frame(spec))
             mode = "rebuild"
         self._mv_register(name)
-        return self.spark.createDataFrame(
-            [(name, version, mode)], "view string, version int, mode string"
+        return local_rows_df(
+            self.spark, [(name, version, mode)], "view string, version int, mode string"
         )
 
     def _drop_matview(self, name: str) -> None:
@@ -1186,7 +1197,7 @@ class OxidSparkDatabase:
         ]
         rows += self._estimate_rows(df, select_sql)
         rows.append(("physical_plan", formatted_plan(df)))
-        return self.spark.createDataFrame(rows, "item string, detail string")
+        return local_rows_df(self.spark, rows, "item string, detail string")
 
     def _explain_analyze(self, select_sql: str) -> DataFrame:
         """EXPLAIN ANALYZE <select>: EXECUTE the statement, then report
@@ -1212,7 +1223,7 @@ class OxidSparkDatabase:
             ("exchanges", str(s.n_exchanges)),
             ("final_plan", formatted_plan(df)),
         ]
-        return self.spark.createDataFrame(rows, "item string, detail string")
+        return local_rows_df(self.spark, rows, "item string, detail string")
 
     def _describe_history(self, name: str) -> DataFrame:
         """DESCRIBE HISTORY t (Delta's spelling) for a durable versioned
@@ -1244,8 +1255,10 @@ class OxidSparkDatabase:
                     _dt.datetime.fromtimestamp(ts).isoformat(timespec="seconds"),
                 )
             )
-        return self.spark.createDataFrame(
-            rows, "version int, n_files int, n_bytes bigint, committed_at string"
+        return local_rows_df(
+            self.spark,
+            rows,
+            "version int, n_files int, n_bytes bigint, committed_at string",
         )
 
     _SIMPLE_SELECT_RE = re.compile(
@@ -1455,7 +1468,7 @@ class OxidSparkDatabase:
         if len({c.name for c in specs}) != len(specs):
             raise AnalyzerError("duplicate column name")
         schema = T.StructType([T.StructField(c.name, c.spark_type, True) for c in specs])
-        empty = self.spark.createDataFrame([], schema)
+        empty = local_rows_df(self.spark, [], schema)
         self._tables[name] = specs
         self._persist_schema(name)
         self._commit(name, empty)
@@ -1548,7 +1561,7 @@ class OxidSparkDatabase:
             rows.append(tuple(vals.get(c.name) for c in specs))
         schema = T.StructType([T.StructField(c.name, c.spark_type, True) for c in specs])
         if self.storage_dir:
-            new = self.spark.createDataFrame(rows, schema)
+            new = local_rows_df(self.spark, rows, schema)
             self._commit(name, self.spark.table(name).union(new))
         else:
             # buffered path: the view is always base ∪ one local batch of
@@ -1558,7 +1571,7 @@ class OxidSparkDatabase:
             buf = self._row_buf.setdefault(name, [])
             buf.extend(rows)
             base = self._view_base[name]
-            batch = self.spark.createDataFrame(buf, schema)
+            batch = local_rows_df(self.spark, buf, schema)
             base.union(batch).createOrReplaceTempView(name)
         # online stats: the inserted rows are driver-known — buffered
         # accumulation, zero extra jobs here (heap.rs:245-292 twin)

@@ -9,8 +9,12 @@ stays inside codegen at cluster scale.
 
 from __future__ import annotations
 
+import datetime
+import time
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def as_double_vec(c: Column | str) -> Column:
@@ -104,16 +108,78 @@ def duck_md5_bucket(id_expr: str, mod: int = 100, salt: str = "") -> str:
     return duck_hex4(f"md5({key})") + f" % {mod}"
 
 
-def local_rows_df(spark, rows, schema):
-    """DataFrame from a small DRIVER-side row list in ONE partition.
+_EPOCH_UTC = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
 
-    ``spark.createDataFrame(list)`` parallelizes the list into
-    ``defaultParallelism`` python slices — on local[32] that is 32
-    Python-worker round trips for a handful of rows (r15 profile: a
-    40-row probe table cost a 32-task job with ~10 s of task time in
-    ann_ivf_kmeans's timed run).  A single slice ships one pickle
-    stream through one worker; anything that came through the driver
-    is by definition small enough for one task."""
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+def _utc_instant(dt: T.DataType, v):
+    """One driver value with every naive ``TimestampType`` datetime made
+    UTC-aware.  ``createDataFrame(<list>)`` reads a naive datetime in
+    the PROCESS-local zone (``time.mktime``, the zone ``collect()``
+    hands datetimes back in); an Arrow build would read it as UTC, or
+    as the session zone if left naive.  The instant is fixed here with
+    the same ``mktime`` call the list path makes."""
+    if v is None:
+        return v
+    if isinstance(dt, T.TimestampType):
+        if v.tzinfo is not None:
+            return v
+        secs = int(time.mktime(v.timetuple()))
+        return _EPOCH_UTC + datetime.timedelta(seconds=secs, microseconds=v.microsecond)
+    if isinstance(dt, T.ArrayType):
+        return [_utc_instant(dt.elementType, x) for x in v]
+    if isinstance(dt, T.MapType):
+        return {
+            _utc_instant(dt.keyType, k): _utc_instant(dt.valueType, x)
+            for k, x in v.items()
+        }
+    if isinstance(dt, T.StructType):
+        return tuple(_utc_instant(f.dataType, x) for f, x in zip(dt.fields, v))
+    return v
+
+
+def _has_ltz(dt: T.DataType) -> bool:
+    """Does the type hold a (session-zoned) ``timestamp`` anywhere?"""
+    if isinstance(dt, T.ArrayType):
+        return _has_ltz(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _has_ltz(dt.keyType) or _has_ltz(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_has_ltz(f.dataType) for f in dt.fields)
+    return isinstance(dt, T.TimestampType)
+
+
+def local_rows_df(spark, rows, schema):
+    """DataFrame from a small DRIVER-side row list, planned as a JVM
+    ``LocalRelation`` (``LocalTableScan``).
+
+    The rows become one Arrow table on the driver (schema from
+    ``to_arrow_schema``) and cross to the JVM as a single Arrow stream.
+    ``spark.createDataFrame(<list>)`` would instead build a pickled
+    Python RDD (``Scan ExistingRDD``): every action over it starts
+    Python workers to unpickle the rows — 230–420 ms for a
+    ``filter().count()`` over 1–1024 rows against 51–68 ms for the
+    local relation (4-core host).  A ``LocalRelation`` also carries its
+    true size, so Catalyst can broadcast it.
+
+    ``schema`` is a DDL string or a ``StructType``; ``rows`` are tuples
+    (or ``Row``s) in schema order.  Naive datetimes in ``timestamp``
+    columns keep the list path's reading (process-local zone, see
+    ``_utc_instant``).  This is the ONE way driver rows enter Spark —
+    tests/test_local_rows.py fails on any other ``createDataFrame``
+    call in the package."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, T.StructType):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = [
+        pa.array(
+            [_utc_instant(f.dataType, v) for v in col] if _has_ltz(f.dataType) else col,
+            type=a.type,
+        )
+        for col, f, a in zip(cols, schema.fields, arrow_schema)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -2240,7 +2240,7 @@ def qc_train(
     n = labels.count()
     w = {f: 0 for f in range(d_buckets + 1)}
     for _ in range(rounds):
-        wdf = spark.createDataFrame(sorted(w.items()), "f bigint, w bigint")
+        wdf = local_rows_df(spark, sorted(w.items()), "f bigint, w bigint")
         dot = (
             feats.join(F.broadcast(wdf), "f")
             .groupBy("doc_id")
@@ -2278,7 +2278,7 @@ def qc_build(
     import os
 
     w = qc_train(spark, docs, rounds, d_buckets, labels=labels)
-    spark.createDataFrame(sorted(w.items()), "f bigint, w bigint").coalesce(
+    local_rows_df(spark, sorted(w.items()), "f bigint, w bigint").coalesce(
         1
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "weights"))
 

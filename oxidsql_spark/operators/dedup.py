@@ -21,7 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..cachescope import scoped_persist
-from ..functions import tokens
+from ..functions import local_rows_df, tokens
 from ..registry import register
 from ..sources import table
 
@@ -2601,7 +2601,7 @@ class SpanIndexStore:
             if exclude_tag is None or not p.endswith(f"seg_{exclude_tag}")
         ]
         if not segs:
-            return self.spark.createDataFrame([], "gram string")
+            return local_rows_df(self.spark, [], "gram string")
         return self.spark.read.parquet(*segs).select("gram")
 
     def build(self, docs: DataFrame, k: int = _SPAN_K) -> None:

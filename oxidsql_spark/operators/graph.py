@@ -18,6 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..cachescope import free_local_checkpoint, scoped_local_checkpoint, scoped_persist
+from ..functions import local_rows_df
 from ..registry import register
 from ..sources import table
 from .dedup import (  # noqa: F401
@@ -225,8 +226,6 @@ def _driver_union_find(edge_rows, spark, schema) -> DataFrame:
                 ru, rv = rv, ru
             parent[rv] = ru
     out = [(x, find(x)) for x in parent]
-    from ..functions import local_rows_df
-
     return local_rows_df(spark, out, schema)
 
 
@@ -700,8 +699,8 @@ class IncrementalClusters:
                 "doc_id", "cluster_id"
             )
         else:
-            lookup = self.spark.createDataFrame(
-                [], "doc_id bigint, cluster_id bigint"
+            lookup = local_rows_df(
+                self.spark, [], "doc_id bigint, cluster_id bigint"
             )
         cross_lab = (
             cross.join(lookup, cross.old_id == lookup.doc_id)
@@ -755,8 +754,8 @@ class IncrementalClusters:
         # rows holding a remapped label live EXACTLY in the old labels'
         # buckets (every row is stored in its current cluster's bucket),
         # so the relabel reads only those partitions
-        relabeled = new_docs.sparkSession.createDataFrame(
-            [], "doc_id bigint, cluster_id bigint"
+        relabeled = local_rows_df(
+            new_docs.sparkSession, [], "doc_id bigint, cluster_id bigint"
         )
         if remap_rows:
             held = (

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions import local_rows_df
 from ..registry import register
 from ..sources import table
 
@@ -1916,7 +1917,7 @@ class AudioIndexStore:
             if exclude_tag is None or not p.endswith(f"seg_{exclude_tag}")
         ]
         if not segs:
-            return self.spark.createDataFrame([], "doc_id bigint, v bigint")
+            return local_rows_df(self.spark, [], "doc_id bigint, v bigint")
         return self.spark.read.parquet(*segs).select("doc_id", "v")
 
     def build(self, p: DataFrame) -> None:
@@ -2229,8 +2230,8 @@ class ImageBandIndexStore:
             if exclude_tag is None or not p.endswith(f"seg_{exclude_tag}")
         ]
         if not segs:
-            return self.spark.createDataFrame(
-                [], "doc_id bigint, dhash bigint, b int, v bigint"
+            return local_rows_df(
+                self.spark, [], "doc_id bigint, dhash bigint, b int, v bigint"
             )
         return self.spark.read.parquet(*segs).select("doc_id", "dhash", "b", "v")
 
@@ -2392,7 +2393,7 @@ class VideoKeyframeIndexStore:
             if exclude_tag is None or not p.endswith(f"seg_{exclude_tag}")
         ]
         if not segs:
-            return self.spark.createDataFrame([], "doc_id bigint, dhash bigint")
+            return local_rows_df(self.spark, [], "doc_id bigint, dhash bigint")
         return self.spark.read.parquet(*segs).select("doc_id", "dhash")
 
     @staticmethod

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import local_rows_df
 from ..registry import register
 from ..sources import table
 
@@ -100,7 +101,7 @@ def validate_contracts(
         )
 
     if not reports:
-        return spark.createDataFrame([], "check string, violations bigint")
+        return local_rows_df(spark, [], "check string, violations bigint")
     out = reports[0]
     for r in reports[1:]:
         out = out.unionByName(r)

@@ -14,7 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions import as_double_vec, cosine_sim, vec_dot, vec_dot_unrolled, vec_norm
+from ..functions import (
+    as_double_vec,
+    cosine_sim,
+    local_rows_df,
+    vec_dot,
+    vec_dot_unrolled,
+    vec_norm,
+)
 from ..registry import register
 from ..sources import table
 
@@ -407,7 +414,7 @@ def retrain_ivf_index(
     rows = [
         (int(c), [v / _KM_SCALE for v in cents[c]]) for c in sorted(cents)
     ]
-    cb = spark.createDataFrame(rows, "cell bigint, cv array<double>").withColumn(
+    cb = local_rows_df(spark, rows, "cell bigint, cv array<double>").withColumn(
         "cnrm", vec_norm(F.col("cv"))
     )
     cb.write.mode("overwrite").parquet(_codebook_path(out_path))
@@ -906,8 +913,6 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = ((qvec[None, :] - C) ** 2).sum(axis=1)
         for j in np.lexsort((cid_arr, d))[:_IVF_PROBE]:
             probe_rows.append((int(r["vec_id"]), int(cs[j])))
-    from ..functions import local_rows_df
-
     probes = local_rows_df(spark, probe_rows, "q_id bigint, cell int")
     ev = (
         table(spark, sf_dir, "embeddings")
@@ -1534,11 +1539,13 @@ def build_ivfadc_index(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     )
     codes = pq_encode(e, books).join(assigned, "vec_id")
     codes.write.mode("overwrite").partitionBy("cell").parquet(out_path)
-    spark.createDataFrame(
+    local_rows_df(
+        spark,
         [(int(c), [int(x) for x in cents[c]]) for c in sorted(cents)],
         "cell int, qcent array<bigint>",
     ).write.mode("overwrite").parquet(_codebook_path(out_path))
-    spark.createDataFrame(
+    local_rows_df(
+        spark,
         [
             (m, int(c), [int(x) for x in books[m][c]])
             for m in range(_PQ_M)
@@ -2510,7 +2517,8 @@ def ann_opq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact, ["q_id", "vec_id"]
     ).count()
     rot_hits = topk_hits(rot).join(exact, ["q_id", "vec_id"]).count()
-    return spark.createDataFrame(
+    return local_rows_df(
+        spark,
         [(_N_QUERIES, _TOP_K, flat_hits, rot_hits >= _OPQ_HIT_FLOOR)],
         "n_queries bigint, k bigint, flat_hits bigint, rot_hits_ge_floor boolean",
     )
@@ -2547,11 +2555,13 @@ def build_opq_ivfadc_index(spark: SparkSession, sf_dir: str, out_path: str) -> N
     )
     codes = pq_encode(rot, books).join(assigned, "vec_id")
     codes.write.mode("overwrite").partitionBy("cell").parquet(out_path)
-    spark.createDataFrame(
+    local_rows_df(
+        spark,
         [(int(c), [int(x) for x in cents[c]]) for c in sorted(cents)],
         "cell int, qcent array<bigint>",
     ).write.mode("overwrite").parquet(_codebook_path(out_path))
-    spark.createDataFrame(
+    local_rows_df(
+        spark,
         [
             (m, int(c), [int(x) for x in books[m][c]])
             for m in range(_PQ_M)
@@ -2562,7 +2572,7 @@ def build_opq_ivfadc_index(spark: SparkSession, sf_dir: str, out_path: str) -> N
     rows = [(-1, [float(x) for x in mu])] + [
         (i, [float(x) for x in comps[i]]) for i in range(len(comps))
     ]
-    spark.createDataFrame(rows, "i int, row array<double>").write.mode(
+    local_rows_df(spark, rows, "i int, row array<double>").write.mode(
         "overwrite"
     ).parquet(_rotation_path(out_path))
 
@@ -2700,7 +2710,8 @@ def ann_opq_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = scoped_persist(exact)
     hits = got.join(exact.select("q_id", "vec_id"), ["q_id", "vec_id"]).count()
     sim_sum = exact.agg(F.sum("sim").cast("decimal(18,4)").alias("s")).collect()[0].s
-    return spark.createDataFrame(
+    return local_rows_df(
+        spark,
         [(_N_QUERIES, _TOP_K, sim_sum, hits >= _OPQIVF_HIT_FLOOR)],
         "n_queries bigint, k bigint, exact_sim_sum decimal(18,4), rot_hits_ge_floor boolean",
     )

@@ -979,8 +979,8 @@ def bpe_build(
     from ..cachescope import free_local_checkpoint
 
     merges, final = bpe_train(spark, docs, n_merges)
-    spark.createDataFrame(
-        merges, "rnk int, l string, r string, merged string, cnt bigint"
+    local_rows_df(
+        spark, merges, "rnk int, l string, r string, merged string, cnt bigint"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "merges"))
     final.select("word", F.size(_bpe_syms("enc")).alias("n_syms")).write.mode(
         "overwrite"

@@ -17,6 +17,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .functions import local_rows_df
 from .operators.graph import dedup_clusters
 from .operators.textops import text_langid, text_stats
 from .sources import table
@@ -167,7 +168,7 @@ def build_chunk_vector_index(
     )
     assigned.write.mode("overwrite").partitionBy("cell").parquet(out_path)
     cent_rows = [(c, [int(x) for x in cents[c]]) for c in sorted(cents)]
-    spark.createDataFrame(cent_rows, "cell int, centroid array<bigint>").coalesce(
+    local_rows_df(spark, cent_rows, "cell int, centroid array<bigint>").coalesce(
         1
     ).write.mode("overwrite").parquet(out_path + "_centroids")
 

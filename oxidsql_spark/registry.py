@@ -85,8 +85,8 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_threshold_sweep",
     "dedup_containment",
     # rewritten in round 15 — every transitive-closure consumer rides
-    # the one-slice driver union-find label frame (functions.
-    # local_rows_df) and the Jaccard verify rewrite above:
+    # the driver union-find label frame (functions.local_rows_df) and
+    # the Jaccard verify rewrite above:
     "dedup_clusters",
     "dedup_clusters_collapsed",
     "dedup_cluster_stats",
@@ -100,8 +100,8 @@ _PRIORITY: tuple[str, ...] = (
     # a broadcast one-row frame, shared tokenize-once span cut:
     "curate_funnel_audit",
     # rewritten in round 15 — distwindow's partition-offset frame and
-    # every literal/driver-row frame now ship as ONE python slice
-    # (functions.local_rows_df) instead of defaultParallelism slices:
+    # every literal/driver-row frame go through functions.local_rows_df
+    # (since built as an Arrow LocalRelation, not a Python RDD):
     "customer_pareto",
     "orders_rfm",
     "orders_backlog_daily",

@@ -68,12 +68,18 @@ def get_spark(app_name: str = "oxidsql-spark", cpus: int | str | None = None) ->
     # truncated" WARN per release — informational here (the scope
     # contract already declares released results consumed), so keep it
     # out of bench/driver logs.
+    # Versioned snapshots live in `_v0000000N/` dirs; Spark's hidden-path
+    # rule matches the `_` prefix and WARNs "All paths were ignored" on
+    # every snapshot read, although the read does use the path.
     try:
         jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        for logger in (
             "org.apache.spark.rdd.MapPartitionsRDD",
-            jvm.org.apache.logging.log4j.Level.ERROR,
-        )
+            "org.apache.spark.sql.execution.datasources.DataSource",
+        ):
+            jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+                logger, jvm.org.apache.logging.log4j.Level.ERROR
+            )
     except Exception:
         pass  # cosmetic only; any log4j API drift must not block sessions
     return spark

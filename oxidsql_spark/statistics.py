@@ -21,6 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .functions import local_rows_df
 
 SAMPLE_SIZE = 1024  # the reference's SAMPLE_SIZE (catalog/mod.rs:37)
 SAMPLE_SEED = 42
@@ -287,7 +290,7 @@ class OnlineTableStats:
         if self._pending:
             rows, self._pending = self._pending, []
             self.rowcount -= len(rows)  # update() re-counts them
-            self.update(self.spark.createDataFrame(rows, self.schema))
+            self.update(local_rows_df(self.spark, rows, self.schema))
 
     def _fold_counts(self, batch: DataFrame, sign: int) -> int:
         """Shared insert/delete sketch maintenance: one exact counting
@@ -312,7 +315,13 @@ class OnlineTableStats:
             *[F.col(c).cast("string") for c in cols],
             F.lit(self._seq) + F.monotonically_increasing_id(),
         )
-        cand = batch.withColumn("__prio__", prio).orderBy("__prio__").limit(self.sample_size)
+        cand = batch.withColumn("__prio__", prio)
+        if n > self.sample_size:
+            # a batch that fits the sample is taken whole (the merge below
+            # sorts): over a relation of known size <= k, Catalyst drops
+            # the limit and the bare ORDER BY runs as a range-partitioned
+            # global sort — three jobs instead of one top-k job
+            cand = cand.orderBy("__prio__").limit(self.sample_size)
         rows = [(r["__prio__"], tuple(r[c] for c in cols)) for r in cand.collect()]
         self._sample = sorted(self._sample + rows, key=lambda t: t[0])[: self.sample_size]
         self._seq += n
@@ -380,9 +389,10 @@ class OnlineTableStats:
         self.rowcount = max(0, self.rowcount - n)
         if self._sample:
             cols = [f.name for f in self.schema.fields]
-            sample_df = self.spark.createDataFrame(
+            sample_df = local_rows_df(
+                self.spark,
                 [(p, *t) for p, t in self._sample],
-                ("__prio__ long, " + ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in self.schema.fields)),
+                T.StructType([T.StructField("__prio__", T.LongType())] + self.schema.fields),
             )
             cond = reduce(
                 lambda a, b: a & b,
@@ -411,7 +421,7 @@ class OnlineTableStats:
 
     def sample_df(self) -> DataFrame:
         self._flush()
-        return self.spark.createDataFrame([t for _, t in self._sample], self.schema)
+        return local_rows_df(self.spark, [t for _, t in self._sample], self.schema)
 
     def estimate_cardinality(self, predicate: Column | str) -> int:
         """Reference estimate + floor rule (bottomup.rs:121-161) over the

@@ -39,6 +39,10 @@ class VersionedTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        # version -> schema of the frame this instance wrote there: a
+        # read-back of its own commit skips parquet's schema-inference
+        # job (one footer-reading Spark job per read)
+        self._written_schema: dict = {}
         os.makedirs(path, exist_ok=True)
 
     # -- commit log ------------------------------------------------------
@@ -78,6 +82,7 @@ class VersionedTable:
         if os.path.isdir(vdir):  # crashed (uncommitted) attempt's debris
             shutil.rmtree(vdir)
         df.write.mode("errorifexists").parquet(vdir)
+        self._written_schema[next_v] = df.schema
         return next_v
 
     def upsert(self, updates: DataFrame, key: str) -> int:
@@ -129,7 +134,10 @@ class VersionedTable:
         v = version if version is not None else self.latest_version()
         if v is None or v not in self.versions():
             raise ValueError(f"no committed version {version!r} at {self.path}")
-        return self.spark.read.parquet(self._vdir(v))
+        reader = self.spark.read
+        if v in self._written_schema:
+            reader = reader.schema(self._written_schema[v])
+        return reader.parquet(self._vdir(v))
 
 
 class SnapshotArtifact:
