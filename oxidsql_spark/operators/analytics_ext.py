@@ -17,7 +17,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources import dbl, dec2, table
+from ..sources import dbl, dec2, scratch_dir, table
 
 
 @register(
@@ -250,16 +250,12 @@ def orders_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB deployment serve this aggregate without ever rescanning the
     base (the reference recomputes every query from heap scans;
     volcano_style.rs has no materialization layer)."""
-    import os
+    import shutil
 
     from ..matview import AggView
 
     o = table(spark, sf_dir, "orders")
-    path = os.path.join(
-        "/tmp",
-        f"oxidsql_matview_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-    )
-    import shutil
+    path = scratch_dir("matview", sf_dir)
 
     shutil.rmtree(path, ignore_errors=True)
     view = AggView(

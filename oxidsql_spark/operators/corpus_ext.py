@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import local_rows_df, tokens
 from ..registry import register
-from ..sources import table
+from ..sources import build_once, table
 
 # DuckDB twin of functions.tokens (kept verbatim in every oracle below).
 _DUCK_TOKS = (
@@ -2107,8 +2107,6 @@ def text_lm_frozen_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, so the artifact build -> read -> score path is proven
     semantics-preserving (the build_span_index precedent, for the LM
     artifact)."""
-    from .dedup import _artifact_tmp
-
     d = table(spark, sf_dir, "documents")
     corpus = d.filter(~F.col("source").isin(*_LMF_BATCH_SRCS)).select(
         "doc_id", "text"
@@ -2116,14 +2114,9 @@ def text_lm_frozen_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(F.col("source").isin(*_LMF_BATCH_SRCS)).select(
         "doc_id", "text"
     )
-    lm_dir = _artifact_tmp("lmfroz", sf_dir)
-    import os
-
-    # consts is written LAST by build_bigram_lm and parquet writes its
-    # _SUCCESS marker last, so this is the committed-build sentinel —
-    # a crashed partial build rebuilds instead of being read torn
-    if not os.path.exists(os.path.join(lm_dir, "consts", "_SUCCESS")):
-        build_bigram_lm(spark, corpus, lm_dir)
+    lm_dir = build_once(
+        "lmfroz", sf_dir, lambda out: build_bigram_lm(spark, corpus, out)
+    )
     return bigram_nll_against(spark, batch, lm_dir)
 
 
@@ -2270,8 +2263,7 @@ def qc_build(
     labels: DataFrame | None = None,
 ) -> None:
     """Train and FREEZE the classifier as a parquet weight artifact at
-    ``out_dir/weights`` (f, w) — the build_bigram_lm discipline; the
-    single table's _SUCCESS marker is the committed-build sentinel.
+    ``out_dir/weights`` (f, w) — the build_bigram_lm discipline.
     ``labels`` overrides the default gate weak labels (pass
     ``_qc_labels_curated(docs)`` for the non-circular curated-source
     signal the funnel loads)."""
@@ -2383,14 +2375,8 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the update rule, the truncating division, and the clamp are all
     proven cross-engine.  Ranking sanity (holdout separation of
     gate-clean from gate-reject) is locked in tests/test_pipeline.py."""
-    import os
-
-    from .dedup import _artifact_tmp
-
     d = table(spark, sf_dir, "documents")
-    qdir = _artifact_tmp("qclf", sf_dir)
-    if not os.path.exists(os.path.join(qdir, "weights", "_SUCCESS")):
-        qc_build(spark, d, qdir)
+    qdir = build_once("qclf", sf_dir, lambda out: qc_build(spark, d, out))
     scored = qc_score(spark, d, qdir)
     return _qc_labels(d).join(scored, "doc_id").select(
         "doc_id", F.col("y").alias("y_weak"), "logit_micro", "p_micro"
@@ -2405,15 +2391,12 @@ _QC_CURATED_CASE = (
 def _qc_curated_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build-once curated-label weight artifact (the qc_build
     discipline, separate dir from the gate-label artifact)."""
-    import os
-
-    from .dedup import _artifact_tmp
-
-    qdir = _artifact_tmp("qclfcur", sf_dir)
-    if not os.path.exists(os.path.join(qdir, "weights", "_SUCCESS")):
-        d = table(spark, sf_dir, "documents")
-        qc_build(spark, d, qdir, labels=_qc_labels_curated(d))
-    return qdir
+    d = table(spark, sf_dir, "documents")
+    return build_once(
+        "qclfcur",
+        sf_dir,
+        lambda out: qc_build(spark, d, out, labels=_qc_labels_curated(d)),
+    )
 
 
 @register(
@@ -2588,14 +2571,8 @@ def quality_classifier_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed sum), then a THRESHOLDS-sized explode per doc-row into
     one global aggregate — |thresholds| x corpus rows through a
     map-side-combined sum, no shuffle wider than |thresholds| groups."""
-    import os
-
-    from .dedup import _artifact_tmp
-
     d = table(spark, sf_dir, "documents")
-    qdir = _artifact_tmp("qclf", sf_dir)
-    if not os.path.exists(os.path.join(qdir, "weights", "_SUCCESS")):
-        qc_build(spark, d, qdir)
+    qdir = build_once("qclf", sf_dir, lambda out: qc_build(spark, d, out))
     scored = _qc_labels(d).join(qc_score(spark, d, qdir), "doc_id")
     thr = F.explode(
         F.array(*[F.lit(t).cast("bigint") for t in _QC_THRESHOLDS])

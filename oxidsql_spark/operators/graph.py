@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..cachescope import free_local_checkpoint, scoped_local_checkpoint, scoped_persist
 from ..functions import local_rows_df
 from ..registry import register
-from ..sources import table
+from ..sources import scratch_dir, table
 from .dedup import (  # noqa: F401
     _JACCARD_N,
     _JACCARD_T,
@@ -879,7 +879,7 @@ def dedup_clusters_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge cases included."""
     import shutil
 
-    from .dedup import _BATCH_SRCS, _artifact_tmp
+    from .dedup import _BATCH_SRCS
 
     d = table(spark, sf_dir, "documents")
     batch = d.filter(F.col("source").isin(*_BATCH_SRCS)).select("doc_id", "text")
@@ -891,12 +891,10 @@ def dedup_clusters_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # previous invocation's dir is removed afterwards instead.
     global _CLINC_SEQ
     _CLINC_SEQ += 1
-    path = _artifact_tmp(f"clinc{_CLINC_SEQ}", sf_dir)
+    path = scratch_dir(f"clinc{_CLINC_SEQ}", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     if _CLINC_SEQ > 1:
-        shutil.rmtree(
-            _artifact_tmp(f"clinc{_CLINC_SEQ - 1}", sf_dir), ignore_errors=True
-        )
+        shutil.rmtree(scratch_dir(f"clinc{_CLINC_SEQ - 1}", sf_dir), ignore_errors=True)
     state = IncrementalClusters(spark, path)
     state.build(corpus)
     state.admit(batch)

@@ -16,14 +16,12 @@ here.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sinks import write_zordered
-from ..sources import table
+from ..sources import scratch_dir, table
 
 
 @register(
@@ -55,10 +53,7 @@ def compact_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    out = os.path.join(
-        "/tmp",
-        f"oxidsql_compact_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-    )
+    out = scratch_dir("compact", sf_dir)
     o.repartition(48).write.mode("overwrite").parquet(out)
     compact(spark, out, target_file_mb=128)
     back = read_artifact(spark, out)
@@ -107,10 +102,7 @@ def skipping_scan_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
     )
-    out = os.path.join(
-        "/tmp",
-        f"oxidsql_skip_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-    )
+    out = scratch_dir("skip", sf_dir)
     write_skipping(o, out, "o_orderdate", n_files=16)
     got, stats = scan_skipping(
         spark,
@@ -161,12 +153,9 @@ def zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_returnflag"
     )
-    # per-process discriminator: two concurrent harness runs on the same
-    # scale factor must not race on the overwrite-then-read of one path
-    out = os.path.join(
-        "/tmp",
-        f"oxidsql_zorder_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}",
-    )
+    # per-process dir: two concurrent harness runs on the same scale
+    # factor must not race on the overwrite-then-read of one path
+    out = scratch_dir("zorder", sf_dir)
     write_zordered(li, out, "l_partkey", "l_suppkey", n_files=16)
     z = spark.read.parquet(out)
     return (

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions import local_rows_df
 from ..registry import register
-from ..sources import table
+from ..sources import build_once, table
 
 FAKE_DECODE = True  # no codec libs in this container → deterministic fake
 
@@ -1840,9 +1840,7 @@ def mm_audio_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints itself and probes the index.  The oracle re-derives
     the split, the build-time stop-shingle rule, and the probe
     arithmetic in one SQL pipeline."""
-    import os
-
-    from .dedup import _BATCH_SRCS, _artifact_tmp
+    from .dedup import _BATCH_SRCS
 
     d = table(spark, sf_dir, "documents")
     payload = F.col("text").cast("binary").alias("payload")
@@ -1852,9 +1850,9 @@ def mm_audio_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_p = d.filter(F.col("source").isin(*_BATCH_SRCS)).select(
         "doc_id", payload
     )
-    idx = os.path.join(_artifact_tmp("audidx", sf_dir), "index")
-    if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-        build_audio_shingle_index(spark, corpus_p, idx)
+    idx = build_once(
+        "audidx", sf_dir, lambda out: build_audio_shingle_index(spark, corpus_p, out)
+    )
     return audio_dedup_incremental(spark, batch_p, idx)
 
 
@@ -2157,9 +2155,7 @@ def mm_image_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash bands, audio shingles, IVF cells — and now image bands).
     The oracle re-derives the split, the banding, and the hamming
     verify in one SQL pipeline."""
-    import os
-
-    from .dedup import _BATCH_SRCS, _artifact_tmp
+    from .dedup import _BATCH_SRCS
 
     d = table(spark, sf_dir, "documents")
     fp = _dhash_fake_frame(d, ["doc_id", "source"])
@@ -2169,9 +2165,9 @@ def mm_image_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_fp = fp.filter(F.col("source").isin(*_BATCH_SRCS)).select(
         "doc_id", "dhash"
     )
-    idx = os.path.join(_artifact_tmp("imgidx", sf_dir), "index")
-    if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-        build_image_band_index(spark, corpus_fp, idx)
+    idx = build_once(
+        "imgidx", sf_dir, lambda out: build_image_band_index(spark, corpus_fp, out)
+    )
     return image_dedup_incremental(spark, batch_fp, idx)
 
 
@@ -2691,9 +2687,7 @@ def mm_video_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, hamming verify, containment vote).  The oracle
     re-derives the split, the keyframe collapse, and the vote in one
     SQL pipeline."""
-    import os
-
-    from .dedup import _BATCH_SRCS, _artifact_tmp
+    from .dedup import _BATCH_SRCS
 
     d = table(spark, sf_dir, "documents")
     # fh_of duplicated `_vid_fh` inline before the r14 opt round; both
@@ -2703,10 +2697,12 @@ def mm_video_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     batch = d.filter(F.col("source").isin(*_BATCH_SRCS)).select("doc_id", "text")
-    idx = os.path.join(_artifact_tmp("vididx", sf_dir), "index")
-    if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-        # hash-df cap baked in at build time (the audio index rule)
-        _capped_kf_sets(_vid_fh(corpus)).write.mode("overwrite").parquet(idx)
+    # hash-df cap baked in at build time (the audio index rule)
+    idx = build_once(
+        "vididx",
+        sf_dir,
+        lambda out: _capped_kf_sets(_vid_fh(corpus)).write.mode("overwrite").parquet(out),
+    )
     return video_dedup_incremental(spark, _vid_fh(batch), idx)
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions import local_rows_df, tokens
 from ..registry import register
-from ..sources import table
+from ..sources import build_once, table
 
 # Tiny per-language stopword lists for the heuristic language-ID — chosen
 # to be expressible identically in the DuckDB oracle.
@@ -965,8 +965,7 @@ def bpe_build(
     spark: SparkSession, docs: DataFrame, out_dir: str, n_merges: int = _BPE_MERGES
 ) -> None:
     """Train and FREEZE the tokenizer as a parquet artifact — the
-    build_bigram_lm discipline (each table's parquet _SUCCESS marker is
-    its committed-build sentinel):
+    build_bigram_lm discipline:
 
     * ``out_dir/merges`` (rank, left, right, merged, cnt) — the ranked
       merge rules, for encoding words the training never saw;
@@ -986,6 +985,12 @@ def bpe_build(
         "overwrite"
     ).parquet(os.path.join(out_dir, "vocab"))
     free_local_checkpoint(final)
+
+
+def _bpe_dir(spark: SparkSession, sf_dir: str) -> str:
+    """This process's tokenizer frozen over the documents table."""
+    docs = table(spark, sf_dir, "documents").select("text")
+    return build_once("bpe", sf_dir, lambda out: bpe_build(spark, docs, out, _BPE_MERGES))
 
 
 # Frozen merges applied per projection SEGMENT on the out-of-vocabulary
@@ -1256,15 +1261,8 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     report per-doc token-budget stats — qualifying word count, char
     count, and the post-BPE token count an LLM data pipeline budgets
     by.  The oracle re-derives train + encode fully in SQL."""
-    import os
-
-    from .dedup import _artifact_tmp
-
     d = table(spark, sf_dir, "documents")
-    bdir = _artifact_tmp("bpe", sf_dir)
-    if not os.path.exists(os.path.join(bdir, "merges", "_SUCCESS")):
-        bpe_build(spark, d.select("text"), bdir, _BPE_MERGES)
-    enc = bpe_encode(spark, d.select("doc_id", "text"), bdir)
+    enc = bpe_encode(spark, d.select("doc_id", "text"), _bpe_dir(spark, sf_dir))
     return enc.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.length("word")).alias("n_chars"),
@@ -1321,15 +1319,8 @@ def seq_pack_bpe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode + packing in one SQL pipeline.  Docs with no qualifying
     words contribute zero tokens and drop, exactly as zero-whitespace
     docs drop from the whitespace variant."""
-    import os
-
-    from .dedup import _artifact_tmp
-
     d = table(spark, sf_dir, "documents")
-    bdir = _artifact_tmp("bpe", sf_dir)
-    if not os.path.exists(os.path.join(bdir, "merges", "_SUCCESS")):
-        bpe_build(spark, d.select("text"), bdir, _BPE_MERGES)
-    enc = bpe_encode(spark, d.select("doc_id", "text"), bdir)
+    enc = bpe_encode(spark, d.select("doc_id", "text"), _bpe_dir(spark, sf_dir))
     sized = (
         enc.groupBy("doc_id")
         .agg(F.sum("n_syms").alias("n_tokens"))
@@ -1388,15 +1379,8 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  Scale shape: the encode is the zero-replay vocab join;
     everything after is one doc-keyed aggregate + one language-keyed
     aggregate over per-doc rows."""
-    import os
-
-    from .dedup import _artifact_tmp
-
     d = table(spark, sf_dir, "documents")
-    bdir = _artifact_tmp("bpe", sf_dir)
-    if not os.path.exists(os.path.join(bdir, "merges", "_SUCCESS")):
-        bpe_build(spark, d.select("text"), bdir, _BPE_MERGES)
-    enc = bpe_encode(spark, d.select("doc_id", "text"), bdir)
+    enc = bpe_encode(spark, d.select("doc_id", "text"), _bpe_dir(spark, sf_dir))
     per_doc = enc.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.length("word")).alias("n_chars"),

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from .functions import local_rows_df
 from .operators.graph import dedup_clusters
 from .operators.textops import text_langid, text_stats
-from .sources import table
+from .sources import build_once, table
 
 
 def build_training_corpus(
@@ -1073,22 +1073,20 @@ def _register_funnel_audit() -> None:
         import os
 
         from .operators.corpus_ext import _LMF_BATCH_SRCS, build_bigram_lm
-        from .operators.dedup import (
-            _artifact_tmp,
-            build_span_index,
-            span_cut_incremental,
-        )
+        from .operators.dedup import build_span_index, span_cut_incremental
 
         d = table(spark, sf_dir, "documents")
-        corpus = d.filter(~F.col("source").isin(*_LMF_BATCH_SRCS))
+        corpus = d.filter(~F.col("source").isin(*_LMF_BATCH_SRCS)).select(
+            "doc_id", "text"
+        )
         batch = d.filter(F.col("source").isin(*_LMF_BATCH_SRCS))
 
-        lm_dir = _artifact_tmp("fnaud_lm", sf_dir)
-        if not os.path.exists(os.path.join(lm_dir, "consts", "_SUCCESS")):
-            build_bigram_lm(spark, corpus.select("doc_id", "text"), lm_dir)
-        idx = _artifact_tmp("fnaud_span", sf_dir)
-        if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-            build_span_index(spark, corpus.select("doc_id", "text"), idx)
+        lm_dir = build_once(
+            "fnaud_lm", sf_dir, lambda out: build_bigram_lm(spark, corpus, out)
+        )
+        idx = build_once(
+            "fnaud_span", sf_dir, lambda out: build_span_index(spark, corpus, out)
+        )
 
         from .functions import tokens
         from pyspark.sql import Window as W

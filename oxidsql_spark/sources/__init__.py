@@ -16,6 +16,11 @@ a distributed engine).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,25 +65,75 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Write-once artifact leaves (frozen-LM tables, span/shingle gram
-# indexes, BPE merge tables, classifier weights): the same reuse
-# argument as table() — each spark.read.parquet call pays a driver-side
-# schema-inference/footer job (~80-100 ms measured) that a per-run
-# query path repeats 3-4×.  STRICT contract: only for directories that
-# are written ONCE behind a _SUCCESS guard and never appended or
-# replaced within a process.  Mutable stores (versioned tables,
-# segstore segments, ivfadc admit-appended indexes) must keep calling
-# spark.read.parquet so new files are listed.
-_ARTIFACT_LEAF_CACHE: dict[tuple[int, str], DataFrame] = {}
+# Per-process artifacts (frozen LMs, classifier weights, BPE tables,
+# gram/shingle indexes, IVF code indexes): this module alone decides how
+# they are named, built, committed, read and removed.  A dir is named by
+# scratch_dir, removed when the process exits, and — through build_once —
+# only ever appears complete: the build writes a staging dir and the
+# commit is one rename, so no caller needs to know which sub-table its
+# build writes last.
+_SCRATCH_DIRS: set[str] = set()
+
+
+@atexit.register
+def _remove_scratch_dirs() -> None:
+    for path in _SCRATCH_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def scratch_dir(kind: str, sf_dir: str) -> str:
+    """This process's dir for artifact ``kind`` over the tables in
+    ``sf_dir``; removed at exit."""
+    base = os.path.basename(os.path.normpath(sf_dir))
+    path = os.path.join("/tmp", f"oxidsql_{kind}_{base}_{os.getpid()}")
+    _SCRATCH_DIRS.add(path)
+    return path
+
+
+def build_once(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
+    """The committed ``scratch_dir(kind, sf_dir)``, built by
+    ``build(staging)`` only if it does not exist yet.  A build that
+    raises leaves nothing behind, so the next call builds again."""
+    path = scratch_dir(kind, sf_dir)
+    if not os.path.exists(path):
+        staging = path + ".building"
+        shutil.rmtree(staging, ignore_errors=True)
+        os.makedirs(staging)
+        try:
+            build(staging)
+            os.rename(staging, path)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+    return path
+
+
+# Artifact leaf reuse: the same argument as table() — each
+# spark.read.parquet call pays a driver-side listing and footer job
+# (~80-100 ms measured) that a per-run query path repeats 3-4×.  A leaf
+# is memoized with the (inode, mtime) of its dir's _SUCCESS marker and
+# re-listed when that stamp changes, so a dir deleted and rebuilt in the
+# same process is read fresh; a dir without a marker is never memoized.
+# The stamp cannot see files appended next to an unchanged marker:
+# append-mutable stores (versioned tables, segstore segments, the
+# ivfadc admit index) must keep calling spark.read.parquet.
+_ARTIFACT_LEAF_CACHE: dict[tuple[int, str], tuple[tuple[int, int], DataFrame]] = {}
 
 
 def artifact(spark: SparkSession, path: str) -> DataFrame:
-    """Leaf scan of a WRITE-ONCE artifact directory (see cache note)."""
+    """Leaf scan of a committed artifact directory (see cache note)."""
     key = (id(spark), path)
-    df = _ARTIFACT_LEAF_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _ARTIFACT_LEAF_CACHE[key] = df
+    try:
+        st = os.stat(os.path.join(path, "_SUCCESS"))
+    except FileNotFoundError:
+        _ARTIFACT_LEAF_CACHE.pop(key, None)
+        return spark.read.parquet(path)
+    stamp = (st.st_ino, st.st_mtime_ns)
+    hit = _ARTIFACT_LEAF_CACHE.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    df = spark.read.parquet(path)
+    _ARTIFACT_LEAF_CACHE[key] = (stamp, df)
     return df
 
 

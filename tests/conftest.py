@@ -8,6 +8,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from oxidsql_spark.cachescope import release_scoped_caches  # noqa: E402
 from oxidsql_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -190,6 +191,14 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip_oracle)
         elif "slow" in item.keywords and not run_slow:
             item.add_marker(skip_slow)
+
+
+@pytest.fixture(autouse=True)
+def _release_scoped_caches():
+    """Release the cachescope ledger after every test, so a query that
+    raises cannot leak its scoped persists into the next test."""
+    yield
+    release_scoped_caches()
 
 
 @pytest.fixture(scope="session")

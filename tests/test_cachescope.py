@@ -142,9 +142,9 @@ def test_query_releases_all_storage(spark, sf_dir, name):
     if name in _ARTIFACT_KINDS:
         import shutil
 
-        from oxidsql_spark.operators.dedup import _artifact_tmp
+        from oxidsql_spark.sources import scratch_dir
 
-        shutil.rmtree(_artifact_tmp(_ARTIFACT_KINDS[name], sf_dir), ignore_errors=True)
+        shutil.rmtree(scratch_dir(_ARTIFACT_KINDS[name], sf_dir), ignore_errors=True)
     release_scoped_caches()  # clean slate from earlier tests
     baseline = _n_persistent_rdds(spark)
     q = load_all()[name]
