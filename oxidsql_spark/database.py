@@ -319,8 +319,9 @@ class OxidSparkDatabase:
         os.replace(tmp, p)
 
     def _stats_rebuild(self, name: str) -> None:
-        """Delete/update path: plain HLL can't subtract (the reference's
-        CountingHLL can, counting_hyperloglog.rs:76-180) — re-derive."""
+        """MERGE path: its matched/inserted split has no single row
+        rewrite to fold, so the statistics are re-derived from the table
+        (DELETE and UPDATE fold their own signed delta instead)."""
         if name in self._stats:
             self._stats[name].rebuild(self.spark.table(name))
 
@@ -1668,16 +1669,20 @@ class OxidSparkDatabase:
         if name not in self._tables:
             raise AnalyzerError(f"unknown table '{name}'")
         df = self.spark.table(name)
+
         # standard DELETE: only rows where the predicate is TRUE go away;
-        # NULL-predicate rows survive
+        # NULL-predicate rows survive.  The same rewrite keeps the
+        # table's rows and the statistics sample's.
+        def keep(rows: DataFrame) -> DataFrame:
+            return rows.filter(f"NOT coalesce(({where}), false)") if where else rows.limit(0)
+
         deleted = df.filter(f"coalesce(({where}), false)") if where else df
-        remaining = df.filter(f"NOT coalesce(({where}), false)") if where else df.limit(0)
         # subtract the deleted rows' counts from the counting sketches
         # BEFORE the view swap (the heap.rs:296-311 decrement path) —
         # stats stay fresh with no rescan of the surviving table
         if name in self._stats:
-            self._stats[name].delete_batch(deleted)
-        self._commit(name, remaining)
+            self._stats[name].delete_batch(deleted, lambda s: keep(s.alias(name)))
+        self._commit(name, keep(df))
         self._save_stats(name)
         return None
 
@@ -1686,66 +1691,70 @@ class OxidSparkDatabase:
         name, sets_src, where = m.group(1).lower(), m.group(2), m.group(3)
         if name not in self._tables:
             raise AnalyzerError(f"unknown table '{name}'")
-        specs = self._tables[name]
-        cols = {c.name for c in specs}
+        types = {c.name: c.spark_type for c in self._tables[name]}
         assignments: dict[str, str] = {}
         for part in _split_top_level(sets_src):
             col, _, expr = part.partition("=")
             col = col.strip().lower()
-            if col not in cols:
+            if col not in types:
                 raise AnalyzerError(f"unknown column '{col}' in UPDATE")
             assignments[col] = expr.strip()
         df = self.spark.table(name)
         cond = where if where else "true"
         from pyspark.sql import functions as F  # local to keep header lean
 
+        # columns beyond the table's (the statistics sample's __prio__)
+        # pass through, so the sample takes the same rewrite
+        def extra(rows: DataFrame) -> list:
+            return [F.col(c) for c in rows.columns if c.lower() not in types]
+
         def apply_sets(rows: DataFrame) -> DataFrame:
             return rows.select(
                 *[
-                    F.expr(assignments[c.name]).cast(c.spark_type).alias(c.name)
-                    if c.name in assignments
-                    else F.col(c.name)
-                    for c in specs
-                ]
+                    F.expr(assignments[c]).cast(types[c]).alias(c) if c in assignments else F.col(c)
+                    for c in types
+                ],
+                *extra(rows),
             )
 
-        if re.search(r"\(\s*select\b", cond, re.IGNORECASE):
-            # Subquery predicate (IN / EXISTS, possibly correlated):
-            # Catalyst only resolves subquery expressions under Filter,
-            # not inside a projection's CASE WHEN — rewrite as matched ∪
-            # untouched (each row lands in exactly one branch; tables
-            # are unordered, so the union is semantics-preserving)
-            matched = df.filter(f"coalesce(({cond}), false)")
-            untouched = df.filter(f"NOT coalesce(({cond}), false)")
-            updated = apply_sets(matched).unionByName(untouched)
-        else:
-            updated = df.select(
+        subquery = re.search(r"\(\s*select\b", cond, re.IGNORECASE)
+
+        def rewrite(rows: DataFrame) -> DataFrame:
+            if subquery:
+                # Subquery predicate (IN / EXISTS, possibly correlated):
+                # Catalyst only resolves subquery expressions under
+                # Filter, not inside a projection's CASE WHEN — rewrite as
+                # matched ∪ untouched (each row lands in exactly one
+                # branch; tables are unordered, so the union is
+                # semantics-preserving)
+                matched = rows.filter(f"coalesce(({cond}), false)")
+                untouched = rows.filter(f"NOT coalesce(({cond}), false)")
+                return apply_sets(matched).unionByName(untouched)
+            return rows.select(
                 *[
-                    F.when(F.expr(cond), F.expr(assignments[c.name]).cast(c.spark_type))
-                    .otherwise(F.col(c.name))
-                    .alias(c.name)
-                    if c.name in assignments
-                    else F.col(c.name)
-                    for c in specs
-                ]
+                    F.when(F.expr(cond), F.expr(assignments[c]).cast(types[c]))
+                    .otherwise(F.col(c))
+                    .alias(c)
+                    if c in assignments
+                    else F.col(c)
+                    for c in types
+                ],
+                *extra(rows),
             )
-        # stats: UPDATE = subtract the touched slice's pre-image counts,
-        # add its post-image counts (heap.rs:296-345's update path pairs
-        # a delete-side and an insert-side sketch adjustment) — touches
-        # only the affected rows, never rescans the table
+
+        # stats: UPDATE = the touched slice's pre-image counts −1 and its
+        # post-image +1 in one signed aggregation (heap.rs:296-345's
+        # update path pairs a delete-side and an insert-side sketch
+        # adjustment) — touches only the affected rows, never rescans the
+        # table; the sample takes the same rewrite
         if name in self._stats:
             touched = df.filter(f"coalesce(({cond}), false)")
-            touched_post = touched.select(
-                *[
-                    F.expr(assignments[c.name]).cast(c.spark_type).alias(c.name)
-                    if c.name in assignments
-                    else F.col(c.name)
-                    for c in specs
-                ]
+            self._stats[name].update(
+                apply_sets(touched),
+                pre_image=touched,
+                rewrite=lambda s: rewrite(s.alias(name)),
             )
-            self._stats[name].delete_batch(touched)
-            self._stats[name].update(touched_post)
-        self._commit(name, updated)
+        self._commit(name, rewrite(df))
         self._save_stats(name)
         return None
 

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..cachescope import scoped_persist
 from ..functions import local_rows_df, tokens
 from ..registry import register
-from ..sources import scratch_dir, table
+from ..sources import fresh_dir, table
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -1655,7 +1655,7 @@ def dedup_containment_incremental_q(spark: SparkSession, sf_dir: str) -> DataFra
     d = table(spark, sf_dir, "documents")
     batch = d.filter(F.col("source").isin(*_BATCH_SRCS))
     corpus = d.filter(~F.col("source").isin(*_BATCH_SRCS))
-    idx = scratch_dir("shidx", sf_dir)
+    idx = fresh_dir("shidx", sf_dir)
     build_shingle_index(spark, corpus, idx)
     return dedup_containment_incremental(spark, batch, idx).orderBy(
         "new_id", "corpus_id"
@@ -1693,7 +1693,7 @@ def dedup_minhash_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     batch = d.filter(F.col("source").isin(*_BATCH_SRCS))
     corpus = d.filter(~F.col("source").isin(*_BATCH_SRCS))
-    tab = scratch_dir("mhband", sf_dir)
+    tab = fresh_dir("mhband", sf_dir)
     build_minhash_table(spark, corpus, tab)
     cand = dedup_minhash_incremental(spark, batch, tab, threshold=0.0).select(
         "new_id", "corpus_id"
@@ -2533,7 +2533,7 @@ def dedup_span_cut_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     batch = d.filter(F.col("source").isin(*_BATCH_SRCS)).select("doc_id", "text")
     corpus = d.filter(~F.col("source").isin(*_BATCH_SRCS)).select("doc_id", "text")
-    idx = scratch_dir("spanidx", sf_dir)
+    idx = fresh_dir("spanidx", sf_dir)
     build_span_index(spark, corpus, idx)
     return span_cut_incremental(spark, batch, idx).select(
         "doc_id", "n_tokens", "n_kept", "cleaned_md5"

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..cachescope import free_local_checkpoint, scoped_local_checkpoint, scoped_persist
 from ..functions import local_rows_df
 from ..registry import register
-from ..sources import scratch_dir, table
+from ..sources import fresh_dir, table
 from .dedup import (  # noqa: F401
     _JACCARD_N,
     _JACCARD_T,
@@ -864,9 +864,6 @@ def admit_clusters_stream(
     )
 
 
-_CLINC_SEQ = 0  # per-process invocation counter for fresh state dirs
-
-
 @register("dedup_clusters_incremental_q", oracle=_ORACLE)
 def dedup_clusters_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checked end-to-end incremental clustering: build the
@@ -877,24 +874,14 @@ def dedup_clusters_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-closure clustering, so a green row proves admitted ==
     re-clustered exactly — bridges, merges, and shingle-less singleton
     edge cases included."""
-    import shutil
-
     from .dedup import _BATCH_SRCS
 
     d = table(spark, sf_dir, "documents")
     batch = d.filter(F.col("source").isin(*_BATCH_SRCS)).select("doc_id", "text")
     corpus = d.filter(~F.col("source").isin(*_BATCH_SRCS)).select("doc_id", "text")
-    # a FRESH state dir per invocation (monotonic suffix), never
-    # wipe-and-reuse: a long-lived session may still hold cached plans
-    # over a previous run's file paths, and rebuilding under the same
-    # paths after deleting them invites reads of vanished files.  The
-    # previous invocation's dir is removed afterwards instead.
-    global _CLINC_SEQ
-    _CLINC_SEQ += 1
-    path = scratch_dir(f"clinc{_CLINC_SEQ}", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    if _CLINC_SEQ > 1:
-        shutil.rmtree(scratch_dir(f"clinc{_CLINC_SEQ - 1}", sf_dir), ignore_errors=True)
+    # a fresh state dir per invocation, never wipe-and-reuse: a
+    # DataFrame an earlier call returned still reads its own files
+    path = fresh_dir("clinc", sf_dir)
     state = IncrementalClusters(spark, path)
     state.build(corpus)
     state.admit(batch)

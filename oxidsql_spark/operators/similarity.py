@@ -23,7 +23,7 @@ from ..functions import (
     vec_norm,
 )
 from ..registry import register
-from ..sources import build_once, scratch_dir, table
+from ..sources import build_once, fresh_dir, table
 
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
 _TOP_K = 10
@@ -482,7 +482,7 @@ def ann_ivf_prepared_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions (partition pruning asserted on the executed plan in
     tests/test_dedup_similarity.py).  Result is cell-for-cell identical
     to ``ann_ivf_coarse``, so the same DuckDB oracle locks it."""
-    out = scratch_dir("ivf", sf_dir)
+    out = fresh_dir("ivf", sf_dir)
     build_ivf_index(spark, sf_dir, out)
     return ann_ivf_prepared(spark, sf_dir, out)
 

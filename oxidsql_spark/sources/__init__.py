@@ -17,7 +17,9 @@ a distributed engine).
 from __future__ import annotations
 
 import atexit
+import itertools
 import os
+import re
 import shutil
 from typing import Callable
 
@@ -71,8 +73,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # scratch_dir, removed when the process exits, and — through build_once —
 # only ever appears complete: the build writes a staging dir and the
 # commit is one rename, so no caller needs to know which sub-table its
-# build writes last.
+# build writes last.  A process killed before its exit hook leaves its
+# dirs behind; the first scratch_dir call of any later process removes
+# them.
+_SCRATCH_ROOT = "/tmp"
 _SCRATCH_DIRS: set[str] = set()
+_SWEPT = False
+_FRESH_SEQ = itertools.count(1)
 
 
 @atexit.register
@@ -81,13 +88,46 @@ def _remove_scratch_dirs() -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # alive, owned by another user
+    return True
+
+
+def _sweep_dead_dirs() -> None:
+    """Remove ``oxidsql_*_<pid>`` dirs (and their ``.building`` staging
+    dirs) whose process no longer exists.  A pid has no leading zero and
+    stays under Linux's PID_MAX_LIMIT (2^22), so bench.py's
+    ``oxidsql_benchbase…_<8 hex digits>`` bases never match."""
+    for name in os.listdir(_SCRATCH_ROOT):
+        m = re.fullmatch(r"oxidsql_.+_([1-9]\d*)(\.building)?", name)
+        if m and int(m.group(1)) <= 1 << 22 and not _pid_alive(int(m.group(1))):
+            shutil.rmtree(os.path.join(_SCRATCH_ROOT, name), ignore_errors=True)
+
+
 def scratch_dir(kind: str, sf_dir: str) -> str:
     """This process's dir for artifact ``kind`` over the tables in
     ``sf_dir``; removed at exit."""
+    global _SWEPT
+    if not _SWEPT:
+        _SWEPT = True
+        _sweep_dead_dirs()
     base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join("/tmp", f"oxidsql_{kind}_{base}_{os.getpid()}")
+    path = os.path.join(_SCRATCH_ROOT, f"oxidsql_{kind}_{base}_{os.getpid()}")
     _SCRATCH_DIRS.add(path)
     return path
+
+
+def fresh_dir(kind: str, sf_dir: str) -> str:
+    """A new ``scratch_dir`` on every call, for a query that rebuilds its
+    artifact per call: rebuilding at one fixed path would delete the
+    files under DataFrames that earlier calls returned.  Every such dir
+    lives until exit."""
+    return scratch_dir(f"{kind}-{next(_FRESH_SEQ)}", sf_dir)
 
 
 def build_once(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:

@@ -19,6 +19,8 @@ Reference machinery → Spark twin:
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -198,50 +200,69 @@ class CountingHLL:
         return int(round(est))
 
 
-def column_bucket_rho_counts(
-    batch: DataFrame, cols: list[str], m: int = 64
-) -> dict[str, list[tuple[int, int, int]]]:
-    """One exact mini-aggregation producing CountingHLL input for every
-    column at once: stack the columns, hash, split into (bucket, rho),
-    count. NULLs are skipped per column (distinct-count semantics).
-    The synthetic ``__rows__`` column counts batch rows in the same job.
-    Shuffle volume ≤ (ncols+1)×m×max_rho rows after partial agg."""
-    from itertools import chain
+class _SignedCounter:
+    """The Columns of the signed CountingHLL aggregation over a fixed
+    column list, built once (a py4j build of the stack/hash Columns
+    costs ~90 ms, more than the aggregation it feeds on a small slice).
 
-    bits = m.bit_length() - 1
-    stacked = batch.select(
-        F.stack(
+    The input carries the columns plus an integer ``__sign__``; the
+    columns are stacked, hashed and split into (bucket, rho), and the
+    signs summed per ``(c, bucket, rho)``.  NULLs are skipped per column
+    (distinct-count semantics); the synthetic ``__rows__`` column nets
+    the rows.  Shuffle volume ≤ (ncols+1)×m×max_rho rows after partial
+    agg, whatever the input size."""
+
+    def __init__(self, cols: list[str], m: int):
+        from itertools import chain
+
+        bits = m.bit_length() - 1
+        max_rho = 64 - bits + 1
+        self.cols = cols
+        self._stack = F.stack(
             F.lit(len(cols) + 1),
             *chain(*[(F.lit(c), F.col(c).cast("string")) for c in cols]),
             F.lit("__rows__"),
             F.lit("x"),
         ).alias("c", "v")
-    ).filter(F.col("v").isNotNull())
-    h = F.xxhash64("v")
-    w = F.expr(f"shiftrightunsigned(xxhash64(v), {bits})")
-    max_rho = 64 - bits + 1
-    rho = F.when(w == 0, F.lit(max_rho)).otherwise(
-        F.lit(64 - bits + 1) - F.length(F.expr(f"bin(shiftrightunsigned(xxhash64(v), {bits}))"))
-    )
-    counted = (
-        stacked.groupBy(
+        self._sign = F.col("__sign__")
+        self._live = F.col("v").isNotNull()
+        w = F.expr(f"shiftrightunsigned(xxhash64(v), {bits})")
+        rho = F.when(w == 0, F.lit(max_rho)).otherwise(F.lit(max_rho) - F.length(F.bin(w)))
+        self._keys = [
             F.col("c"),
-            h.bitwiseAND(F.lit(m - 1)).alias("bucket"),
+            F.xxhash64("v").bitwiseAND(F.lit(m - 1)).alias("bucket"),
             rho.alias("rho"),
+        ]
+        self._net = F.sum("__sign__").alias("n")
+
+    def counts(self, signed: DataFrame) -> dict[str, list[tuple[int, int, int]]]:
+        """Net (bucket, rho, count) rows per column and for ``__rows__``:
+        one aggregation query, a few thousand rows to the driver."""
+        rows = (
+            signed.select(self._stack, self._sign)
+            .filter(self._live)
+            .groupBy(*self._keys)
+            .agg(self._net)
+            .collect()
         )
-        .count()
-        .collect()
-    )
-    out: dict[str, list[tuple[int, int, int]]] = {c: [] for c in cols}
-    out["__rows__"] = []
-    for r in counted:
-        out[r["c"]].append((int(r["bucket"]), int(r["rho"]), int(r["count"])))
-    return out
+        out: dict[str, list[tuple[int, int, int]]] = {c: [] for c in self.cols}
+        out["__rows__"] = []
+        for r in rows:
+            out[r["c"]].append((int(r["bucket"]), int(r["rho"]), int(r["n"])))
+        return out
+
+
+def column_bucket_rho_counts(
+    batch: DataFrame, cols: list[str], m: int = 64
+) -> dict[str, list[tuple[int, int, int]]]:
+    """One exact mini-aggregation producing CountingHLL input for every
+    column at once (every row counted +1, see ``_SignedCounter``)."""
+    return _SignedCounter(cols, m).counts(batch.select(*cols, F.lit(1).alias("__sign__")))
 
 
 class OnlineTableStats:
     """Online statistics maintenance — the twin of the reference's
-    per-insert stats path (access/heap.rs:245-292): every ingested batch
+    per-insert stats path (access/heap.rs:245-311): every statement
     advances a cardinality counter, per-column ndv sketches, and a
     uniform sample, WITHOUT rescanning the table. Like the reference's
     (statistics accumulate in memory, flushed only at checkpoints —
@@ -250,20 +271,27 @@ class OnlineTableStats:
 
     Spark-native mapping:
 
-    * cardinality counter → a running count fed by each batch;
+    * cardinality counter → a running count moved by each statement;
     * CountingHLL per column (counting_hyperloglog.rs:76-180) →
       ``CountingHLL`` above: Spark aggregates exact (bucket, rho)
-      counts per batch (``column_bucket_rho_counts``), the driver keeps
-      the counter matrix. Inserts ADD counts, deletes SUBTRACT them —
-      the reference sketch's defining delete capability — so neither
-      path rescans the table. m=1024 buckets (same structure as the
-      reference's m=64; we are not byte-budgeted, and 1024 buckets puts
-      the rsd at ~3%, exact-ish in the linear-counting range);
+      counts, the driver keeps the counter matrix. Inserted rows count
+      +1 and deleted rows −1 — the reference sketch's defining delete
+      capability — so no path rescans the table. m=1024 buckets (same
+      structure as the reference's m=64; we are not byte-budgeted, and
+      1024 buckets puts the rsd at ~3%, exact-ish in the linear-counting
+      range);
     * 1024-row reservoir (heap.rs:258-289) → bottom-k sample: rows carry
       a hash priority, the k smallest survive; merging a batch is
       union-and-keep-k-smallest. Statistically a uniform sample like a
       reservoir, but mergeable across batches and executors — the form
-      that still works when ingest itself is distributed."""
+      that still works when ingest itself is distributed.
+
+    Cost model, per statement: ONE signed counting aggregation folds the
+    buffered INSERT … VALUES rows (+1), the statement's pre-image (−1)
+    and its post-image (+1) together; the sample follows the statement
+    by applying its own row rewrite to the ≤k sample rows as a
+    ``LocalRelation``, which Catalyst folds without a job.  INSERT …
+    VALUES and cardinality estimates run no job at all."""
 
     NDV_M = 1024  # CountingHLL buckets (reference uses 64; see above)
 
@@ -272,47 +300,72 @@ class OnlineTableStats:
         self.schema = schema
         self.sample_size = sample_size
         self.rowcount = 0
+        self._cols = [f.name for f in schema.fields]
         self._sketches: dict[str, CountingHLL] = {}
         self._sample: list[tuple[int, tuple]] = []  # (priority, row values)
-        self._seq = 0  # rows ever ingested; salts duplicate-row priorities
-        self._pending: list[tuple] = []  # driver-known rows not yet folded
+        self._seq = 0  # rows ever sampled; salts duplicate-row priorities
+        self._pending: list[tuple] = []  # driver-known rows not yet counted
+        self._unsampled: list[tuple] = []  # driver-known rows not yet sampled
+        self._counter: _SignedCounter | None = None  # built at the first fold
+        self._typed: list[Column] = []
 
     def add_rows(self, rows: list[tuple]) -> None:
-        """Driver-known tiny batches (INSERT … VALUES): buffer and fold
-        lazily. The reference's per-insert maintenance is an in-memory
-        nanosecond update (heap.rs:245-292); the Spark-faithful cost
-        model is therefore ZERO jobs on the insert path, one amortized
-        job at the next stats read — not three jobs per row."""
+        """Driver-known tiny batches (INSERT … VALUES): buffer, zero jobs.
+        The reference's per-insert maintenance is an in-memory nanosecond
+        update (heap.rs:245-292); here the rows' counts ride along in the
+        next statement's signed aggregation (or the next ``ndv`` read),
+        and they join the sample at the next sample read, job-free."""
         self._pending.extend(rows)
+        self._unsampled.extend(rows)
         self.rowcount += len(rows)
+
+    def _fold(self, parts: list[tuple[DataFrame, int]]) -> int:
+        """The ONE signed counting aggregation: the buffered rows (+1) and
+        each ``(frame, sign)`` part, unioned with a sign column.  The net
+        counts go into the counter matrices and the net row count moves
+        ``rowcount``; returns the net row count of ``parts``."""
+        from functools import reduce
+
+        pending = self._pending
+        if pending:
+            parts = [(local_rows_df(self.spark, pending, self.schema), 1), *parts]
+        if not parts:
+            return 0
+        if self._counter is None:
+            self._counter = _SignedCounter(self._cols, self.NDV_M)
+            # every part in the declared types: the union needs one row
+            # type, and a value must hash the same string whichever part
+            # (driver rows or table slice) it arrives in
+            self._typed = [
+                F.col(f.name).cast(f.dataType).alias(f.name) for f in self.schema.fields
+            ]
+        signed = reduce(
+            DataFrame.union,
+            [df.select(*self._typed, F.lit(sign).alias("__sign__")) for df, sign in parts],
+        )
+        counts = self._counter.counts(signed)
+        self._pending = []
+        for c in self._cols:
+            if c not in self._sketches:
+                self._sketches[c] = CountingHLL(self.NDV_M)
+            self._sketches[c].add_counts(counts[c])
+        net = sum(cnt for _, _, cnt in counts["__rows__"]) - len(pending)
+        self.rowcount = max(0, self.rowcount + net)
+        return net
 
     def _flush(self) -> None:
         if self._pending:
-            rows, self._pending = self._pending, []
-            self.rowcount -= len(rows)  # update() re-counts them
-            self.update(local_rows_df(self.spark, rows, self.schema))
+            self._fold([])
 
-    def _fold_counts(self, batch: DataFrame, sign: int) -> int:
-        """Shared insert/delete sketch maintenance: one exact counting
-        job over the batch, then driver-local matrix arithmetic."""
-        cols = [f.name for f in self.schema.fields]
-        counts = column_bucket_rho_counts(batch, cols, m=self.NDV_M)
-        for c in cols:
-            if c not in self._sketches:
-                self._sketches[c] = CountingHLL(self.NDV_M)
-            self._sketches[c].add_counts(counts[c], sign=sign)
-        return sum(cnt for _, _, cnt in counts["__rows__"])
+    def _prio_rows(self, rows) -> list[tuple[int, tuple]]:
+        return [(r["__prio__"], tuple(r[c] for c in self._cols)) for r in rows]
 
-    def update(self, batch: DataFrame) -> None:
-        """Fold one inserted batch in: one exact counting job over the
-        batch (rowcount + per-column (bucket, rho) counts in a single
-        aggregation), one bounded top-k job for the sample."""
-        cols = [f.name for f in self.schema.fields]
-        n = self._fold_counts(batch, sign=1)
-        if n == 0:
-            return
+    def _merge_candidates(self, batch: DataFrame, n: int) -> None:
+        """Bottom-k merge of an ``n``-row batch into the sample: each row
+        gets a hash priority (salted by the ingest sequence, so duplicate
+        rows draw distinct priorities)."""
         prio = F.xxhash64(
-            *[F.col(c).cast("string") for c in cols],
+            *[F.col(c).cast("string") for c in self._cols],
             F.lit(self._seq) + F.monotonically_increasing_id(),
         )
         cand = batch.withColumn("__prio__", prio)
@@ -322,14 +375,66 @@ class OnlineTableStats:
             # the limit and the bare ORDER BY runs as a range-partitioned
             # global sort — three jobs instead of one top-k job
             cand = cand.orderBy("__prio__").limit(self.sample_size)
-        rows = [(r["__prio__"], tuple(r[c] for c in cols)) for r in cand.collect()]
-        self._sample = sorted(self._sample + rows, key=lambda t: t[0])[: self.sample_size]
+        merged = self._sample + self._prio_rows(cand.collect())
+        self._sample = sorted(merged, key=lambda t: t[0])[: self.sample_size]
         self._seq += n
-        self.rowcount += n
+
+    def _merge_unsampled(self) -> None:
+        """Buffered rows join the sample: the priority projection over
+        their ``LocalRelation`` folds in Catalyst, no job."""
+        if self._unsampled:
+            rows = self._unsampled
+            self._merge_candidates(local_rows_df(self.spark, rows, self.schema), len(rows))
+            self._unsampled = []
+
+    def _rewritten_sample(
+        self, rewrite: Callable[[DataFrame], DataFrame]
+    ) -> list[tuple[int, tuple]]:
+        """A statement's row rewrite applied to the sample: ``rewrite``
+        maps the sample frame (table columns plus ``__prio__``) to its
+        post-statement rows, carrying ``__prio__`` through.  Over a
+        ``LocalRelation`` a filter or projection folds without a job; a
+        subquery predicate runs as it does over the table."""
+        self._merge_unsampled()
+        if not self._sample:
+            return []
+        frame = local_rows_df(
+            self.spark,
+            [(p, *t) for p, t in self._sample],
+            T.StructType([T.StructField("__prio__", T.LongType())] + self.schema.fields),
+        )
+        return sorted(self._prio_rows(rewrite(frame).collect()), key=lambda t: t[0])
+
+    def update(
+        self,
+        batch: DataFrame,
+        pre_image: DataFrame | None = None,
+        rewrite: Callable[[DataFrame], DataFrame] | None = None,
+    ) -> None:
+        """Fold one statement's inserted or rewritten rows in with ONE
+        signed counting aggregation (buffered rows +1, ``pre_image`` −1,
+        ``batch`` +1).
+
+        * INSERT … SELECT: ``update(batch)``; the batch's rows are sample
+          candidates (one bounded top-k job).
+        * UPDATE: ``update(post, pre_image=touched, rewrite=f)``, where
+          ``f`` applies the statement's assignments to a frame (see
+          ``_rewritten_sample``).  Sample rows are rewritten IN PLACE and
+          keep their priority (a touched row draws no new one): the
+          sample stays the same k rows of the table, now holding their
+          post-image values."""
+        if rewrite is not None:
+            sample = self._rewritten_sample(rewrite)
+            self._fold([(pre_image, -1), (batch, 1)])
+            self._sample = sample
+            return
+        n = self._fold([(batch, 1)])
+        if n > 0:
+            self._merge_candidates(batch, n)
 
     def dumps(self) -> bytes:
         """Serialize the full stats state (counter matrices, sample,
-        pending rows) — the twin of the reference persisting its sketch
+        buffered rows) — the twin of the reference persisting its sketch
         blobs into catalog VarBinary columns (catalog/mod.rs:574-577).
         A few hundred KB per table regardless of table size."""
         import pickle
@@ -344,6 +449,7 @@ class OnlineTableStats:
                 },
                 "sample": self._sample,
                 "pending": self._pending,
+                "unsampled": self._unsampled,
             }
         )
 
@@ -361,6 +467,9 @@ class OnlineTableStats:
         self._seq = st["seq"]
         self._sample = [tuple(x) if not isinstance(x, tuple) else x for x in st["sample"]]
         self._pending = st["pending"]
+        # a blob written before the sample buffer existed had sampled
+        # none of its pending rows
+        self._unsampled = st.get("unsampled", list(st["pending"]))
         for c, (m, raw) in st["sketches"].items():
             sk = CountingHLL(m)
             sk._counts = np.frombuffer(raw, dtype=np.int64).reshape(
@@ -369,69 +478,56 @@ class OnlineTableStats:
             self._sketches[c] = sk
         return self
 
-    def delete_batch(self, deleted: DataFrame) -> None:
-        """Fold a DELETE in by SUBTRACTING its (bucket, rho) counts —
-        the reference CountingHLL's decrement path
-        (counting_hyperloglog.rs:76-180 via heap.rs:296-311): no rescan
-        of the surviving table. A value deleted while duplicates remain
-        keeps its register alive (its counter stays positive) — exactly
-        the property max-register HLLs cannot provide. The sample drops
-        deleted rows by a NULL-SAFE anti-join (one job over the
-        ≤1024-row sample): plain column equality would never match rows
-        carrying a NULL, so deleted NULL-bearing rows would linger in
-        the sample and skew selectivity estimates."""
-        from functools import reduce
-
-        self._flush()
-        n = self._fold_counts(deleted, sign=-1)
-        if n == 0:
-            return
-        self.rowcount = max(0, self.rowcount - n)
-        if self._sample:
-            cols = [f.name for f in self.schema.fields]
-            sample_df = local_rows_df(
-                self.spark,
-                [(p, *t) for p, t in self._sample],
-                T.StructType([T.StructField("__prio__", T.LongType())] + self.schema.fields),
-            )
-            cond = reduce(
-                lambda a, b: a & b,
-                [sample_df[c].eqNullSafe(deleted[c]) for c in cols],
-            )
-            kept = sample_df.join(deleted, cond, "left_anti").collect()
-            self._sample = sorted(
-                ((r["__prio__"], tuple(r[c] for c in cols)) for r in kept),
-                key=lambda t: t[0],
-            )
+    def delete_batch(
+        self, deleted: DataFrame, rewrite: Callable[[DataFrame], DataFrame]
+    ) -> None:
+        """Fold a DELETE in: the ``deleted`` rows count −1 in the same
+        one signed aggregation that folds the buffered rows — the
+        reference CountingHLL's decrement path (counting_hyperloglog.rs
+        :76-180 via heap.rs:296-311), no rescan of the surviving table.
+        A value deleted while duplicates remain keeps its register alive
+        (its counter stays positive) — exactly the property max-register
+        HLLs cannot provide.  ``rewrite`` is the statement's own filter
+        of SURVIVING rows, applied to the sample as a ``LocalRelation``
+        with no job; it drops NULL-bearing rows exactly as the table
+        does."""
+        sample = self._rewritten_sample(rewrite)
+        self._fold([(deleted, -1)])
+        self._sample = sample
 
     def rebuild(self, df: DataFrame) -> None:
-        """Full re-derivation from the table (recovery / UPDATE path)."""
+        """Full re-derivation from the table (create / reopen / MERGE)."""
         self.rowcount = 0
         self._sketches = {}
         self._sample = []
         self._pending = []
+        self._unsampled = []
         self.update(df)
 
     def ndv(self, col: str) -> int:
         """Distinct-count estimate from the counting sketch — driver-local
-        arithmetic, zero Spark jobs."""
+        arithmetic once buffered rows are folded."""
         self._flush()
         sk = self._sketches.get(col)
         return sk.estimate() if sk is not None else 0
 
     def sample_df(self) -> DataFrame:
-        self._flush()
+        self._merge_unsampled()
         return local_rows_df(self.spark, [t for _, t in self._sample], self.schema)
 
     def estimate_cardinality(self, predicate: Column | str) -> int:
         """Reference estimate + floor rule (bottomup.rs:121-161) over the
-        maintained sample — fresh after every INSERT, no ANALYZE step."""
-        self._flush()
+        maintained sample — fresh after every INSERT, no ANALYZE step.
+        The matches are the rows of the filtered sample ``LocalRelation``,
+        which Catalyst folds: no job (a ``count()`` would plan an
+        aggregate, two jobs under AQE).  A subquery predicate runs as it
+        does anywhere."""
+        self._merge_unsampled()
         total = len(self._sample)
         if total == 0:
             return max(self.rowcount, 1)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        matching = self.sample_df().filter(pred).count()
+        matching = len(self.sample_df().filter(pred).select(F.lit(1)).collect())
         est = matching / total * self.rowcount
         floor = self.rowcount / (2 * self.sample_size)
         return max(int(est), int(floor), 1)

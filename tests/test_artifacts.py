@@ -49,11 +49,47 @@ def test_rebuilt_artifact_is_listed_again(spark):
 
 def test_ann_ivf_prepared_second_call(spark, sf_dir):
     """The registered query rebuilds its index on every call; the second
-    call must read the rebuilt codebook."""
+    call must read the rebuilt codebook, and the first call's DataFrame
+    must still read its own."""
     q = load_all()["ann_ivf_prepared"]
-    first = q.fn(spark, sf_dir).count()
+    df1 = q.fn(spark, sf_dir)
+    first = df1.count()
     assert first > 0
     assert q.fn(spark, sf_dir).count() == first
+    assert df1.count() == first
+
+
+def test_dead_process_dirs_are_swept():
+    """The first scratch_dir call of a process removes the dirs, and their
+    staging dirs, of processes that no longer exist — and nothing of a
+    live process."""
+    proc = subprocess.Popen([sys.executable, "-c", "pass"])
+    proc.wait(timeout=60)
+    dead = proc.pid  # exited and reaped
+    live = os.getpid()
+    root = os.path.dirname(sources.scratch_dir("test_sweep", "sf_test"))
+    paths = {
+        p: os.path.join(root, p)
+        for p in (
+            f"oxidsql_test_sweep_sf_test_{dead}",
+            f"oxidsql_test_sweep_sf_test_{dead}.building",
+            f"oxidsql_test_sweep_sf_test_{live}",
+            "oxidsql_benchbase_test_sweep_12345678",
+        )
+    }
+    try:
+        for p in paths.values():
+            os.makedirs(os.path.join(p, "sub"))
+        sources._SWEPT = False
+        sources.scratch_dir("test_sweep", "sf_test")
+        left = sorted(n for n, p in paths.items() if os.path.exists(p))
+        assert left == [
+            "oxidsql_benchbase_test_sweep_12345678",
+            f"oxidsql_test_sweep_sf_test_{live}",
+        ]
+    finally:
+        for p in paths.values():
+            shutil.rmtree(p, ignore_errors=True)
 
 
 _EXIT_SCRIPT = """

@@ -351,3 +351,185 @@ def test_count_min_sketches_merge_exactly(spark, sf_dir):
     }
     whole = {(r.i, r.b): r.cnt for r in count_min_sketch(terms(d), "term").collect()}
     assert merged == whole and merged
+
+
+# -- one signed pass per statement -------------------------------------------
+
+
+def _assert_stats_match_table(db, name, step):
+    """Counter matrices equal a full rebuild's, rowcount is exact, and the
+    sample is a sub-multiset of the live rows.  The check reads a copy
+    (``loads(dumps())``), so the live object keeps its buffered rows for
+    the next statement's fold."""
+    from collections import Counter
+
+    import numpy as np
+
+    from oxidsql_spark.statistics import OnlineTableStats
+
+    live = db.stats(name)
+    table = db.spark.table(name)
+    rows = [tuple(r) for r in table.collect()]
+    assert live.rowcount == len(rows), (step, live.rowcount, len(rows))
+    copy = OnlineTableStats.loads(db.spark, live.schema, live.dumps())
+    copy._flush()
+    fresh = OnlineTableStats(db.spark, live.schema)
+    fresh.rebuild(table)
+    for f in live.schema.fields:
+        want = fresh._sketches[f.name]._counts
+        sk = copy._sketches.get(f.name)
+        got = sk._counts if sk is not None else np.zeros_like(want)
+        assert np.array_equal(got, want), (step, f.name, int(np.abs(got - want).sum()))
+    sample = Counter(tuple(r) for r in copy.sample_df().collect())
+    assert not sample - Counter(rows), (step, sample - Counter(rows))
+
+
+def test_dml_stats_equal_full_rebuild_after_every_statement(spark, tmp_path):
+    """A seeded statement sequence on a durable table — INSERT VALUES with
+    NULLs, INSERT … SELECT, DELETE with NULL predicate operands, a
+    multi-column UPDATE (plain and subquery forms), TRUNCATE: after each
+    statement the online statistics equal a full rebuild from the table."""
+    import random
+
+    from oxidsql_spark.database import OxidSparkDatabase
+
+    rng = random.Random(7)
+
+    def values(n):
+        def lit(v, q=False):
+            return "NULL" if v is None else (f"'{v}'" if q else str(v))
+
+        return ", ".join(
+            f"({lit(rng.randrange(1000))}, "
+            f"{lit(rng.choice([None, *range(6)]))}, "
+            f"{lit(rng.choice([None, 'a', 'b', 'cc']), q=True)})"
+            for _ in range(n)
+        )
+
+    db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
+    db.query("CREATE TABLE t_inv (id BIGINT, k INT, s VARCHAR(4))")
+    steps = [
+        f"INSERT INTO t_inv VALUES {values(6)}",
+        "INSERT INTO t_inv SELECT id, CAST(CASE WHEN id % 4 = 0 THEN NULL "
+        "ELSE id % 5 END AS INT), CASE WHEN id % 3 = 0 THEN NULL ELSE 'x' END "
+        "FROM range(40)",
+        f"INSERT INTO t_inv VALUES {values(4)}",
+        "DELETE FROM t_inv WHERE k > 3 OR s = NULL",
+        "UPDATE t_inv SET k = k + 1, s = concat(s, 'z') WHERE id % 3 = 0",
+        f"INSERT INTO t_inv VALUES {values(5)}",
+        "DELETE FROM t_inv WHERE s IS NULL AND k < 2",
+        "UPDATE t_inv SET id = id + 1000, k = NULL "
+        "WHERE id IN (SELECT id FROM t_inv WHERE k = 1)",
+        "INSERT INTO t_inv SELECT id + 2000, k, s FROM t_inv WHERE k IS NOT NULL",
+        "TRUNCATE TABLE t_inv",
+        f"INSERT INTO t_inv VALUES {values(3)}",
+    ]
+    for stmt in steps:
+        db.query(stmt)
+        _assert_stats_match_table(db, "t_inv", stmt)
+
+
+def _stats_jobs_per_call(spark, monkeypatch):
+    """Tag every Spark job run inside a public statistics call with its
+    own job group; returns a dict ``method -> [jobs per call]``."""
+    from oxidsql_spark.statistics import OnlineTableStats
+
+    sc = spark.sparkContext
+    calls: dict[str, list[str]] = {}
+    depth = [0]
+
+    def tagged(method):
+        orig = getattr(OnlineTableStats, method)
+
+        def wrapper(*a, **k):
+            if depth[0]:
+                return orig(*a, **k)
+            group = f"stats-{method}-{sum(map(len, calls.values()))}"
+            calls.setdefault(method, []).append(group)
+            depth[0] += 1
+            sc.setJobGroup(group, group)
+            try:
+                return orig(*a, **k)
+            finally:
+                depth[0] -= 1
+                sc.setJobGroup("stats-outside", "stats-outside")
+
+        monkeypatch.setattr(OnlineTableStats, method, wrapper)
+
+    for m in ("add_rows", "update", "delete_batch", "estimate_cardinality"):
+        tagged(m)
+
+    def jobs() -> dict[str, list[int]]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return {
+            m: [len(sc.statusTracker().getJobIdsForGroup(g)) for g in gs]
+            for m, gs in calls.items()
+        }
+
+    return jobs
+
+
+def test_dml_stats_run_one_aggregation_per_statement(spark, tmp_path, monkeypatch):
+    """DELETE and UPDATE fold their statistics in one aggregation query
+    (≤ 2 jobs under AQE), with buffered INSERT rows riding along; INSERT …
+    VALUES and cardinality estimates run no job."""
+    from oxidsql_spark.database import OxidSparkDatabase
+
+    db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
+    db.query("CREATE TABLE t_jobs (id BIGINT, k INT)")
+    db.query("INSERT INTO t_jobs SELECT id, CAST(id % 7 AS INT) FROM range(60)")
+    jobs = _stats_jobs_per_call(spark, monkeypatch)
+    db.query("INSERT INTO t_jobs VALUES (100, 1), (101, NULL)")
+    db.stats("t_jobs").estimate_cardinality("k < 3")
+    db.query("DELETE FROM t_jobs WHERE k = 2")
+    db.query("INSERT INTO t_jobs VALUES (102, 3)")
+    db.query("UPDATE t_jobs SET k = k + 1 WHERE id % 5 = 0")
+    db.query("EXPLAIN SELECT * FROM t_jobs WHERE k > 4")
+    got = jobs()
+    assert got["add_rows"] == [0, 0], got
+    assert got["estimate_cardinality"] == [0, 0], got
+    assert len(got["delete_batch"]) == 1 and got["delete_batch"][0] <= 2, got
+    assert len(got["update"]) == 1 and got["update"][0] <= 2, got
+
+
+def test_update_rewrites_sample_in_place(spark):
+    """UPDATE keeps the sample's rows and their priorities and rewrites
+    their values to the post-image — plain and subquery predicates."""
+    from oxidsql_spark.database import OxidSparkDatabase
+
+    db = OxidSparkDatabase(spark)
+    db.query("CREATE TABLE t_usamp (id INT, v INT)")
+    db.query("INSERT INTO t_usamp SELECT CAST(id AS INT) AS id, CAST(id AS INT) AS v FROM range(30)")
+    before = dict(db.stats("t_usamp")._sample)
+    assert len(before) == 30
+
+    db.query("UPDATE t_usamp SET v = v * 10 WHERE id % 2 = 0")
+    after = dict(db.stats("t_usamp")._sample)
+    assert after.keys() == before.keys()
+    for p, (i, v) in before.items():
+        assert after[p] == (i, v * 10 if i % 2 == 0 else v), (p, after[p])
+
+    db.query("UPDATE t_usamp SET v = -1 WHERE id IN (SELECT id FROM t_usamp WHERE id < 5)")
+    final = dict(db.stats("t_usamp")._sample)
+    assert final.keys() == before.keys()
+    for p, (i, v) in after.items():
+        assert final[p] == (i, -1 if i < 5 else v), (p, final[p])
+
+
+def test_stats_blob_without_sample_buffer_samples_pending_rows(spark):
+    """A blob written before buffered rows were sampled separately from
+    their counts restores with those rows still to be sampled."""
+    import pickle
+
+    from pyspark.sql import types as T
+
+    from oxidsql_spark.statistics import OnlineTableStats
+
+    schema = T.StructType([T.StructField("id", T.IntegerType())])
+    st = OnlineTableStats(spark, schema)
+    st.add_rows([(1,), (2,)])
+    blob = pickle.loads(st.dumps())
+    del blob["unsampled"]
+    back = OnlineTableStats.loads(spark, schema, pickle.dumps(blob))
+    assert sorted(r.id for r in back.sample_df().collect()) == [1, 2]
+    assert back.rowcount == 2 and back.ndv("id") == 2
