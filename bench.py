@@ -222,12 +222,17 @@ def main() -> None:
     from oxidsql_spark.cachescope import release_scoped_caches
 
     timings: dict[str, float] = {}
+    cold: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     for name in queries_list:
         # one warmup run pays plan construction + codegen compilation
-        # (one-time per query shape on a warmed cluster), then the timed
-        # runs measure steady-state execution
+        # (one-time per query shape on a warmed cluster) and the head's
+        # build-once artifacts, then the timed runs measure steady-state
+        # execution; the warmup time is kept as `cold`, so cost moved to
+        # first use stays visible
+        t0 = time.perf_counter()
         materialize(queries[name].fn(spark, sf_dir))
+        cold[name] = round(time.perf_counter() - t0, 3)
         runs: list[float] = []
         for _ in range(3):
             t0 = time.perf_counter()
@@ -251,6 +256,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "cold": cold,
         "spread": spread,
         "materialize": "noop",
         "layout": {"kind": "multifile-256k-x32cap", "files": layout_files},

@@ -1204,25 +1204,33 @@ class OxidSparkDatabase:
         """EXPLAIN ANALYZE <select>: EXECUTE the statement, then report
         what actually happened — actual row count, wall time, and the
         FINAL physical plan after AQE's runtime re-optimization
-        (isFinalPlan=true: runtime-chosen join strategies and coalesced
-        partitions, which static EXPLAIN cannot show).  The dynamic
-        companion of `_explain`'s static plan-quality relation — the
-        'run it and show me' surface other engines spell the same way."""
+        (runtime-chosen join strategies and coalesced partitions, which
+        static EXPLAIN cannot show).  The statement runs whole through
+        the noop sink, every output column evaluated, and counts its rows
+        with an Observation on the way: ``count()`` would let Catalyst
+        prune the columns it computes.  The dynamic companion of
+        `_explain`'s static plan-quality relation — the 'run it and show
+        me' surface other engines spell the same way."""
         import time
 
-        from .plans import explain_summary, formatted_plan
+        from pyspark.sql import Observation
+
+        from .plans import explain_summary, last_execution_plan
 
         df = self.sql(select_sql)
+        obs = Observation("explain_analyze")
         t0 = time.time()
-        n_rows = df.count()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.format("noop").mode(
+            "overwrite"
+        ).save()
         wall_ms = int((time.time() - t0) * 1000)
-        s = explain_summary(df)  # post-execution: AQE final plan
+        s = explain_summary(df)
         rows = [
-            ("actual_rows", str(n_rows)),
+            ("actual_rows", str(obs.get["n"])),
             ("wall_ms", str(wall_ms)),
             ("joins", ", ".join(s.joins) or "none"),
             ("exchanges", str(s.n_exchanges)),
-            ("final_plan", formatted_plan(df)),
+            ("final_plan", last_execution_plan(self.spark)),
         ]
         return local_rows_df(self.spark, rows, "item string, detail string")
 

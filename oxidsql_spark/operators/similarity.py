@@ -663,15 +663,7 @@ def _km_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scoped lifecycle releases it at end of query."""
     from ..cachescope import scoped_persist
 
-    return scoped_persist(
-        table(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            F.expr(
-                f"transform(embedding, e -> "
-                f"CAST(floor(CAST(e AS DOUBLE) * {_KM_SCALE}) AS BIGINT))"
-            ).alias("qv"),
-        )
-    )
+    return scoped_persist(_quantize_vecs(table(spark, sf_dir, "embeddings")))
 
 
 def _km_dist_to(cent: list[int]) -> F.Column:
@@ -949,22 +941,7 @@ _PQ_SUB = _KM_DIM // _PQ_M  # dims per subspace
 _PQ_K = 16  # codes per subspace
 
 
-def pq_train_per_subspace(e: DataFrame) -> dict[int, dict[int, list[int]]]:
-    """Reference trainer: the integer Lloyd trainer (`_km_train`) run
-    independently per subspace — 2·M jobs.  Kept as the semantic spec
-    the fused trainer is equality-tested against."""
-    books = {}
-    for m in range(_PQ_M):
-        sub = e.select(
-            "vec_id", F.slice("qv", m * _PQ_SUB + 1, _PQ_SUB).alias("qv")
-        )
-        books[m] = _km_train(sub, k=_PQ_K, iters=_KM_ITERS, dim=_PQ_SUB)
-    return books
-
-
-def pq_train(
-    e: DataFrame, init_rows: list | None = None
-) -> dict[int, dict[int, list[int]]]:
+def pq_train(e: DataFrame) -> dict[int, dict[int, list[int]]]:
     """Per-subspace codebooks over a `qv` (quantized bigint) frame:
     books[m][code] = centroid (subspace-local coordinate list).
 
@@ -977,18 +954,8 @@ def pq_train(
     argmin-first-minimum == (dist, c) tie-break, integer sums,
     floor-divided centroid updates; equality locked in
     tests/test_dedup_similarity.py), so the unrolled per-subspace SQL
-    oracle still re-derives every codebook bit-for-bit.
-
-    ``init_rows`` lets a caller that already collected the low-vec_id
-    rows (e.g. for the ADC query LUTs) hand them in instead of paying
-    a second collect job (r15 opt round); rows beyond vec_id < _PQ_K
-    are ignored, so the superset collect is safe to share."""
-    if init_rows is None:
-        init_rows = (
-            e.filter(F.col("vec_id") < _PQ_K).select("vec_id", "qv").collect()
-        )
-    else:
-        init_rows = [r for r in init_rows if r["vec_id"] < _PQ_K]
+    oracle still re-derives every codebook bit-for-bit."""
+    init_rows = e.filter(F.col("vec_id") < _PQ_K).select("vec_id", "qv").collect()
     books: dict[int, dict[int, list[int]]] = {
         m: {
             int(r["vec_id"]): list(r["qv"])[m * _PQ_SUB : (m + 1) * _PQ_SUB]
@@ -1334,25 +1301,61 @@ def _adc_scan(
     )
 
 
+# The trained corpus codebook is an artifact of its input version
+# (sources.build_once): ann_pq_adc, ann_pq_rerank and both IVFADC index
+# builds share one training per input version, and a warm search runs no
+# trainer job.  The kind names every constant the training depends on.
+_PQ_BOOKS_KIND = f"pqbooks-m{_PQ_M}-k{_PQ_K}-i{_KM_ITERS}-s{_KM_SCALE}"
+
+
+def _write_pq_books(
+    spark: SparkSession, books: dict[int, dict[int, list[int]]], path: str
+) -> None:
+    """PQ codebooks as (sub, code, cent) rows."""
+    local_rows_df(
+        spark,
+        [
+            (m, int(c), [int(x) for x in books[m][c]])
+            for m in range(_PQ_M)
+            for c in sorted(books[m])
+        ],
+        "sub int, code bigint, cent array<bigint>",
+    ).write.mode("overwrite").parquet(path)
+
+
+def _read_pq_books(spark: SparkSession, path: str) -> dict[int, dict[int, list[int]]]:
+    """The codebooks `_write_pq_books` wrote to ``path``."""
+    from ..sources import artifact
+
+    books: dict[int, dict[int, list[int]]] = {m: {} for m in range(_PQ_M)}
+    for r in artifact(spark, path).collect():
+        books[int(r["sub"])][int(r["code"])] = list(r["cent"])
+    return books
+
+
+def _pq_books(spark: SparkSession, sf_dir: str) -> dict[int, dict[int, list[int]]]:
+    """The corpus PQ codebooks (`pq_train` over `_km_quantized`), trained
+    on first use per input version; the quantized corpus is persisted
+    only while training."""
+
+    def build(out: str) -> None:
+        _write_pq_books(spark, pq_train(_km_quantized(spark, sf_dir)), out)
+
+    return _read_pq_books(spark, build_once(_PQ_BOOKS_KIND, sf_dir, build))
+
+
 def _pq_adc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(q_id, vec_id, dist): the ADC distance frame, fused — train
-    codebooks, then encode + score the corpus in ONE Arrow pass with
-    the LUTs as numpy (see `_adc_scan(encode_books=...)`).  Only each
-    batch's top-`_PQ_SHORTLIST` per query leave the scan.  Self-pairs
-    excluded.  One head-row collect serves BOTH the trainer init
-    (vec_id < _PQ_K) and the query LUTs (vec_id < _N_QUERIES) — r15
-    opt round: the two separate collects were two near-identical jobs
-    over the same cached frame."""
-    e = _km_quantized(spark, sf_dir)
-    head_rows = (
-        e.filter(F.col("vec_id") < max(_PQ_K, _N_QUERIES))
-        .select("vec_id", "qv")
-        .collect()
-    )
-    books = pq_train(e, init_rows=head_rows)
-    q_ids, _, luts, code_ids = _pq_lut(
-        books, [r for r in head_rows if r["vec_id"] < _N_QUERIES]
-    )
+    """(q_id, vec_id, dist): the ADC distance frame, fused — encode +
+    score the corpus in ONE Arrow pass against the shared codebooks,
+    with the LUTs as numpy (see `_adc_scan(encode_books=...)`).  Only
+    each batch's top-`_PQ_SHORTLIST` per query leave the scan.
+    Self-pairs excluded.  The query rows come through a pushed-down
+    parquet filter, so a warm call persists nothing: it reads the
+    codebook, the query rows and the corpus once each."""
+    books = _pq_books(spark, sf_dir)
+    e = _quantize_vecs(table(spark, sf_dir, "embeddings"))
+    qrows = e.filter(F.col("vec_id") < _N_QUERIES).collect()
+    q_ids, _, luts, code_ids = _pq_lut(books, qrows)
     return _adc_scan(e, q_ids, luts, code_ids, encode_books=books)
 
 
@@ -1360,8 +1363,9 @@ def _pq_adc_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-compressed top-k search with asymmetric distance (ADC).
 
-    Train M=8 per-subspace codebooks (integer Lloyd, deterministic),
-    encode the corpus to M-code rows in one Arrow pass, then score: the
+    Train M=8 per-subspace codebooks (integer Lloyd, deterministic;
+    once per input version, see `_pq_books`), encode the corpus to
+    M-code rows in one Arrow pass, then score: the
     per-query lookup table (M×K exact subvector→centroid distances, a
     few hundred rows fleet-wide) broadcasts to the code table and the
     approximate distance is a sum of M joined lookups — per-candidate
@@ -1525,10 +1529,12 @@ def build_ivfadc_index(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     discipline of `build_ivf_index`, but each row is an ~8-byte code
     instead of a 64-float vector — the corpus that no longer fits as
     vectors fits as codes, and a probe scans only its cells' partitions
-    of the CODE table (IVFADC, Jégou et al. 2011)."""
+    of the CODE table (IVFADC, Jégou et al. 2011).  The PQ books are
+    the shared corpus codebook artifact (`_pq_books`), the ones
+    ann_pq_adc searches with."""
     e = _km_quantized(spark, sf_dir)
     cents = _km_train(e)
-    books = pq_train(e)
+    books = _pq_books(spark, sf_dir)
     assigned = _km_assigned_batch(e, cents).select(
         "vec_id", F.col("cluster").alias("cell")
     )
@@ -1539,15 +1545,7 @@ def build_ivfadc_index(spark: SparkSession, sf_dir: str, out_path: str) -> None:
         [(int(c), [int(x) for x in cents[c]]) for c in sorted(cents)],
         "cell int, qcent array<bigint>",
     ).write.mode("overwrite").parquet(_codebook_path(out_path))
-    local_rows_df(
-        spark,
-        [
-            (m, int(c), [int(x) for x in books[m][c]])
-            for m in range(_PQ_M)
-            for c in sorted(books[m])
-        ],
-        "sub int, code bigint, cent array<bigint>",
-    ).write.mode("overwrite").parquet(_pqbooks_path(out_path))
+    _write_pq_books(spark, books, _pqbooks_path(out_path))
 
 
 def _load_ivfadc_books(spark: SparkSession, index_path: str):
@@ -1558,10 +1556,7 @@ def _load_ivfadc_books(spark: SparkSession, index_path: str):
         int(r["cell"]): list(r["qcent"])
         for r in artifact(spark, _codebook_path(index_path)).collect()
     }
-    books: dict[int, dict[int, list[int]]] = {m: {} for m in range(_PQ_M)}
-    for r in artifact(spark, _pqbooks_path(index_path)).collect():
-        books[int(r["sub"])][int(r["code"])] = list(r["cent"])
-    return cents, books
+    return cents, _read_pq_books(spark, _pqbooks_path(index_path))
 
 
 def _quantize_vecs(vecs: DataFrame) -> DataFrame:
@@ -2532,15 +2527,7 @@ def build_opq_ivfadc_index(spark: SparkSession, sf_dir: str, out_path: str) -> N
         [(int(c), [int(x) for x in cents[c]]) for c in sorted(cents)],
         "cell int, qcent array<bigint>",
     ).write.mode("overwrite").parquet(_codebook_path(out_path))
-    local_rows_df(
-        spark,
-        [
-            (m, int(c), [int(x) for x in books[m][c]])
-            for m in range(_PQ_M)
-            for c in sorted(books[m])
-        ],
-        "sub int, code bigint, cent array<bigint>",
-    ).write.mode("overwrite").parquet(_pqbooks_path(out_path))
+    _write_pq_books(spark, books, _pqbooks_path(out_path))
     rows = [(-1, [float(x) for x in mu])] + [
         (i, [float(x) for x in comps[i]]) for i in range(len(comps))
     ]

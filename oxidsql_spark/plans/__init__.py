@@ -15,7 +15,7 @@ import io
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _JOIN_KINDS = (
     "BroadcastHashJoin",
@@ -36,6 +36,14 @@ def formatted_plan(df: DataFrame) -> str:
 def executed_plan(df: DataFrame) -> str:
     """Final (post-AQE) physical plan — requires the query to have run."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def last_execution_plan(spark: SparkSession) -> str:
+    """Physical plan, final after AQE, of the latest SQL execution in
+    Spark's status store (kept with the UI disabled too)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).physicalPlanDescription()
 
 
 def has_single_partition_window(df: DataFrame) -> bool:

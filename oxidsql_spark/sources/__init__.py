@@ -17,6 +17,7 @@ a distributed engine).
 from __future__ import annotations
 
 import atexit
+import hashlib
 import itertools
 import os
 import re
@@ -50,32 +51,65 @@ BROADCAST_TABLES = {"region", "nation", "supplier"}
 # pays that 7× per build. DataFrames are immutable, so the same leaf is
 # safely shared across queries — filters/pruning still specialize per
 # query at optimization time. Keyed by session so a foreign session
-# (e.g. the driver's) gets its own leaves.
-_LEAF_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# (e.g. the driver's) gets its own leaves, and memoized with the leaf's
+# file stamp (see _leaf_stamp), so a rewritten table is listed again
+# instead of being served the file list of the files it replaced.
+_LEAF_CACHE: dict[tuple[int, str, str], tuple[tuple, DataFrame]] = {}
+
+
+def _leaf_stamp(sf_dir: str, name: str) -> tuple:
+    """(absolute path, size, mtime_ns) of every file of table ``name``'s
+    leaf ``{sf_dir}/{name}.parquet`` — one file, or a dir of part files."""
+    root = os.path.abspath(f"{sf_dir}/{name}.parquet")
+    if os.path.isfile(root):
+        paths = [root]
+    else:
+        paths = sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
+    stamp = []
+    for p in paths:
+        st = os.stat(p)
+        stamp.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
+
+
+def input_fingerprint(sf_dir: str) -> str:
+    """Version of the input tables in ``sf_dir``: a hash of the
+    ``_leaf_stamp`` of every table in ``TABLES``.  Rewriting any leaf
+    file, or reading another dir with the same basename, changes it."""
+    stamps = repr([_leaf_stamp(sf_dir, t) for t in TABLES])
+    return hashlib.sha1(stamps.encode()).hexdigest()[:16]
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Leaf scan. Parquet → columnar batches → whole-stage codegen."""
     key = (id(spark), sf_dir, name)
-    df = _LEAF_CACHE.get(key)
-    if df is None:
-        if name == "events":
-            df = _read_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _LEAF_CACHE[key] = df
+    stamp = _leaf_stamp(sf_dir, name)
+    hit = _LEAF_CACHE.get(key)
+    if hit is not None:
+        if hit[0] == stamp:
+            return hit[1]
+        # a cached plan over the replaced files matches the new leaf
+        # (a file index equals any other over the same root path)
+        spark.catalog.refreshByPath(f"{sf_dir}/{name}.parquet")
+    if name == "events":
+        df = _read_events(spark, sf_dir)
+    else:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    _LEAF_CACHE[key] = (stamp, df)
     return df
 
 
 # Per-process artifacts (frozen LMs, classifier weights, BPE tables,
-# gram/shingle indexes, IVF code indexes): this module alone decides how
-# they are named, built, committed, read and removed.  A dir is named by
-# scratch_dir, removed when the process exits, and — through build_once —
-# only ever appears complete: the build writes a staging dir and the
-# commit is one rename, so no caller needs to know which sub-table its
-# build writes last.  A process killed before its exit hook leaves its
-# dirs behind; the first scratch_dir call of any later process removes
-# them.
+# gram/shingle indexes, IVF code indexes, PQ codebooks): this module
+# alone decides how they are named, built, committed, read and removed.
+# A dir is named by scratch_dir, removed when the process exits, and —
+# through build_once — only ever appears complete: the build writes a
+# staging dir and the commit is one rename, so no caller needs to know
+# which sub-table its build writes last.  build_once commits one dir per
+# input version (input_fingerprint), so a rewritten input table is never
+# served the artifact trained on the old one.  A process killed before
+# its exit hook leaves its dirs behind; the first scratch_dir call of
+# any later process removes them.
 _SCRATCH_ROOT = "/tmp"
 _SCRATCH_DIRS: set[str] = set()
 _SWEPT = False
@@ -131,10 +165,15 @@ def fresh_dir(kind: str, sf_dir: str) -> str:
 
 
 def build_once(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
-    """The committed ``scratch_dir(kind, sf_dir)``, built by
-    ``build(staging)`` only if it does not exist yet.  A build that
+    """The committed dir of artifact ``kind`` for the current version of
+    the input tables in ``sf_dir``: ``scratch_dir(kind, sf_dir)/<fp>``
+    with ``fp = input_fingerprint(sf_dir)``, built by ``build(staging)``
+    only if it does not exist yet.  A kind's trained constants belong in
+    ``kind``.  Dirs of older versions stay until exit, so DataFrames
+    that earlier calls returned still read their files; removing
+    ``scratch_dir(kind, sf_dir)`` removes every version.  A build that
     raises leaves nothing behind, so the next call builds again."""
-    path = scratch_dir(kind, sf_dir)
+    path = os.path.join(scratch_dir(kind, sf_dir), input_fingerprint(sf_dir))
     if not os.path.exists(path):
         staging = path + ".building"
         shutil.rmtree(staging, ignore_errors=True)
@@ -154,6 +193,8 @@ def build_once(kind: str, sf_dir: str, build: Callable[[str], None]) -> str:
 # is memoized with the (inode, mtime) of its dir's _SUCCESS marker and
 # re-listed when that stamp changes, so a dir deleted and rebuilt in the
 # same process is read fresh; a dir without a marker is never memoized.
+# A new input version is a new build_once dir, hence a new key; the
+# memo of an older version stays valid because its dir stays until exit.
 # The stamp cannot see files appended next to an unchanged marker:
 # append-mutable stores (versioned tables, segstore segments, the
 # ivfadc admit index) must keep calling spark.read.parquet.

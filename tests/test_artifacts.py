@@ -14,10 +14,14 @@ import subprocess
 import sys
 from pathlib import Path
 
+import duckdb
 import pytest
 
 from oxidsql_spark import sources
 from oxidsql_spark.registry import load_all
+from oxidsql_spark.sources import TABLES
+
+from conftest import SF_DIR
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "oxidsql_spark"
@@ -92,6 +96,106 @@ def test_dead_process_dirs_are_swept():
             shutil.rmtree(p, ignore_errors=True)
 
 
+def _copy_leaf(src: str, dst: str) -> None:
+    """Copy table leaf ``src`` (a file) into ``dst`` as a dir leaf with
+    one part file, so more part files can be added next to it."""
+    os.makedirs(dst)
+    shutil.copyfile(src, os.path.join(dst, "part-0.parquet"))
+
+
+def test_input_fingerprint_tracks_every_leaf_file(tmp_path):
+    """Two copies of one sf dir under the same basename get different
+    fingerprints, and so does a dir whose leaf gains or rewrites a file;
+    an untouched dir keeps its fingerprint."""
+    a, b = tmp_path / "a" / "sf0.001", tmp_path / "b" / "sf0.001"
+    for d in (a, b):
+        d.mkdir(parents=True)
+        for t in ("region", "nation"):
+            shutil.copyfile(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
+        _copy_leaf(f"{SF_DIR}/embeddings.parquet", str(d / "embeddings.parquet"))
+    fa = sources.input_fingerprint(str(a))
+    assert fa == sources.input_fingerprint(str(a))
+    assert fa != sources.input_fingerprint(str(b))
+    shutil.copyfile(f"{SF_DIR}/region.parquet", a / "embeddings.parquet" / "part-1.parquet")
+    fa2 = sources.input_fingerprint(str(a))
+    assert fa2 != fa
+    (a / "nation.parquet").write_bytes((a / "nation.parquet").read_bytes() + b"\0")
+    assert sources.input_fingerprint(str(a)) not in (fa, fa2)
+
+
+def _oracle_rows(sf: str, oracle: str, cols: list[str]) -> list[tuple]:
+    """The DuckDB oracle's rows over the leaves in ``sf`` (file or dir
+    leaves), with its columns in the order ``cols``."""
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            leaf = f"{sf}/{t}.parquet"
+            src = f"{leaf}/*.parquet" if os.path.isdir(leaf) else leaf
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+        res = con.sql(oracle)
+        pos = [[d[0] for d in res.description].index(c) for c in cols]
+        return sorted(tuple(r[i] for i in pos) for r in res.fetchall())
+    finally:
+        con.close()
+
+
+def test_pq_codebook_retrains_on_rewritten_input(spark, tmp_path):
+    """ann_pq_adc over a copied sf dir; then the embeddings leaf gains a
+    part file (copies of the first 300 vectors under new ids — the
+    vec_id < 16 trainer seeds are untouched).  The second call must
+    train into a new codebook dir, match the DuckDB oracle over the
+    rewritten files, and leave the first call's DataFrame readable."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from oxidsql_spark.operators import similarity as S
+
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    for t in TABLES:
+        if t != "embeddings":
+            shutil.copyfile(f"{SF_DIR}/{t}.parquet", sf / f"{t}.parquet")
+    _copy_leaf(f"{SF_DIR}/embeddings.parquet", str(sf / "embeddings.parquet"))
+    q = load_all()["ann_pq_adc"]
+    books_root = sources.scratch_dir(S._PQ_BOOKS_KIND, str(sf))
+    try:
+        df1 = q.fn(spark, str(sf))
+        first = sorted(tuple(r) for r in df1.collect())
+        (v1,) = os.listdir(books_root)
+
+        emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+        extra = emb.filter(pc.less(emb["vec_id"], 300))
+        ids = pc.add(extra["vec_id"], 1_000_000).cast(emb.schema.field("vec_id").type)
+        extra = extra.set_column(emb.schema.get_field_index("vec_id"), "vec_id", ids)
+        pq.write_table(extra, sf / "embeddings.parquet" / "part-1.parquet")
+
+        df2 = q.fn(spark, str(sf))
+        got = sorted(tuple(r) for r in df2.collect())
+        assert sorted(os.listdir(books_root)) == sorted([v1, sources.input_fingerprint(str(sf))])
+        assert got == _oracle_rows(str(sf), q.oracle, df2.columns)
+        assert any(r[df2.columns.index("vec_id")] >= 1_000_000 for r in got)
+        assert got != first
+        assert df1.count() == len(first)
+    finally:
+        shutil.rmtree(books_root, ignore_errors=True)
+
+
+def test_warm_pq_adc_construction_runs_at_most_two_jobs(spark, sf_dir):
+    """Once the codebook of an input version exists, building the
+    ann_pq_adc DataFrame reads the codebook and the query rows and runs
+    no trainer job."""
+    q = load_all()["ann_pq_adc"]
+    q.fn(spark, sf_dir).count()  # builds the codebook artifact
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-pq-adc", "warm-pq-adc")
+    try:
+        q.fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("warm-pq-adc")) <= 2
+
+
 _EXIT_SCRIPT = """
 import os, sys
 sys.path.insert(0, {repo!r})
@@ -117,7 +221,8 @@ def test_build_once_failure_and_exit_hygiene():
             fh.write("partial")
         raise RuntimeError("build failed")
 
-    path = sources.scratch_dir("test_fail", "sf_test")
+    kind_dir = sources.scratch_dir("test_fail", "sf_test")
+    path = os.path.join(kind_dir, sources.input_fingerprint("sf_test"))
     try:
         with pytest.raises(RuntimeError, match="build failed"):
             sources.build_once("test_fail", "sf_test", fail)
@@ -127,7 +232,7 @@ def test_build_once_failure_and_exit_hygiene():
         assert sources.build_once("test_fail", "sf_test", built.append) == path
         assert built == [path + ".building"] and os.path.isdir(path)
     finally:
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(kind_dir, ignore_errors=True)
 
     proc = subprocess.run(
         [sys.executable, "-c", _EXIT_SCRIPT.format(repo=str(REPO))],
@@ -137,8 +242,9 @@ def test_build_once_failure_and_exit_hygiene():
     )
     assert proc.returncode == 0, proc.stderr
     child_path = proc.stdout.strip().splitlines()[-1]
-    assert os.path.basename(child_path).startswith("oxidsql_test_exit_sf_test_")
-    assert not os.path.exists(child_path)
+    kind_dir = os.path.dirname(child_path)
+    assert os.path.basename(kind_dir).startswith("oxidsql_test_exit_sf_test_")
+    assert not os.path.exists(kind_dir)
 
 
 def _pid_and_tmp_uses(path: Path):

@@ -20,6 +20,7 @@ from oxidsql_spark.cachescope import (
     scoped_cache_count,
     scoped_persist,
 )
+from oxidsql_spark.operators.similarity import _PQ_BOOKS_KIND
 from oxidsql_spark.registry import load_all
 
 # Every registered query whose implementation persists an intermediate
@@ -134,6 +135,9 @@ _ARTIFACT_KINDS = {
     "ann_ivfadc": "ivfadc",
     "retrieval_hybrid_ivfadc": "ivfadc",
     "ann_opq_ivfadc": "opqivf",
+    # a warm ann_pq_adc reads the build-once codebook and persists
+    # nothing; only training the codebook persists the quantized corpus
+    "ann_pq_adc": _PQ_BOOKS_KIND,
 }
 
 

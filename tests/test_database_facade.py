@@ -461,6 +461,24 @@ def test_explain_analyze_runs_and_reports(db):
     db.query("DROP TABLE ea")
 
 
+def test_explain_analyze_evaluates_projected_columns(db):
+    """EXPLAIN ANALYZE runs the statement's real plan: a projected column
+    that a row count would prune is evaluated (here it raises, as the
+    SELECT does), and the reported plan is the one that ran."""
+    db.query("CREATE TABLE eap (id INTEGER, g INTEGER)")
+    for i in range(6):
+        db.query(f"INSERT INTO eap VALUES ({i}, {i % 3})")
+    with pytest.raises(Exception, match="g must not be 1"):
+        db.query("EXPLAIN ANALYZE SELECT id, assert_true(g <> 1, 'g must not be 1') FROM eap")
+    rows = {
+        r.item: r.detail
+        for r in db.query("EXPLAIN ANALYZE SELECT id, g * 2 AS g2 FROM eap WHERE g > 0").collect()
+    }
+    assert int(rows["actual_rows"]) == 4
+    assert "g2" in rows["final_plan"]
+    db.query("DROP TABLE eap")
+
+
 def test_describe_history_versions(spark, tmp_path):
     """DESCRIBE HISTORY lists every committed snapshot with file count,
     bytes, and the commit (_SUCCESS) timestamp — the audit surface for

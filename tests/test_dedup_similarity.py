@@ -765,31 +765,70 @@ def test_ann_ivfadc_pruned_and_recall(spark, sf_dir, tmp_path):
     assert recall >= 0.40, f"IVFADC recall@10 {recall:.3f} under floor"
 
 
+def _pq_train_per_subspace(e):
+    """Reference PQ trainer: the integer Lloyd trainer (`_km_train`) run
+    independently per subspace — 2·M jobs.  The semantic spec the fused
+    `pq_train` is equality-tested against."""
+    from pyspark.sql import functions as F
+
+    from oxidsql_spark.operators import similarity as S
+
+    return {
+        m: S._km_train(
+            e.select(
+                "vec_id", F.slice("qv", m * S._PQ_SUB + 1, S._PQ_SUB).alias("qv")
+            ),
+            k=S._PQ_K,
+            iters=S._KM_ITERS,
+            dim=S._PQ_SUB,
+        )
+        for m in range(S._PQ_M)
+    }
+
+
 def test_pq_fused_trainer_equals_per_subspace(spark, sf_dir):
     """The fused PQ trainer (one Arrow pass per iteration for all M
     subspaces) must reproduce the per-subspace `_km_train` codebooks
     bit-for-bit — the property that keeps the unrolled per-subspace SQL
     oracle valid."""
-    from oxidsql_spark.operators.similarity import (
-        _km_quantized,
-        pq_train,
-        pq_train_per_subspace,
-    )
+    from oxidsql_spark.operators.similarity import _km_quantized, pq_train
 
     e = _km_quantized(spark, sf_dir)
-    assert pq_train(e) == pq_train_per_subspace(e)
+    assert pq_train(e) == _pq_train_per_subspace(e)
+
+
+def test_pq_trains_once_per_input_version(spark, sf_dir, monkeypatch):
+    """ann_pq_adc, ann_pq_rerank and the IVFADC index build share one PQ
+    training per input version, and the index's books are exactly what
+    `pq_train` derives from the quantized corpus."""
+    import os
+    import shutil
+
+    from oxidsql_spark.operators import similarity as S
+    from oxidsql_spark.registry import load_all
+    from oxidsql_spark.sources import input_fingerprint, scratch_dir
+
+    for kind in (S._PQ_BOOKS_KIND, "ivfadc"):
+        shutil.rmtree(scratch_dir(kind, sf_dir), ignore_errors=True)
+    trained = []
+    orig = S.pq_train
+    monkeypatch.setattr(S, "pq_train", lambda e: trained.append(1) or orig(e))
+    qs = load_all()
+    for name in ("ann_pq_adc", "ann_pq_rerank", "ann_ivfadc"):
+        assert qs[name].fn(spark, sf_dir).count() > 0
+    assert len(trained) == 1
+    idx = os.path.join(scratch_dir("ivfadc", sf_dir), input_fingerprint(sf_dir))
+    _, books = S._load_ivfadc_books(spark, idx)
+    assert books == orig(S._km_quantized(spark, sf_dir))
 
 
 def test_fused_encode_adc_equals_two_pass(spark, sf_dir):
     """The r15 fused encode+ADC Arrow pass (`_adc_scan(encode_books=)`)
     must be row-identical to the two-pass form (pq_encode, then
     _adc_scan over materialized codes) — the in-batch argmin position
-    indexes the LUT exactly as searchsorted recovers it from a code.
-    Also pins the shared head-row collect: init filtered from the
-    superset equals the dedicated init collect."""
+    indexes the LUT exactly as searchsorted recovers it from a code."""
     from oxidsql_spark.operators.similarity import (
         _N_QUERIES,
-        _PQ_K,
         _adc_scan,
         _km_quantized,
         _pq_lut,
@@ -799,15 +838,9 @@ def test_fused_encode_adc_equals_two_pass(spark, sf_dir):
     from pyspark.sql import functions as F
 
     e = _km_quantized(spark, sf_dir)
-    head_rows = (
-        e.filter(F.col("vec_id") < max(_PQ_K, _N_QUERIES))
-        .select("vec_id", "qv")
-        .collect()
-    )
-    books = pq_train(e, init_rows=head_rows)
-    assert books == pq_train(e)  # shared superset collect is equivalent
+    books = pq_train(e)
     q_ids, _, luts, code_ids = _pq_lut(
-        books, [r for r in head_rows if r["vec_id"] < _N_QUERIES]
+        books, e.filter(F.col("vec_id") < _N_QUERIES).collect()
     )
     two_pass = {
         tuple(r)

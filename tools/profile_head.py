@@ -137,9 +137,17 @@ def parse_event_log(log_dir: str) -> list[dict]:
     return [jobs[k] for k in sorted(jobs)]
 
 
+def _top_heads(n: int = 5) -> list[str]:
+    """The ``n`` heads with the largest warm median in BENCH_detail.json."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "BENCH_detail.json")) as fh:
+        warm = json.load(fh)["queries"]
+    return sorted(warm, key=warm.get, reverse=True)[:n]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    heads = sys.argv[1:]
+    heads = sys.argv[1:] or _top_heads()
     log_dir = "/tmp/oxidsql_profile_eventlog"
     import shutil
     shutil.rmtree(log_dir, ignore_errors=True)
