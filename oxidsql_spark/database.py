@@ -1208,14 +1208,16 @@ class OxidSparkDatabase:
         static EXPLAIN cannot show).  The statement runs whole through
         the noop sink, every output column evaluated, and counts its rows
         with an Observation on the way: ``count()`` would let Catalyst
-        prune the columns it computes.  The dynamic companion of
-        `_explain`'s static plan-quality relation — the 'run it and show
-        me' surface other engines spell the same way."""
+        prune the columns it computes.  The ``joins`` and ``exchanges``
+        rows are read off that final plan, not the static one.  The
+        dynamic companion of `_explain`'s static plan-quality relation —
+        the 'run it and show me' surface other engines spell the same
+        way."""
         import time
 
         from pyspark.sql import Observation
 
-        from .plans import explain_summary, last_execution_plan
+        from .plans import last_execution_plan, summarize_plan
 
         df = self.sql(select_sql)
         obs = Observation("explain_analyze")
@@ -1224,13 +1226,14 @@ class OxidSparkDatabase:
             "overwrite"
         ).save()
         wall_ms = int((time.time() - t0) * 1000)
-        s = explain_summary(df)
+        final_plan = last_execution_plan(self.spark)
+        s = summarize_plan(final_plan)
         rows = [
             ("actual_rows", str(obs.get["n"])),
             ("wall_ms", str(wall_ms)),
             ("joins", ", ".join(s.joins) or "none"),
             ("exchanges", str(s.n_exchanges)),
-            ("final_plan", last_execution_plan(self.spark)),
+            ("final_plan", final_plan),
         ]
         return local_rows_df(self.spark, rows, "item string, detail string")
 

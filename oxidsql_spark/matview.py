@@ -38,12 +38,10 @@ end-to-end.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .segstore import marked_sink
 from .versioned import VersionedTable
 
 
@@ -136,62 +134,16 @@ class AggView:
         return self._store.vacuum(keep_last=keep_last)
 
 
-# -- foreachBatch idempotence ------------------------------------------
-#
-# foreachBatch is AT-LEAST-once: a crash between the sink's state
-# commit and the streaming checkpoint commit redelivers the batch on
-# restart.  AggView.refresh is NOT idempotent (it would double-count),
-# so the sink records the last applied batch_id in a marker file
-# committed (os.replace, atomic) immediately AFTER each refresh.  The
-# recovery invariant: markers are written before the sink returns, and
-# the streaming engine commits its checkpoint only after the sink
-# returns — so at most ONE batch (the redelivered one) can ever be
-# applied-but-untagged.  The sink therefore (a) skips any batch_id ≤
-# the marker, and (b) if the store shows a commit NEWER than the
-# marker's version, knows that commit was this very batch's replayed
-# refresh and only re-tags it.  Assumes the stream is the view's only
-# writer while running (the single-writer contract every streaming
-# sink of this module has).
-
-_BATCH_MARKER = "_stream_batch.json"
-
-
-def _last_applied(path: str) -> dict:
-    p = os.path.join(path, _BATCH_MARKER)
-    if not os.path.exists(p):
-        return {"batch_id": -1, "version": 0}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _mark_applied(path: str, batch_id: int, version: int) -> None:
-    tmp = os.path.join(path, _BATCH_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"batch_id": int(batch_id), "version": int(version)}, f)
-    os.replace(tmp, os.path.join(path, _BATCH_MARKER))
-
-
 def _make_view_sink(view: AggView, view_path: str):
     """The idempotent foreachBatch sink for streaming view maintenance
-    (exposed for the crash-replay tests, which drive it directly)."""
-
-    def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
-        b = int(batch_id)
-        m = _last_applied(view_path)
-        if b <= m["batch_id"]:
-            return  # at-least-once replay of a fully-committed batch
-        latest = view._store.latest_version() or 0
-        if latest > m["version"]:
-            # this batch's refresh committed but the crash hit before
-            # the marker write — tag it, never re-apply
-            _mark_applied(view_path, b, latest)
-            return
-        if batch_df.isEmpty():
-            return
-        v = view.refresh(batch_df) if view.versions() else view.create(batch_df)
-        _mark_applied(view_path, b, v)
-
-    return _sink
+    (exposed for the crash-replay tests, which drive it directly).
+    AggView.refresh is NOT idempotent (it would double-count), so the
+    fold rides segstore's batch-marker protocol."""
+    return marked_sink(
+        view_path,
+        lambda: view._store.latest_version() or 0,
+        lambda df: view.refresh(df) if view.versions() else view.create(df),
+    )
 
 
 def matview_apply_stream(
@@ -206,20 +158,14 @@ def matview_apply_stream(
     refresh ≡ recompute is bit-exact (decimal partials, pinned types),
     the replayed stream's final view equals the one-shot
     materialization — tested over the 4-batch chunked replay — and the
-    batch-id marker protocol above makes the fold idempotent under
-    foreachBatch's at-least-once redelivery (a crash between the view
-    commit and the streaming checkpoint cannot double-count).  Returns
-    the ready DataStreamWriter (caller .start()s it)."""
+    batch-marker protocol (``segstore.marked_sink``) makes the fold
+    idempotent under foreachBatch's at-least-once redelivery (a crash
+    between the view commit and the streaming checkpoint cannot
+    double-count).  Returns the ready DataStreamWriter (caller
+    .start()s it)."""
     from .streaming.events import _stream_source
 
     view = events_type_view(spark, view_path)
-    # baseline marker: pin the pre-stream version so a redelivery of
-    # batch 0 against a view created BEFORE the stream is not mistaken
-    # for an untagged batch-0 commit
-    if not os.path.exists(os.path.join(view_path, _BATCH_MARKER)):
-        os.makedirs(view_path, exist_ok=True)
-        _mark_applied(view_path, -1, view._store.latest_version() or 0)
-
     return (
         _stream_source(spark, source_dir)
         .writeStream.foreachBatch(_make_view_sink(view, view_path))

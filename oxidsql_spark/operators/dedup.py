@@ -21,8 +21,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..cachescope import scoped_persist
-from ..functions import local_rows_df, tokens
+from ..functions import tokens
 from ..registry import register
+from ..segstore import SegmentStore, file_stream, land_batch, scoped_sink
 from ..sources import fresh_dir, table
 
 # ---------------------------------------------------------------------------
@@ -2540,15 +2541,14 @@ def dedup_span_cut_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class SpanIndexStore:
+class SpanIndexStore(SegmentStore):
     """Segment-committed span index for a ROLLING corpus — the span twin
     of IncrementalClusters' shingle index: the distinct-gram artifact
-    lives as version-named committed segments (``seg_*`` with parquet's
-    ``_SUCCESS`` written last — torn writes are invisible), and every
-    admitted batch appends ONE segment holding the grams of its CLEANED
-    text (kept first occurrences become the corpus copies future
-    batches dedup against; grams the batch lost to the cut already
-    exist in earlier segments by definition).
+    lives as committed segments (segstore), and every admitted batch
+    appends ONE segment holding the grams of its CLEANED text (kept
+    first occurrences become the corpus copies future batches dedup
+    against; grams the batch lost to the cut already exist in earlier
+    segments by definition).
 
     ``cut_admit(batch, tag)`` is deterministic-idempotent: the cut is a
     pure function of (batch, committed segments), and a replayed tag
@@ -2559,55 +2559,16 @@ class SpanIndexStore:
     segments into ~128 MB files and dedups grams across them (the same
     gram lands in many segments once text repeats across batches)."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        import os
+    schema = "gram string"
 
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    def _seg_dir(self, tag: str) -> str:
-        import os
-
-        return os.path.join(self.path, f"seg_{tag}")
-
-    def _segments(self) -> list[str]:
-        from ..segstore import list_segments
-
-        return list_segments(self.path)
-
-    def compact(self) -> int:
-        """Fold all committed segments into one, deduping grams across
-        segments (existence is the only signal the cut rule reads, so
-        distinct is lossless).  Run at a quiescent point only
-        (segstore contract)."""
-        from ..segstore import compact_segments
-
-        return compact_segments(
-            self.spark, self.path, lambda df: df.select("gram").distinct()
-        )
-
-    def grams(self, exclude_tag: str | None = None) -> DataFrame:
-        segs = [
-            p
-            for p in self._segments()
-            if exclude_tag is None or not p.endswith(f"seg_{exclude_tag}")
-        ]
-        if not segs:
-            return local_rows_df(self.spark, [], "gram string")
-        return self.spark.read.parquet(*segs).select("gram")
+    def recap(self, df: DataFrame) -> DataFrame:
+        # existence is the only signal the cut rule reads, so distinct
+        # is lossless
+        return df.select("gram").distinct()
 
     def build(self, docs: DataFrame, k: int = _SPAN_K) -> None:
         """Base corpus segment (idempotent under a replayed build)."""
-        build_span_index(self.spark, docs, self._seg_dir("base"), k)
-
-    def _append_segment(self, tag: str, cleaned_docs: DataFrame, k: int) -> None:
-        import os
-
-        seg = self._seg_dir(tag)
-        if os.path.exists(os.path.join(seg, "_SUCCESS")):
-            return  # replayed admission — segment already committed
-        build_span_index(self.spark, cleaned_docs, seg, k)
+        self.commit("base", lambda seg: build_span_index(self.spark, docs, seg, k))
 
     def cut_admit(
         self, batch: DataFrame, tag: str, k: int = _SPAN_K
@@ -2628,11 +2589,10 @@ class SpanIndexStore:
         # identical index the original run saw (foreachBatch replays
         # only the in-flight batch — later segments cannot exist yet).
         cleaned = scoped_local_checkpoint(
-            _span_cut_against(batch, self.grams(exclude_tag=tag), k)
+            _span_cut_against(batch, self.rows(exclude_tag=tag), k)
         )
-        self._append_segment(
-            tag, cleaned.select("doc_id", F.col("cleaned").alias("text")), k
-        )
+        text = cleaned.select("doc_id", F.col("cleaned").alias("text"))
+        self.commit(tag, lambda seg: build_span_index(self.spark, text, seg, k))
         return cleaned
 
 
@@ -2646,44 +2606,22 @@ def cut_ingest_stream(
     """Streaming incremental substring dedup: a file stream of
     (doc_id, text) batches flows through a prebuilt SpanIndexStore —
     per micro-batch, the batch is span-cut against everything shipped
-    so far, the CLEANED rows land under ``out_dir/batch=<id>/`` (the
-    quality-sink tmp-write + rename-swap discipline), and the cleaned
-    grams commit as the batch's index segment.  Exactly-once: replays
-    skip the committed segment and replace exactly their own output
-    dir.  Returns the ready DataStreamWriter (caller .start()s it)."""
-    import os
-    import shutil
-
+    so far, the CLEANED rows land under ``out_dir/batch=<id>/``
+    (``segstore.land_batch``), and the cleaned grams commit as the
+    batch's index segment.  Exactly-once: replays skip the committed
+    segment and replace exactly their own output dir.  Returns the
+    ready DataStreamWriter (caller .start()s it)."""
     store = SpanIndexStore(spark, store_path)
 
-    def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
-        b = int(batch_id)
+    @scoped_sink
+    def _sink(batch_df, b):  # noqa: ANN001 — foreachBatch contract
         cleaned = store.cut_admit(batch_df, f"b{b:08d}")
-        dest = os.path.join(out_dir, f"batch={b}")
-        tmp = os.path.join(out_dir, f".batch_{b}.tmp")
-        old = os.path.join(out_dir, f".batch_{b}.old")
-        shutil.rmtree(tmp, ignore_errors=True)
-        # reclaim a copy stranded at .old by a crash between the two
-        # swap renames (dest missing -> the else branch would leak it)
-        shutil.rmtree(old, ignore_errors=True)
-        cleaned.select("doc_id", "n_tokens", "n_kept", "cleaned").write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        if os.path.isdir(dest):
-            os.rename(dest, old)
-            os.rename(tmp, dest)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.makedirs(out_dir, exist_ok=True)
-            os.rename(tmp, dest)
+        land_batch(
+            cleaned.select("doc_id", "n_tokens", "n_kept", "cleaned"), out_dir, b
+        )
 
-    return (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return file_stream(
+        spark, "doc_id bigint, text string", source_dir, _sink, checkpoint_dir
     )
 
 

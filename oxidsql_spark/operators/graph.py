@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..cachescope import free_local_checkpoint, scoped_local_checkpoint, scoped_persist
 from ..functions import local_rows_df
 from ..registry import register
+from ..segstore import file_stream, marked_sink
 from ..sources import fresh_dir, table
 from .dedup import (  # noqa: F401
     _JACCARD_N,
@@ -797,45 +798,10 @@ class IncrementalClusters:
 
 def _make_cluster_sink(state: IncrementalClusters):
     """Idempotent foreachBatch sink for streaming cluster admission
-    (exposed for the crash-replay tests).  Same marker protocol as
-    matview_apply_stream: the last fully-admitted batch_id + labels
-    version are recorded atomically after each admit; replays of a
-    tagged batch are skipped, and a labels version NEWER than the
-    marker identifies the one batch whose admit committed before the
-    marker write crashed (admit itself is idempotent against any
-    earlier crash — see IncrementalClusters)."""
-    import json
-    import os
-
-    marker = os.path.join(state.path, "_stream_batch.json")
-
-    def _last() -> dict:
-        if not os.path.exists(marker):
-            return {"batch_id": -1, "version": 0}
-        with open(marker) as f:
-            return json.load(f)
-
-    def _mark(batch_id: int, version: int) -> None:
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": int(batch_id), "version": int(version)}, f)
-        os.replace(tmp, marker)
-
-    def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
-        b = int(batch_id)
-        m = _last()
-        if b <= m["batch_id"]:
-            return
-        latest = state._latest()
-        if latest > m["version"]:
-            _mark(b, latest)
-            return
-        if batch_df.isEmpty():
-            return
-        _mark(b, state.admit(batch_df))
-
-    _sink._mark = _mark  # the stream wrapper writes the baseline
-    return _sink
+    (exposed for the crash-replay tests): segstore's batch-marker
+    protocol over the labels version (admit itself is idempotent
+    against any earlier crash — see IncrementalClusters)."""
+    return marked_sink(state.path, state._latest, state.admit)
 
 
 def admit_clusters_stream(
@@ -848,19 +814,13 @@ def admit_clusters_stream(
     queryable (versioned snapshots), and the batch-id marker makes the
     fold exactly-once under foreachBatch's at-least-once redelivery.
     Returns the ready DataStreamWriter (caller .start()s it)."""
-    import os
-
     state = IncrementalClusters(spark, state_path)
-    sink = _make_cluster_sink(state)
-    if not os.path.exists(os.path.join(state_path, "_stream_batch.json")):
-        sink._mark(-1, state._latest())
-    return (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return file_stream(
+        spark,
+        "doc_id bigint, text string",
+        source_dir,
+        _make_cluster_sink(state),
+        checkpoint_dir,
     )
 
 

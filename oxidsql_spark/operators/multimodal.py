@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions import local_rows_df
 from ..registry import register
+from ..segstore import SegmentStore, file_stream, store_sink
 from ..sources import build_once, table
 
 FAKE_DECODE = True  # no codec libs in this container → deterministic fake
@@ -555,35 +555,15 @@ def dhash_image(payload: bytes):
     return bits
 
 
-def _dhash_fake_terms(engine: str, col: str = "text") -> str:
-    """The fake byte-stride fingerprint, emitted for Spark SQL and
-    DuckDB (both operate on the ASCII payload): bit i compares the
-    codepoints at stride positions 1 + (7i mod (len-1)) and its
-    successor.  ``col`` names the string column hashed (the video twin
-    hashes per-FRAME substrings).
-
-    The DuckDB form stays the literal 48-term CASE sum the
-    oracles have always carried.  The Spark form is the SAME integer
-    fold written as one ``aggregate`` higher-order expression: bit
-    terms are added in ascending-``i`` order with BIGINT arithmetic, so
-    the result is bit-identical (locked by test_multimodal_codec's
-    unrolled-vs-HOF equality pytest and every dhash-family oracle row).
-    The rewrite is a PLAN-SIZE optimization (r14 opt round, guide §1.2
-    step 2): the unrolled form is a ~1500-node expression tree that the
-    banded dedup self-joins replicate ~12x into one logical plan —
-    measured 2.1 s of F.expr parse per construction and ~3 s of
-    optimizer time per action at sf0.1 — while the HOF form is ~40
-    nodes (parse 0.09 s), cutting per-run plan construction,
-    optimization, and CacheManager canonicalization across the whole
-    image/video dedup family without touching a single output bit."""
-    if engine == "spark":
-        p = f"(i * 7) % greatest(length({col}) - 1, 1)"
-        return (
-            f"aggregate(sequence(0, {_DH_FAKE_BITS - 1}), CAST(0 AS BIGINT), "
-            f"(acc, i) -> acc + CASE WHEN ascii(substring({col}, {p} + 1, 1)) > "
-            f"ascii(substring({col}, {p} + 2, 1)) "
-            f"THEN shiftleft(CAST(1 AS BIGINT), i) ELSE CAST(0 AS BIGINT) END)"
-        )
+def _dhash_fake_terms(col: str = "text") -> str:
+    """The fake byte-stride fingerprint as DuckDB SQL (it operates on
+    the ASCII payload): bit i compares the codepoints at stride
+    positions 1 + (7i mod (len-1)) and its successor.  ``col`` names
+    the string column hashed (the video twin hashes per-FRAME
+    substrings).  The literal 48-term CASE sum the oracles have always
+    carried; the engine computes the same integer fold in one Arrow
+    pass (`_dhash_fake_frame`, `_vid_scene_hashes`), pinned
+    bit-identical to the SQL form by test_multimodal_codec."""
     terms = []
     for i in range(_DH_FAKE_BITS):
         p = f"(1 + (({i} * 7) % greatest(length({col}) - 1, 1)))"
@@ -598,7 +578,7 @@ def _dhash_fake_terms(engine: str, col: str = "text") -> str:
 @register(
     "mm_dhash_fingerprint",
     oracle=f"""
-    SELECT doc_id, {_dhash_fake_terms('duckdb')} AS dhash
+    SELECT doc_id, {_dhash_fake_terms()} AS dhash
     FROM documents ORDER BY doc_id
     """,
 )
@@ -654,7 +634,7 @@ _MM_BAND_MAXDF = 64
 def _caption_oracle() -> str:
     bandmask = (1 << _CAP_BAND_BITS) - 1
     return f"""
-    WITH fp AS (SELECT doc_id, {_dhash_fake_terms('duckdb')} AS dhash FROM documents),
+    WITH fp AS (SELECT doc_id, {_dhash_fake_terms()} AS dhash FROM documents),
     reps AS (SELECT dhash, min(doc_id) AS rep FROM fp GROUP BY dhash),
     bands AS (
       SELECT rep, dhash, b, (dhash >> ({_CAP_BAND_BITS} * b)) & {bandmask} AS v
@@ -877,7 +857,7 @@ def _vid_fh_cte() -> str:
             FROM documents)),
     fr AS (SELECT doc_id, frame_idx, {_vid_frame_sql("//")} AS ft FROM fr0),
     fh AS (SELECT doc_id, frame_idx,
-                  {_dhash_fake_terms("duckdb", "ft")} AS dhash
+                  {_dhash_fake_terms("ft")} AS dhash
            FROM fr)"""
 
 
@@ -1182,9 +1162,9 @@ def _dhash_fake_frame(d: DataFrame, keep: list[str]) -> DataFrame:
     """(keep..., dhash): the whole-text byte-stride fake dHash in ONE
     Arrow pass — the full-text twin of `_vid_scene_hashes`' numpy core
     (r15 opt round, guide §4.2: the HOF fold evaluates interpreted and
-    re-slices the text per bit term).  Bit-identical to
-    `_dhash_fake_terms("spark")` — same int64 comparisons, same
-    ascii('')=0 edge — pinned by test_multimodal_codec's
+    re-slices the text per bit term).  Bit-identical to the SQL fold
+    the oracles carry (`_dhash_fake_terms`) — same int64 comparisons,
+    same ascii('')=0 edge — pinned by test_multimodal_codec's
     numpy-vs-SQL equality pytest."""
     import numpy as np
     import pandas as pd
@@ -1294,32 +1274,6 @@ def _vid_scene_hashes(d: DataFrame) -> DataFrame:
 
     return d.select("doc_id", "text").mapInPandas(
         scene_hash_batches, "doc_id bigint, s int, sc int, dhash bigint"
-    )
-
-
-def _vid_scene_hashes_sql(d: DataFrame) -> DataFrame:
-    """The pure-SQL scene-hash form (the pre-r15 implementation and
-    the semantic spec the DuckDB oracles re-derive) — kept as the
-    equality-test reference for the Arrow pass above."""
-    sc, ln = "sc", "length(text)"
-    start = f"(1 + ({sc} * {ln}) DIV s)"
-    flen = f"((({sc} + 1) * {ln}) DIV s - ({sc} * {ln}) DIV s)"
-    ft = f"substring(text, {start}, {flen})"
-    return (
-        d.select(
-            "doc_id",
-            "text",
-            F.expr(f"2 + (length(text) % {_VID_SCENES_MOD})").alias("s"),
-        )
-        .select(
-            "doc_id", "s", F.explode(F.expr("sequence(0, s - 1)")).alias("sc"), "text"
-        )
-        .select(
-            "doc_id",
-            "s",
-            "sc",
-            F.expr(_dhash_fake_terms("spark", f"({ft})")).alias("dhash"),
-        )
     )
 
 
@@ -1856,14 +1810,13 @@ def mm_audio_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_dedup_incremental(spark, batch_p, idx)
 
 
-class AudioIndexStore:
+class AudioIndexStore(SegmentStore):
     """Segment-committed audio shingle index for a ROLLING corpus — the
     audio twin of dedup.SpanIndexStore: the df-capped shingle artifact
-    lives as version-named committed segments (``seg_*`` with parquet's
-    ``_SUCCESS`` written last — torn writes are invisible), and every
-    admitted batch appends ONE segment holding its ADMITTED tracks'
-    shingles (rejected dups contribute nothing; the originals they
-    duplicate are already indexed by definition).
+    lives as committed segments (segstore), and every admitted batch
+    appends ONE segment holding its ADMITTED tracks' shingles (rejected
+    dups contribute nothing; the originals they duplicate are already
+    indexed by definition).
 
     ``probe_admit(batch, tag)`` is deterministic-idempotent: the
     verdict is a pure function of (batch, committed segments minus the
@@ -1873,58 +1826,22 @@ class AudioIndexStore:
     redelivery.  The df-cap is enforced per segment; a value can drift
     over the cap ACROSS segments (each under cap locally), which
     ``compact()`` re-caps GLOBALLY while also folding the micro-batch
-    segments into ~128 MB files (segstore.compact_segments — see its
-    quiescence contract)."""
+    segments into ~128 MB files (see segstore's quiescence contract)."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        import os
+    schema = "doc_id bigint, v bigint"
 
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    def _seg_dir(self, tag: str) -> str:
-        import os
-
-        return os.path.join(self.path, f"seg_{tag}")
-
-    def _segments(self) -> "list[str]":
-        from ..segstore import list_segments
-
-        return list_segments(self.path)
-
-    def compact(self) -> int:
-        """Fold all committed segments into one, re-applying the
-        stop-shingle df rule over the MERGED rows (a value under the
-        per-segment cap in every segment but over it globally is
-        dropped here).  Run at a quiescent point only."""
-        from ..segstore import compact_segments
-
-        def recap(df: DataFrame) -> DataFrame:
-            kept = df.groupBy("v").agg(F.count(F.lit(1)).alias("df")).filter(
-                F.col("df") <= _AUD_MAXDF
-            )
-            return df.join(kept.select("v"), "v").select("doc_id", "v")
-
-        return compact_segments(self.spark, self.path, recap)
-
-    def shingles(self, exclude_tag: "str | None" = None) -> DataFrame:
-        segs = [
-            p
-            for p in self._segments()
-            if exclude_tag is None or not p.endswith(f"seg_{exclude_tag}")
-        ]
-        if not segs:
-            return local_rows_df(self.spark, [], "doc_id bigint, v bigint")
-        return self.spark.read.parquet(*segs).select("doc_id", "v")
+    def recap(self, df: DataFrame) -> DataFrame:
+        """The stop-shingle df rule over the MERGED rows: a value under
+        the per-segment cap in every segment but over it globally is
+        dropped."""
+        kept = df.groupBy("v").agg(F.count(F.lit(1)).alias("df")).filter(
+            F.col("df") <= _AUD_MAXDF
+        )
+        return df.join(kept.select("v"), "v").select("doc_id", "v")
 
     def build(self, p: DataFrame) -> None:
         """Base corpus segment (idempotent under a replayed build)."""
-        import os
-
-        seg = self._seg_dir("base")
-        if not os.path.exists(os.path.join(seg, "_SUCCESS")):
-            build_audio_shingle_index(self.spark, p, seg)
+        self.commit("base", lambda seg: build_audio_shingle_index(self.spark, p, seg))
 
     def probe_admit(self, batch_p: DataFrame, tag: str) -> DataFrame:
         """Probe the batch against every committed segment (excluding
@@ -1933,8 +1850,6 @@ class AudioIndexStore:
         shingles as segment ``tag``, and return the per-track
         disposition (doc_id, n_shingles, is_dup).  A track with no
         shingles (too short) admits by definition — it can never pair."""
-        import os
-
         from ..cachescope import scoped_local_checkpoint
 
         nv = audio_shingles_from_payloads(batch_p)
@@ -1942,7 +1857,7 @@ class AudioIndexStore:
         nb = nv.join(n_tab, "doc_id").select(
             F.col("doc_id").alias("new_id"), "v", "n_new"
         )
-        corpus = self.shingles(exclude_tag=tag).select(
+        corpus = self.rows(exclude_tag=tag).select(
             F.col("doc_id").alias("corpus_id"), "v"
         )
         dup_ids = (
@@ -1978,38 +1893,14 @@ class AudioIndexStore:
                 F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
             )
         )
-        seg = self._seg_dir(tag)
-        if not os.path.exists(os.path.join(seg, "_SUCCESS")):
-            admitted = nv.join(
-                disp.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
-            )
-            kept = admitted.groupBy("v").agg(
-                F.count(F.lit(1)).alias("df")
-            ).filter(F.col("df") <= _AUD_MAXDF)
-            admitted.join(kept.select("v"), "v").write.mode(
-                "overwrite"
-            ).parquet(seg)
-        return disp
-
-
-def _make_audio_sink(store: AudioIndexStore, out_dir: str):
-    """Idempotent foreachBatch sink for streaming audio admission: the
-    probe-and-commit is deterministic-idempotent per batch tag, and the
-    disposition lands in a batch-keyed dir (overwrite — a redelivered
-    batch rewrites identical rows), so the fold is exactly-once under
-    foreachBatch's at-least-once redelivery."""
-    import os
-
-    def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
-        from ..cachescope import release_scoped_caches
-
-        disp = store.probe_admit(batch_df, f"b{batch_id:08d}")
-        disp.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id:08d}")
+        # the segment: the ADMITTED tracks' shingles, df-capped
+        admitted = nv.join(
+            disp.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
         )
-        release_scoped_caches()
-
-    return _sink
+        self.commit(
+            tag, lambda seg: self.recap(admitted).write.mode("overwrite").parquet(seg)
+        )
+        return disp
 
 
 def admit_audio_stream(
@@ -2028,13 +1919,12 @@ def admit_audio_stream(
     re-decoded.  Returns the ready DataStreamWriter (caller
     .start()s it)."""
     store = AudioIndexStore(spark, state_path)
-    return (
-        spark.readStream.schema("doc_id bigint, payload binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_make_audio_sink(store, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return file_stream(
+        spark,
+        "doc_id bigint, payload binary",
+        source_dir,
+        store_sink(store, out_dir),
+        checkpoint_dir,
     )
 
 
@@ -2116,7 +2006,7 @@ def _image_incr_oracle() -> str:
 
     bandmask = (1 << _CAP_BAND_BITS) - 1
     return f"""
-    WITH fp AS (SELECT doc_id, source, {_dhash_fake_terms('duckdb')} AS dhash
+    WITH fp AS (SELECT doc_id, source, {_dhash_fake_terms()} AS dhash
                 FROM documents),
     cfp AS (SELECT doc_id, dhash FROM fp WHERE source NOT IN ({_BATCH_IN})),
     keph AS (SELECT dhash FROM cfp GROUP BY dhash
@@ -2171,81 +2061,41 @@ def mm_image_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_dedup_incremental(spark, batch_fp, idx)
 
 
-class ImageBandIndexStore:
+class ImageBandIndexStore(SegmentStore):
     """Segment-committed perceptual-hash band index for a ROLLING image
     corpus — the image twin of AudioIndexStore: each admitted batch
-    appends one _SUCCESS-fenced segment of (doc_id, dhash, b, v) band
-    rows (both hub caps baked in per segment by build_image_band_index);
+    appends one committed segment of (doc_id, dhash, b, v) band rows
+    (both hub caps baked in per segment by build_image_band_index);
     probes exclude the tag's own segment, so ``probe_admit`` is
     deterministic-idempotent and the streaming sink below is
     exactly-once under foreachBatch redelivery.  ``compact()`` folds
     segments and re-applies both caps GLOBALLY (per-segment caps drift
     across segments)."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        import os
+    schema = "doc_id bigint, dhash bigint, b int, v bigint"
 
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    def _seg_dir(self, tag: str) -> str:
-        import os
-
-        return os.path.join(self.path, f"seg_{tag}")
-
-    def _segments(self) -> "list[str]":
-        from ..segstore import list_segments
-
-        return list_segments(self.path)
-
-    def compact(self) -> int:
-        """Fold all committed segments into one, re-applying the hash
-        df-cap and the band-bucket cap over the MERGED rows.  Run at a
-        quiescent point only (segstore contract)."""
-        from ..segstore import compact_segments
-
-        def recap(df: DataFrame) -> DataFrame:
-            keph = df.groupBy("dhash").agg(
-                F.countDistinct("doc_id").alias("df")
-            ).filter(F.col("df") <= _MM_MAXDF)
-            r1 = df.join(keph.select("dhash"), "dhash")
-            keepb = r1.groupBy("b", "v").agg(
-                F.countDistinct("dhash").alias("nh")
-            ).filter(F.col("nh") <= _MM_BAND_MAXDF)
-            return r1.join(keepb.select("b", "v"), ["b", "v"]).select(
-                "doc_id", "dhash", "b", "v"
-            )
-
-        return compact_segments(self.spark, self.path, recap)
-
-    def bands(self, exclude_tag: "str | None" = None) -> DataFrame:
-        segs = [
-            p
-            for p in self._segments()
-            if exclude_tag is None or not p.endswith(f"seg_{exclude_tag}")
-        ]
-        if not segs:
-            return local_rows_df(
-                self.spark, [], "doc_id bigint, dhash bigint, b int, v bigint"
-            )
-        return self.spark.read.parquet(*segs).select("doc_id", "dhash", "b", "v")
+    def recap(self, df: DataFrame) -> DataFrame:
+        """The hash df-cap and the band-bucket cap over the MERGED rows."""
+        keph = df.groupBy("dhash").agg(
+            F.countDistinct("doc_id").alias("df")
+        ).filter(F.col("df") <= _MM_MAXDF)
+        r1 = df.join(keph.select("dhash"), "dhash")
+        keepb = r1.groupBy("b", "v").agg(
+            F.countDistinct("dhash").alias("nh")
+        ).filter(F.col("nh") <= _MM_BAND_MAXDF)
+        return r1.join(keepb.select("b", "v"), ["b", "v"]).select(
+            "doc_id", "dhash", "b", "v"
+        )
 
     def build(self, fp: DataFrame) -> None:
-        import os
-
-        seg = self._seg_dir("base")
-        if not os.path.exists(os.path.join(seg, "_SUCCESS")):
-            build_image_band_index(self.spark, fp, seg)
+        self.commit("base", lambda seg: build_image_band_index(self.spark, fp, seg))
 
     def probe_admit(self, batch_fp: DataFrame, tag: str) -> DataFrame:
         """Probe the batch's fingerprints against every committed
         segment (excluding the tag's own), commit the ADMITTED images'
         band rows as segment ``tag``, return (doc_id, is_dup).  Dup =
-        any corpus hash within hamming {t} found via band buckets
-        (complete by pigeonhole for t < bands)."""
-        import os
-
+        any corpus hash within hamming 3 (``_CAP_HAM_T``) found via
+        band buckets (complete by pigeonhole for 3 < bands)."""
         from ..cachescope import scoped_local_checkpoint
         from .dedup import _probe_hint
 
@@ -2262,7 +2112,7 @@ class ImageBandIndexStore:
                 ])
             ).alias("b", "v"),
         )
-        corpus = self.bands(exclude_tag=tag).select(
+        corpus = self.rows(exclude_tag=tag).select(
             F.col("doc_id").alias("corpus_id"), F.col("dhash").alias("hc"), "b", "v"
         )
         dup_ids = (
@@ -2280,35 +2130,13 @@ class ImageBandIndexStore:
                 "doc_id", F.coalesce("is_dup", F.lit(False)).alias("is_dup")
             )
         )
-        seg = self._seg_dir(tag)
-        if not os.path.exists(os.path.join(seg, "_SUCCESS")):
-            admitted = batch_fp.join(
-                disp.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
-            )
-            build_image_band_index(self.spark, admitted, seg)
-        return disp
-
-
-probe_admit_doc = ImageBandIndexStore.probe_admit
-probe_admit_doc.__doc__ = probe_admit_doc.__doc__.format(t=_CAP_HAM_T)
-
-
-def _make_image_sink(store: ImageBandIndexStore, out_dir: str):
-    """Idempotent foreachBatch sink for streaming image admission (the
-    audio sink's contract: deterministic probe, fenced segment,
-    batch-keyed overwrite landing)."""
-    import os
-
-    def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
-        from ..cachescope import release_scoped_caches
-
-        disp = store.probe_admit(batch_df, f"b{batch_id:08d}")
-        disp.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id:08d}")
+        admitted = batch_fp.join(
+            disp.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
         )
-        release_scoped_caches()
-
-    return _sink
+        self.commit(
+            tag, lambda seg: build_image_band_index(self.spark, admitted, seg)
+        )
+        return disp
 
 
 def admit_image_stream(
@@ -2327,21 +2155,20 @@ def admit_image_stream(
     band rows commit as the batch's segment.  Only 8-byte hashes ever
     stream; pixels stay wherever they were decoded."""
     store = ImageBandIndexStore(spark, state_path)
-    return (
-        spark.readStream.schema("doc_id bigint, dhash bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_make_image_sink(store, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return file_stream(
+        spark,
+        "doc_id bigint, dhash bigint",
+        source_dir,
+        store_sink(store, out_dir),
+        checkpoint_dir,
     )
 
 
-class VideoKeyframeIndexStore:
+class VideoKeyframeIndexStore(SegmentStore):
     """Segment-committed keyframe-hash index for a ROLLING video corpus
     — completes the streaming admission matrix (text spans/clusters,
     audio shingles, image bands): each admitted batch appends one
-    fenced segment of its videos' DISTINCT keyframe dHashes; a probe
+    committed segment of its videos' DISTINCT keyframe dHashes; a probe
     bands the batch's keyframes, hamming-verifies candidates, and
     takes the video-dedup containment vote (matched keyframes >= half
     the smaller set), so a re-encoded/brightened/TRIMMED re-upload of
@@ -2349,48 +2176,14 @@ class VideoKeyframeIndexStore:
     hash-df-capped at commit (hub keyframes dropped); ``compact()``
     folds segments and re-applies the cap GLOBALLY."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        import os
+    schema = "doc_id bigint, dhash bigint"
 
-        self.spark = spark
-        self.path = path
-        os.makedirs(path, exist_ok=True)
-
-    def _seg_dir(self, tag: str) -> str:
-        import os
-
-        return os.path.join(self.path, f"seg_{tag}")
-
-    def _segments(self) -> "list[str]":
-        from ..segstore import list_segments
-
-        return list_segments(self.path)
-
-    def compact(self) -> int:
-        """Fold all committed segments into one, re-applying the
-        keyframe-hash df-cap over the MERGED rows.  Run at a quiescent
-        point only (segstore contract)."""
-        from ..segstore import compact_segments
-
-        def recap(df: DataFrame) -> DataFrame:
-            keph = df.groupBy("dhash").agg(
-                F.count(F.lit(1)).alias("df")
-            ).filter(F.col("df") <= _MM_MAXDF)
-            return df.join(keph.select("dhash"), "dhash").select(
-                "doc_id", "dhash"
-            )
-
-        return compact_segments(self.spark, self.path, recap)
-
-    def keyframes(self, exclude_tag: "str | None" = None) -> DataFrame:
-        segs = [
-            p
-            for p in self._segments()
-            if exclude_tag is None or not p.endswith(f"seg_{exclude_tag}")
-        ]
-        if not segs:
-            return local_rows_df(self.spark, [], "doc_id bigint, dhash bigint")
-        return self.spark.read.parquet(*segs).select("doc_id", "dhash")
+    def recap(self, df: DataFrame) -> DataFrame:
+        """The keyframe-hash df-cap over the MERGED rows."""
+        keph = df.groupBy("dhash").agg(
+            F.count(F.lit(1)).alias("df")
+        ).filter(F.col("df") <= _MM_MAXDF)
+        return df.join(keph.select("dhash"), "dhash").select("doc_id", "dhash")
 
     @staticmethod
     def _kf_sets(fh: DataFrame) -> DataFrame:
@@ -2403,20 +2196,16 @@ class VideoKeyframeIndexStore:
         )
 
     def build(self, fh: DataFrame) -> None:
-        import os
-
-        seg = self._seg_dir("base")
-        if not os.path.exists(os.path.join(seg, "_SUCCESS")):
-            # hash-df cap baked in at build time (the audio index rule)
-            _capped_kf_sets(fh).write.mode("overwrite").parquet(seg)
+        # hash-df cap baked in at build time (the audio index rule)
+        self.commit(
+            "base", lambda seg: _capped_kf_sets(fh).write.mode("overwrite").parquet(seg)
+        )
 
     def probe_admit(self, batch_fh: DataFrame, tag: str) -> DataFrame:
         """Probe the batch's per-frame fingerprints against every
         committed segment (excluding the tag's own), commit the
         ADMITTED videos' keyframe sets as segment ``tag``, return
         (doc_id, n_keyframes, is_dup)."""
-        import os
-
         from ..cachescope import scoped_local_checkpoint, scoped_persist
         from .dedup import _probe_hint
 
@@ -2439,7 +2228,7 @@ class VideoKeyframeIndexStore:
         # read by the size aggregate AND the band probe
         nk = scoped_persist(self._kf_sets(batch_fh))
         sizes = nk.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_k"))
-        corpus = self.keyframes(exclude_tag=tag)
+        corpus = self.rows(exclude_tag=tag)
         csizes = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_c"))
         # segments are hash-df-capped at commit; the residual hub class
         # (distinct near hashes agreeing on one band value) is dropped
@@ -2486,36 +2275,15 @@ class VideoKeyframeIndexStore:
                 F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
             )
         )
-        seg = self._seg_dir(tag)
-        if not os.path.exists(os.path.join(seg, "_SUCCESS")):
-            admitted = nk.join(
-                disp.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
-            )
-            # per-segment hash-df cap (the audio segment-commit rule);
-            # cross-segment drift is re-capped by compact()
-            keph = admitted.groupBy("dhash").agg(
-                F.count(F.lit(1)).alias("df")
-            ).filter(F.col("df") <= _MM_MAXDF)
-            admitted.join(keph.select("dhash"), "dhash").write.mode(
-                "overwrite"
-            ).parquet(seg)
-        return disp
-
-
-def _make_video_sink(store: VideoKeyframeIndexStore, out_dir: str):
-    """Idempotent foreachBatch sink (the audio/image sinks' contract)."""
-    import os
-
-    def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
-        from ..cachescope import release_scoped_caches
-
-        disp = store.probe_admit(batch_df, f"b{batch_id:08d}")
-        disp.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id:08d}")
+        admitted = nk.join(
+            disp.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
         )
-        release_scoped_caches()
-
-    return _sink
+        # per-segment hash-df cap (the audio segment-commit rule);
+        # cross-segment drift is re-capped by compact()
+        self.commit(
+            tag, lambda seg: self.recap(admitted).write.mode("overwrite").parquet(seg)
+        )
+        return disp
 
 
 def admit_video_stream(
@@ -2534,13 +2302,12 @@ def admit_video_stream(
     their keyframe sets commit as the batch's segment.  Only 8-byte
     hashes ever stream; pixels stay at the decode stage."""
     store = VideoKeyframeIndexStore(spark, state_path)
-    return (
-        spark.readStream.schema("doc_id bigint, frame_idx int, dhash bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_make_video_sink(store, out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return file_stream(
+        spark,
+        "doc_id bigint, frame_idx int, dhash bigint",
+        source_dir,
+        store_sink(store, out_dir),
+        checkpoint_dir,
     )
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions import local_rows_df
 from ..registry import register
+from ..segstore import file_stream, land_batch, scoped_sink
 from ..sources import table
 
 
@@ -206,7 +207,8 @@ def ingest_gated_stream(
     REPLACES exactly its own two subdirs and touches nothing else —
     the standard idempotent file-sink pattern, no marker needed because
     the write is naturally keyed by batch.  Each replacement is a
-    write-to-temp + directory-rename swap (never a distributed
+    write-to-temp + directory-rename swap (``segstore.land_batch``;
+    never a distributed
     delete-then-rewrite in place), so a reader concurrent with a
     replay sees a COMPLETE batch copy — old or new — except during the
     two-rename swap instant itself (a missing-batch window of two
@@ -214,43 +216,18 @@ def ingest_gated_stream(
     Readers see whole batches (`spark.read.parquet(good_dir)` — the
     batch=<id> path component doubles as a partition column).  Returns
     the ready DataStreamWriter (caller .start()s it)."""
-    import os
-    import shutil
 
-    def _land(df, root: str, batch_id: int) -> None:
-        dest = os.path.join(root, f"batch={batch_id}")
-        tmp = os.path.join(root, f".batch_{batch_id}.tmp")
-        old = os.path.join(root, f".batch_{batch_id}.old")
-        shutil.rmtree(tmp, ignore_errors=True)  # crashed replay debris
-        # a crash BETWEEN the two swap renames strands the previous
-        # copy at .old with dest missing — the dest-missing branch
-        # below would never reclaim it, so clear it here too
-        shutil.rmtree(old, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(dest):  # replayed batch: swap out the old copy
-            os.rename(dest, old)
-            os.rename(tmp, dest)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(tmp, dest)
-
+    @scoped_sink
     def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
         flagged = gate_rows(batch_df, row_checks, not_null)
         good = flagged.filter(F.size("_violations") == 0).drop("_violations")
         bad = flagged.filter(F.size("_violations") > 0).withColumn(
             "_violations", F.array_join("_violations", ",")
         )
-        _land(good, good_dir, int(batch_id))
-        _land(bad, dead_dir, int(batch_id))
+        land_batch(good, good_dir, batch_id)
+        land_batch(bad, dead_dir, batch_id)
 
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
+    return file_stream(spark, schema, source_dir, _sink, checkpoint_dir)
 
 
 _GATE_CHECKS = {  # declaration order = violation-name order in the output

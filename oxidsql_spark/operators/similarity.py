@@ -23,6 +23,7 @@ from ..functions import (
     vec_norm,
 )
 from ..registry import register
+from ..segstore import file_stream, read_marker, scoped_sink, write_marker
 from ..sources import build_once, fresh_dir, table
 
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -1613,58 +1614,32 @@ def admit_ivfadc_stream(
     row-identical to a one-shot admission of the same vectors
     (frozen-codebook determinism; tested).  Returns the ready
     DataStreamWriter (caller .start()s it)."""
-    stream = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    return file_stream(
+        spark,
+        "vec_id bigint, embedding array<float>",
+        source_dir,
+        _make_admit_sink(spark, index_path),
+        checkpoint_dir,
     )
-    return (
-        stream.writeStream.foreachBatch(_make_admit_sink(spark, index_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
-def _admit_marker_path(index_path: str) -> str:
-    return os.path.join(index_path, "_stream_batch.json")
-
-
-def _admit_last_batch(index_path: str) -> int:
-    p = _admit_marker_path(index_path)
-    if not os.path.exists(p):
-        return -1
-    import json
-
-    with open(p) as f:
-        return int(json.load(f)["batch_id"])
-
-
-def _admit_mark_batch(index_path: str, batch_id: int) -> None:
-    import json
-
-    tmp = _admit_marker_path(index_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"batch_id": int(batch_id)}, f)
-    os.replace(tmp, _admit_marker_path(index_path))
 
 
 def _make_admit_sink(spark: SparkSession, index_path: str):
     """Idempotent foreachBatch sink for streaming IVFADC admission
     (exposed for the crash-replay tests).  foreachBatch is at-least-
-    once and a code append is not idempotent, so: (a) a marker file
-    (atomic os.replace) records the last fully-admitted batch_id and
-    replays of it are skipped outright; (b) the FIRST batch after a
-    (re)start — the only one that can have appended rows before a
-    crash killed the marker write — is admitted through a vec_id
-    anti-join against the existing index, dropping rows a torn
+    once and a code append is not idempotent, so: (a) the batch marker
+    (segstore, atomic os.replace) records the last fully-admitted
+    batch_id and replays of it are skipped outright; (b) the FIRST
+    batch after a (re)start — the only one that can have appended rows
+    before a crash killed the marker write — is admitted through a
+    vec_id anti-join against the existing index, dropping rows a torn
     previous attempt already landed.  The anti-join runs once per
     process, not per batch, and rides the admission contract that
     vec_ids are unique across admitted batches."""
     state = {"recovered": False}
 
+    @scoped_sink
     def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
-        b = int(batch_id)
-        if b <= _admit_last_batch(index_path):
+        if batch_id <= read_marker(index_path)["batch_id"]:
             return  # replay of a fully-admitted batch
         fresh = batch_df
         if not state["recovered"]:
@@ -1673,7 +1648,7 @@ def _make_admit_sink(spark: SparkSession, index_path: str):
             fresh = batch_df.join(existing, "vec_id", "left_anti")
         if not fresh.isEmpty():
             admit_ivfadc_vectors(spark, fresh, index_path)
-        _admit_mark_batch(index_path, b)
+        write_marker(index_path, batch_id=batch_id)
 
     return _sink
 

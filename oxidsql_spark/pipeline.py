@@ -813,32 +813,17 @@ def curate_ingest_stream(
     batch-keyed tmp-write + rename swaps (with stranded-.old
     reclamation).  Returns the ready DataStreamWriter."""
     import os
-    import shutil
 
     from .operators.corpus_ext import bigram_nll_against
     from .operators.dedup import SpanIndexStore
     from .operators.quality import gate_rows
+    from .segstore import file_stream, land_batch, scoped_sink
 
     store = SpanIndexStore(spark, os.path.join(state_dir, "spans"))
     lm_dir = os.path.join(state_dir, "lm")
 
-    def _land(df, root: str, batch_id: int) -> None:
-        dest = os.path.join(root, f"batch={batch_id}")
-        tmp = os.path.join(root, f".batch_{batch_id}.tmp")
-        old = os.path.join(root, f".batch_{batch_id}.old")
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(dest):
-            os.rename(dest, old)
-            os.rename(tmp, dest)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.makedirs(root, exist_ok=True)
-            os.rename(tmp, dest)
-
-    def _sink(batch_df, batch_id):  # noqa: ANN001 — foreachBatch contract
-        b = int(batch_id)
+    @scoped_sink
+    def _sink(batch_df, b):  # noqa: ANN001 — foreachBatch contract
         flagged = gate_rows(
             batch_df,
             {
@@ -901,21 +886,18 @@ def curate_ingest_stream(
         keep = out.filter(F.col("n_kept") >= min_kept_tokens).select(
             "doc_id", "source", "avg_nll", "n_kept", "cleaned"
         )
-        _land(keep, out_dir, b)
+        land_batch(keep, out_dir, b)
         rejects = gate_bad.unionByName(unscorable).unionByName(nll_bad)
         if clf_bad is not None:
             rejects = rejects.unionByName(clf_bad)
-        _land(rejects.unionByName(husks), reject_dir, b)
+        land_batch(rejects.unionByName(husks), reject_dir, b)
 
-    return (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, n_chars bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return file_stream(
+        spark,
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+        source_dir,
+        _sink,
+        checkpoint_dir,
     )
 
 

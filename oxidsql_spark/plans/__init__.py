@@ -81,8 +81,53 @@ class PlanSummary:
         return bool(self.joins) and all(j == "BroadcastHashJoin" for j in self.joins)
 
 
-def explain_summary(df: DataFrame) -> PlanSummary:
-    p = formatted_plan(df)
+def _final_plan_only(plan: str) -> str:
+    """An executed adaptive plan's formatted text without what only its
+    ``== Initial Plan ==`` holds: the initial subtree, and the detail
+    blocks of nodes that appear in no other tree.  A plan without that
+    section is returned unchanged."""
+    if "== Initial Plan ==" not in plan:
+        return plan
+    node_id = re.compile(r"\((\d+)\)(?:,|$)")
+    kept: list[str] = []
+    shown, initial = set(), set()
+    in_tree, init_lead = False, None
+    for ln in plan.splitlines():
+        if ln.startswith(("== Physical Plan ==", "Subquery:")):
+            in_tree = True
+        elif not ln.strip():
+            in_tree, init_lead = False, None
+        elif in_tree:
+            lead = len(ln) - len(ln.lstrip())
+            if init_lead is not None and lead <= init_lead:
+                init_lead = None
+            if init_lead is None and "== Initial Plan ==" in ln:
+                init_lead = lead
+            m = node_id.search(ln)
+            if init_lead is not None:
+                if m:
+                    initial.add(m.group(1))
+                continue
+            if m:
+                shown.add(m.group(1))
+        kept.append(ln)
+    dropped = initial - shown
+    out, skip = [], False
+    for ln in kept:
+        m = re.match(r"\((\d+)\) ", ln)
+        if m:
+            skip = m.group(1) in dropped
+        elif not ln.strip():
+            skip = False
+        if not skip:
+            out.append(ln)
+    return "\n".join(out)
+
+
+def summarize_plan(plan: str) -> PlanSummary:
+    """Summary of a formatted physical plan's text.  Of an executed
+    adaptive plan, only the final plan counts."""
+    p = _final_plan_only(plan)
     s = PlanSummary()
     for line in p.splitlines():
         t = line.strip()
@@ -98,3 +143,8 @@ def explain_summary(df: DataFrame) -> PlanSummary:
     s.has_topk = "TakeOrderedAndProject" in p
     s.python_evals = p.count("BatchEvalPython") + p.count("ArrowEvalPython")
     return s
+
+
+def explain_summary(df: DataFrame) -> PlanSummary:
+    """Summary of ``df``'s plan before execution."""
+    return summarize_plan(formatted_plan(df))

@@ -74,6 +74,7 @@ SLOW_TESTS = {
     "test_streaming.py::test_ivfadc_stream_admission_equals_oneshot",
     "test_streaming.py::test_late_rows_dropped_by_watermark",
     "test_streaming.py::test_scd2_stream_equals_batch",
+    "test_streaming.py::test_stream_sinks_release_scoped_caches",
     "test_streaming.py::test_stream_join_state_evicted_by_watermark",
     "test_streaming.py::test_stream_upsert_versioned_cdc",
     "test_streaming.py::test_tws_sessions_timers_evict_state",

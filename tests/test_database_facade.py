@@ -479,6 +479,42 @@ def test_explain_analyze_evaluates_projected_columns(db):
     db.query("DROP TABLE eap")
 
 
+def test_explain_analyze_reports_the_executed_join_strategy(db, spark):
+    """EXPLAIN ANALYZE's joins/exchanges rows describe the plan that ran.
+    With static broadcasting off, the planner picks a sort-merge join;
+    at runtime AQE sees the selective side's few shuffled rows and
+    demotes it to a broadcast hash join."""
+    from oxidsql_spark.plans import explain_summary
+
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "10MB",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    db.query("CREATE TABLE ea_big (id INTEGER, g INTEGER)")
+    db.query("CREATE TABLE ea_small (id INTEGER, g INTEGER)")
+    for i in range(20):
+        db.query(f"INSERT INTO ea_big VALUES ({i}, {i % 3})")
+        db.query(f"INSERT INTO ea_small VALUES ({i}, {i % 3})")
+    sql = "SELECT b.id FROM ea_big b JOIN ea_small s ON b.id = s.id WHERE s.g = 1"
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        assert explain_summary(db.sql(sql)).joins == ["SortMergeJoin"]
+        rows = {r.item: r.detail for r in db.query("EXPLAIN ANALYZE " + sql).collect()}
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        db.query("DROP TABLE ea_big")
+        db.query("DROP TABLE ea_small")
+    assert int(rows["actual_rows"]) == 7
+    assert "BroadcastHashJoin" in rows["final_plan"]
+    assert rows["joins"] == "BroadcastHashJoin"
+
+
 def test_describe_history_versions(spark, tmp_path):
     """DESCRIBE HISTORY lists every committed snapshot with file count,
     bytes, and the commit (_SUCCESS) timestamp — the audit surface for

@@ -768,6 +768,53 @@ def test_capped_band_join_candidates_linear_in_hub_size(spark):
     assert small == 6, small
 
 
+def _dhash_hof(col: str = "text") -> str:
+    """The Spark SQL form of the fake byte-stride dHash, the reference
+    the engine's Arrow passes are checked against: the integer fold of
+    `multimodal._dhash_fake_terms` written as one ``aggregate``
+    higher-order expression.  Bit terms are added in ascending-``i``
+    order with BIGINT arithmetic, so it is bit-identical to the
+    unrolled 48-term CASE sum while being a ~40-node expression instead
+    of a ~1500-node one."""
+    from oxidsql_spark.operators.multimodal import _DH_FAKE_BITS
+
+    p = f"(i * 7) % greatest(length({col}) - 1, 1)"
+    return (
+        f"aggregate(sequence(0, {_DH_FAKE_BITS - 1}), CAST(0 AS BIGINT), "
+        f"(acc, i) -> acc + CASE WHEN ascii(substring({col}, {p} + 1, 1)) > "
+        f"ascii(substring({col}, {p} + 2, 1)) "
+        f"THEN shiftleft(CAST(1 AS BIGINT), i) ELSE CAST(0 AS BIGINT) END)"
+    )
+
+
+def _vid_scene_hashes_sql(d):
+    """The pure-SQL scene-hash form (the semantic spec the DuckDB
+    oracles re-derive) — the equality-test reference for the engine's
+    Arrow pass `multimodal._vid_scene_hashes`."""
+    from oxidsql_spark.operators.multimodal import _VID_SCENES_MOD
+
+    sc, ln = "sc", "length(text)"
+    start = f"(1 + ({sc} * {ln}) DIV s)"
+    flen = f"((({sc} + 1) * {ln}) DIV s - ({sc} * {ln}) DIV s)"
+    ft = f"substring(text, {start}, {flen})"
+    return (
+        d.select(
+            "doc_id",
+            "text",
+            F.expr(f"2 + (length(text) % {_VID_SCENES_MOD})").alias("s"),
+        )
+        .select(
+            "doc_id", "s", F.explode(F.expr("sequence(0, s - 1)")).alias("sc"), "text"
+        )
+        .select(
+            "doc_id",
+            "s",
+            "sc",
+            F.expr(_dhash_hof(f"({ft})")).alias("dhash"),
+        )
+    )
+
+
 def test_dhash_hof_equals_unrolled_sum(spark, sf_dir):
     """r14 opt round: the Spark-side fake dHash is the aggregate() HOF
     fold; the DuckDB oracle keeps the unrolled 48-term CASE sum.  Both
@@ -775,14 +822,11 @@ def test_dhash_hof_equals_unrolled_sum(spark, sf_dir):
     must be bit-identical on the live fixture corpus — this pins the
     equivalence the plan-size optimization rests on, engine-side only
     (no DuckDB needed)."""
-    from oxidsql_spark.operators.multimodal import (
-        _DH_FAKE_BITS,
-        _dhash_fake_terms,
-    )
+    from oxidsql_spark.operators.multimodal import _DH_FAKE_BITS
     from oxidsql_spark.sources import table
 
     d = table(spark, sf_dir, "documents")
-    hof = _dhash_fake_terms("spark")
+    hof = _dhash_hof()
     assert "aggregate(" in hof  # the optimization is actually in place
     unrolled = []
     for i in range(_DH_FAKE_BITS):
@@ -810,7 +854,6 @@ def test_video_scene_hash_equals_per_frame_chain(spark, sf_dir):
     from oxidsql_spark.operators.multimodal import (
         _VID_REP,
         _VID_SCENES_MOD,
-        _dhash_fake_terms,
         _vid_fh,
         _vid_frame_sql,
     )
@@ -835,7 +878,7 @@ def test_video_scene_hash_equals_per_frame_chain(spark, sf_dir):
         .select(
             "doc_id",
             "frame_idx",
-            F.expr(_dhash_fake_terms("spark", "ft")).alias("dhash"),
+            F.expr(_dhash_hof("ft")).alias("dhash"),
         )
     )
     a = sorted(map(tuple, _vid_fh(d).collect()))
@@ -850,10 +893,7 @@ def test_scene_hash_numpy_equals_sql_fold(spark, sf_dir):
     substring/ascii edge cases (empty text, 1-char slices where the
     successor read is ascii('')=0, non-ASCII codepoints where ord must
     equal Spark's ascii)."""
-    from oxidsql_spark.operators.multimodal import (
-        _vid_scene_hashes,
-        _vid_scene_hashes_sql,
-    )
+    from oxidsql_spark.operators.multimodal import _vid_scene_hashes
     from oxidsql_spark.sources import table
 
     def rows(df):
@@ -879,16 +919,13 @@ def test_scene_hash_numpy_equals_sql_fold(spark, sf_dir):
     assert a == b
     assert len(a) > 0
     # the whole-text twin against the SQL fold, same corpora
-    from oxidsql_spark.operators.multimodal import (
-        _dhash_fake_frame,
-        _dhash_fake_terms,
-    )
+    from oxidsql_spark.operators.multimodal import _dhash_fake_frame
 
     for frame in (d, adv):
         got = rows(_dhash_fake_frame(frame, ["doc_id"]))
         want = rows(
             frame.select(
-                "doc_id", F.expr(_dhash_fake_terms("spark")).alias("dhash")
+                "doc_id", F.expr(_dhash_hof()).alias("dhash")
             )
         )
         assert got == want

@@ -61,8 +61,8 @@ def test_audio_compact_preserves_probe_verdicts(spark, audio_store_dirs):
     assert cmp_store.compact() == 3
     assert len(list_segments(b_dir)) == 1
     # index CONTENT identical (no value crossed the global cap here)
-    ref_rows = {tuple(r) for r in ref.shingles().collect()}
-    cmp_rows = {tuple(r) for r in cmp_store.shingles().collect()}
+    ref_rows = {tuple(r) for r in ref.rows().collect()}
+    cmp_rows = {tuple(r) for r in cmp_store.rows().collect()}
     assert ref_rows == cmp_rows
     # probe the SAME fresh batch on both stores: a re-upload of an
     # admitted track must reject on each, a fresh track admit on each
@@ -115,10 +115,10 @@ def test_audio_compact_reapplies_global_df_cap(spark, tmp_path):
     # batch track -> batch tracks reject or admit per the vote; what
     # matters here is the INDEX: both segments carry hub values
     assert disp.count() == n_half
-    pre = store.shingles().filter(F.col("v").isin(*hub_vals)).count()
+    pre = store.rows().filter(F.col("v").isin(*hub_vals)).count()
     assert pre > _AUD_MAXDF  # global drift: over the cap across segments
     store.compact()
-    assert store.shingles().filter(F.col("v").isin(*hub_vals)).count() == 0
+    assert store.rows().filter(F.col("v").isin(*hub_vals)).count() == 0
 
 
 def test_video_store_compact_and_image_store_compact(spark, tmp_path):
@@ -208,10 +208,10 @@ def test_span_store_compact_dedups_grams(spark, tmp_path):
     )
     sref = str(tmp_path / "spref")
     shutil.copytree(sdir, sref)
-    pre = {r.gram for r in st.grams().collect()}
+    pre = {r.gram for r in st.rows().collect()}
     assert st.compact() == 2
     assert len(list_segments(sdir)) == 1
-    assert {r.gram for r in st.grams().collect()} == pre
+    assert {r.gram for r in st.rows().collect()} == pre
     # the cut over a fresh batch is unchanged by compaction
     batch = spark.createDataFrame(
         [(3, text + " and some totally fresh words appended here")],
@@ -253,3 +253,97 @@ def test_compact_pointer_crash_safety(spark, tmp_path):
     with open(os.path.join(d, "_COMPACTED"), "w") as fh:
         json.dump({"active": "cmp_00000042", "retired": ["seg_base"]}, fh)
     assert [os.path.basename(p) for p in list_segments(d)] == ["cmp_00000042"]
+
+
+def test_segment_store_base_commit_rows_and_compact(spark, tmp_path):
+    """The shared SegmentStore on a two-column toy store: a replayed
+    commit tag writes nothing, ``rows(exclude_tag=...)`` drops exactly
+    that segment, an empty store reads as the declared schema, and
+    ``compact()`` folds through the store's ``recap``.  ``store_sink``
+    commits the batch's segment, lands its disposition and releases
+    the batch's scoped caches."""
+    import os
+
+    from oxidsql_spark.cachescope import scoped_cache_count, scoped_persist
+    from oxidsql_spark.segstore import SegmentStore, store_sink
+
+    class Toy(SegmentStore):
+        schema = "k bigint, n bigint"
+
+        def recap(self, df):
+            return df.groupBy("k").agg(F.sum("n").alias("n"))
+
+        def probe_admit(self, batch, tag):
+            self.commit(tag, lambda seg: batch.write.parquet(seg))
+            return scoped_persist(batch.select("k"))
+
+    store = Toy(spark, str(tmp_path / "toy"))
+    empty = store.rows()
+    assert empty.schema.simpleString() == "struct<k:bigint,n:bigint>"
+    assert empty.count() == 0
+
+    def writer(rows):
+        def write(seg):
+            calls.append(os.path.basename(seg))
+            spark.createDataFrame(rows, store.schema).write.parquet(seg)
+
+        return write
+
+    calls = []
+    store.commit("base", writer([(1, 1), (2, 1)]))
+    store.commit("b0", writer([(1, 5)]))
+    store.commit("b0", writer([(9, 9)]))  # replayed tag: not written
+    store.commit("b00", writer([(3, 1)]))  # shares the prefix of b0's name
+    assert calls == ["seg_base", "seg_b0", "seg_b00"]
+
+    def got(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert got(store.rows()) == [(1, 1), (1, 5), (2, 1), (3, 1)]
+    assert got(store.rows(exclude_tag="b0")) == [(1, 1), (2, 1), (3, 1)]
+    assert got(store.rows(exclude_tag="b00")) == [(1, 1), (1, 5), (2, 1)]
+    assert store.compact() == 3
+    assert len(list_segments(store.path)) == 1
+    assert got(store.rows()) == [(1, 6), (2, 1), (3, 1)]
+
+    out = str(tmp_path / "out")
+    store_sink(store, out)(spark.createDataFrame([(4, 1)], store.schema), 7)
+    assert scoped_cache_count() == 0
+    assert got(spark.read.parquet(os.path.join(out, "batch=00000007"))) == [(4,)]
+    assert got(store.rows(exclude_tag="b00000007")) == [(1, 6), (2, 1), (3, 1)]
+    assert (4, 1) in got(store.rows())
+
+
+def test_stream_plumbing_lives_only_in_segstore():
+    """The segment format and the exactly-once sink protocol have one
+    owner: no other engine module sets the file-stream trigger size
+    (beyond the watermarked events source), spells the landing swap's
+    tmp dir or the batch marker's file name, or lists/compacts segments
+    itself."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "oxidsql_spark"
+    own = pkg / "segstore.py"
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        if p == own:
+            continue
+        src = p.read_text()
+        rel = p.relative_to(pkg.parent)
+        if "maxFilesPerTrigger" in src and p != pkg / "streaming" / "events.py":
+            offenders.append(f"{rel}: maxFilesPerTrigger")
+        if re.search(r"\.batch_\{[^}]*\}\.tmp", src):
+            offenders.append(f"{rel}: .batch_{{...}}.tmp")
+        if "_stream_batch.json" in src:
+            offenders.append(f"{rel}: _stream_batch.json")
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in ("list_segments", "compact_segments"):
+                    offenders.append(f"{rel}:{node.lineno} {name}()")
+    assert not offenders, "stream plumbing belongs in segstore: " + ", ".join(
+        offenders
+    )

@@ -1027,17 +1027,13 @@ def test_matview_sink_replay_and_crash_window_idempotent(spark, sf_dir, tmp_path
 
     from pyspark.sql import functions as F
 
-    from oxidsql_spark.matview import (
-        _last_applied,
-        _make_view_sink,
-        _mark_applied,
-        events_type_view,
-    )
+    from oxidsql_spark.matview import _make_view_sink, events_type_view
+    from oxidsql_spark.segstore import read_marker, write_marker
     from oxidsql_spark.sources import table
 
     vp = str(tmp_path / "mv_sink")
     os.makedirs(vp, exist_ok=True)
-    _mark_applied(vp, -1, 0)
+    write_marker(vp, batch_id=-1, version=0)
     view = events_type_view(spark, vp)
     sink = _make_view_sink(view, vp)
 
@@ -1055,11 +1051,11 @@ def test_matview_sink_replay_and_crash_window_idempotent(spark, sf_dir, tmp_path
     sink(batches[1], 1)
     # crash window: batch 2's refresh commits, marker write is lost
     view.refresh(batches[2])
-    assert _last_applied(vp)["batch_id"] == 1
+    assert read_marker(vp)["batch_id"] == 1
     after_crash = rows()
     sink(batches[2], 2)  # redelivery after the 'crash'
     assert rows() == after_crash  # tagged, NOT re-applied
-    m = _last_applied(vp)
+    m = read_marker(vp)
     assert m["batch_id"] == 2 and m["version"] == view._store.latest_version()
 
     oneshot = events_type_view(spark, str(tmp_path / "mv_oneshot2"))
@@ -1190,6 +1186,45 @@ def test_cut_ingest_stream_exactly_once_and_cross_batch(spark, tmp_path):
     r1 = {r.doc_id: r for r in store.cut_admit(b1, "b00000001").collect()}
     assert r1[20].cleaned == "second arrival"  # batch-0's SHIPPED span now cuts
     assert r1[21].n_kept == r1[21].n_tokens  # fresh text unscathed
+
+
+def test_stream_sinks_release_scoped_caches(spark, tmp_path):
+    """A sink's scoped caches (the cut's checkpoint, the cluster
+    admission's persists) are released once its batch has landed, so a
+    long-running stream's cachescope ledger does not grow per batch."""
+    from oxidsql_spark.cachescope import scoped_cache_count
+    from oxidsql_spark.operators.dedup import SpanIndexStore, cut_ingest_stream
+    from oxidsql_spark.operators.graph import IncrementalClusters, _make_cluster_sink
+
+    schema = "doc_id bigint, text string"
+    batches = [
+        [(10, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+        [(20, "alpha beta gamma delta epsilon zeta lambda mu nu xi")],
+    ]
+    state = IncrementalClusters(spark, str(tmp_path / "clusters"))
+    state.build(
+        spark.createDataFrame([(1, "one two three four five six seven")], schema)
+    )
+    sink = _make_cluster_sink(state)
+    for b, rows in enumerate(batches):
+        sink(spark.createDataFrame(rows, schema), b)
+    assert scoped_cache_count() == 0
+    assert state.labels().count() == 3  # both batches were admitted
+
+    store = str(tmp_path / "spans")
+    SpanIndexStore(spark, store).build(
+        spark.createDataFrame([(1, "one two three four five six seven")], schema)
+    )
+    src = str(tmp_path / "src")
+    for b, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src}/f{b}")
+    out = str(tmp_path / "out")
+    q = cut_ingest_stream(
+        spark, src + "/f*", store, out, str(tmp_path / "ckpt")
+    ).trigger(availableNow=True).start()
+    q.awaitTermination(300)
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [10, 20]
+    assert scoped_cache_count() == 0
 
 
 def test_curate_ingest_stream_funnel_and_exactly_once(spark, tmp_path):
@@ -1382,11 +1417,8 @@ def test_audio_admission_stream_exactly_once_and_cross_batch(spark, tmp_path):
 
     import numpy as np
 
-    from oxidsql_spark.operators.multimodal import (
-        _AUD_W,
-        AudioIndexStore,
-        _make_audio_sink,
-    )
+    from oxidsql_spark.operators.multimodal import _AUD_W, AudioIndexStore
+    from oxidsql_spark.segstore import store_sink
 
     rnd = random.Random(99)
 
@@ -1444,7 +1476,7 @@ def test_audio_admission_stream_exactly_once_and_cross_batch(spark, tmp_path):
 
     # redelivery of batch 1: segment skip + identical disposition
     segs_before = sorted(os.listdir(sp))
-    sink = _make_audio_sink(store, out)
+    sink = store_sink(store, out)
     sink(
         spark.createDataFrame(feed[1], "doc_id bigint, payload binary"), 1
     )
@@ -1471,10 +1503,10 @@ def test_image_admission_stream_over_real_bytes(spark, tmp_path):
 
     from oxidsql_spark.operators.multimodal import (
         ImageBandIndexStore,
-        _make_image_sink,
         admit_image_stream,
         dhash_image,
     )
+    from oxidsql_spark.segstore import store_sink
     from tests.test_multimodal_codec import _bmp_px
 
     rnd = random.Random(31)
@@ -1530,7 +1562,7 @@ def test_image_admission_stream_over_real_bytes(spark, tmp_path):
 
     # redelivery: segment skip + identical disposition
     segs_before = sorted(os.listdir(sp))
-    _make_image_sink(store, out)(
+    store_sink(store, out)(
         spark.createDataFrame(feed[1], "doc_id bigint, dhash bigint"), 1
     )
     assert sorted(os.listdir(sp)) == segs_before
@@ -1552,11 +1584,11 @@ def test_video_admission_stream_over_real_containers(spark, tmp_path):
 
     from oxidsql_spark.operators.multimodal import (
         VideoKeyframeIndexStore,
-        _make_video_sink,
         admit_video_stream,
         dhash_image,
         split_p5_frames,
     )
+    from oxidsql_spark.segstore import store_sink
 
     rnd = random.Random(41)
     w, h = 36, 32
@@ -1627,7 +1659,7 @@ def test_video_admission_stream_over_real_containers(spark, tmp_path):
 
     # redelivery: segment skip + identical disposition
     segs_before = sorted(os.listdir(sp))
-    _make_video_sink(store, out)(
+    store_sink(store, out)(
         spark.createDataFrame(
             feed[1], "doc_id bigint, frame_idx int, dhash bigint"
         ),
