@@ -262,8 +262,11 @@ def main() -> None:
         "layout": {"kind": "multifile-256k-x32cap", "files": layout_files},
         "sf": sf_val,
     }
+    # one detail file per core count: the low-core re-run must not
+    # overwrite the full-core run's detail
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_detail.json"), "w") as fh:
+                           f"BENCH_detail_c{cpus}.json"), "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
     print(
         json.dumps(

@@ -1,10 +1,11 @@
 """Reusable column expressions.
 
-All pure JVM-side expressions (whole-stage codegen) — no Python UDFs in
-any hot path. Vector math uses higher-order functions over array columns
-with sequential double accumulation, which is bit-identical to the DuckDB
-oracle's evaluation order (crucial for cross-engine value hashing) and
-stays inside codegen at cluster scale.
+All pure JVM-side expressions (whole-stage codegen) — no Python UDFs;
+where an operator's plan leaves the JVM instead is set by the rule in
+SCALE.md, "When a plan leaves the JVM". Vector math uses higher-order
+functions over array columns with sequential double accumulation, which
+is bit-identical to the DuckDB oracle's evaluation order (crucial for
+cross-engine value hashing) and stays inside codegen at cluster scale.
 """
 
 from __future__ import annotations

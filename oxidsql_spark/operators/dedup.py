@@ -429,8 +429,8 @@ def _ngram_jaccard_pairs_direct(
     generation + exact verification against the shared AllPairs index."""
     docs_arr = _allpairs_index(docs, threshold)
     cand = jaccard_candidates(docs_arr, threshold, positions=True)
-    # Spread the verify BEFORE the shingle arrays attach (r14 opt
-    # round; the embedding_cosine_lsh fix, guide §8): the candidate-id
+    # Spread the verify BEFORE the shingle arrays attach (decide
+    # placement on small rows, then attach the payload): the candidate-id
     # shuffle is ~12 MB at sf0.1 (764k pairs), so AQE coalesces it to
     # ONE partition — and the joins below then attach BOTH full shingle
     # arrays (~50 strings each) to every pair, putting the whole
@@ -1143,6 +1143,9 @@ _COS_T = 0.3  # testdata embeddings are random; 0.3 yields a non-trivial pair se
 # a sane broadcast. Above the cap the operator routes to the LSH-bucketed
 # candidate path instead of OOMing the driver at corpus scale.
 _COS_BROADCAST_ROW_CAP = 1_000_000
+# Candidate pairs the LSH verify scores per numpy block: bounds a task's
+# gathered A/B rows (~16 MB each at 64 dims) however hot a bucket runs.
+_LSH_VERIFY_BLOCK = 1 << 15
 
 
 @register(
@@ -1288,42 +1291,48 @@ def embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _embedding_cosine_lsh_path(e: DataFrame, threshold: float) -> DataFrame:
     """Above-broadcast-cap route: random-hyperplane LSH buckets generate
     candidates (same-bucket or hamming-1 bucket), exact cosine verifies.
-    Linear in corpus size (bucket join, no all-pairs, nothing collected);
-    recall < 1 by design — the documented trade at the scale where the
-    exact GEMM's broadcast is impossible.
+    Linear in corpus size (nothing collected, nothing broadcast); recall
+    < 1 by design — the documented trade at the scale where the exact
+    GEMM's broadcast is impossible.
 
-    Verification is an Arrow-batched numpy pass over the joined
-    candidate pairs (per-partition, stateless, nothing broadcast):
-    measured ~10× over evaluating a 64-term JVM dot per pair, which
-    falls out of whole-stage codegen at this width and runs
-    interpreted.  The accumulation loops run dimension-ascending so
-    every float op matches the SQL fold bit-for-bit — the same
-    discipline that keeps the exact-GEMM path hash-identical to the
-    DuckDB oracle."""
+    Two Arrow passes around one exchange.  The sign pass emits every
+    vector once per probe bucket: its own bucket (``own``) and its
+    _LSH_PLANES hamming-1 neighbours.  Hash-partitioning on the bucket
+    lands each candidate pair's two vectors in one task, where the
+    verify pass pairs every own row ``a`` with each row ``b`` of its
+    bucket with a.vec_id < b.vec_id and scores the pairs in numpy.  A
+    pair (x, y), x < y, is scored only in bucket sig(x), and once there,
+    because y's probe buckets are distinct: no candidate join, no
+    distinct, no join re-attaching vectors to id pairs, and nothing
+    persisted.  The Python pass carries its own pairing because a
+    Python task costs a fixed start-up even when warm (SCALE.md, "When a
+    plan leaves the JVM").
+
+    Both folds run dimension-ascending (``cumsum`` along the dim axis is
+    the sequential ascending-k accumulation, in C), so every sign
+    decision and every cosine matches the SQL fold the DuckDB oracle
+    evaluates bit-for-bit."""
     import numpy as np
     import pandas as pd
 
     from ..functions import as_double_vec
     from .similarity import _LSH_PLANES, _hyperplanes
 
+    # bucket XOR masks: 0 is the vector's own bucket, then one per plane
+    masks = np.array([0] + [1 << i for i in range(_LSH_PLANES)], dtype=np.int64)
+    own = masks == 0
+
     # The hyperplanes are a deterministic function of the vector dim,
     # so each task derives them from its first batch instead of the
-    # driver paying a head() probe job per construction (r15 opt
-    # round: ~70 ms + one job per run for one row's length).
+    # driver paying a probe job per construction.
     def sign_batches(batches):
         planes = None
-        # numpy twin of similarity.lsh_signature: same ascending-dim
-        # fold per plane dot product, so every sign decision — and
-        # therefore every bucket — is bit-identical to the SQL form the
-        # oracle evaluates.  The fold is cumsum along the dim axis
-        # (r14 opt round): cumsum IS the sequential ascending-k
-        # accumulation, computed in C instead of a planes×dim Python
-        # loop of numpy calls (768 per batch before; the loop start
-        # differs only in 0.0+x0 vs x0, which can differ in ZERO SIGN
-        # alone and never flips the >= 0 decision).
         for pdf in batches:
             if not len(pdf):
                 continue
+            # numpy twin of similarity.lsh_signature: the cumsum fold
+            # starts at x0 where SQL starts at 0.0 + x0, which can differ
+            # in the sign of a zero alone and never flips the >= 0 test.
             M = np.stack(pdf["v"].to_numpy()).astype(np.float64)
             if planes is None:
                 planes = np.array(_hyperplanes(M.shape[1]))
@@ -1333,77 +1342,54 @@ def _embedding_cosine_lsh_path(e: DataFrame, threshold: float) -> DataFrame:
                 << np.arange(planes.shape[0], dtype=np.int64)
             ).sum(axis=1)
             yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "v": pdf["v"], "sig": sig}
+                {
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), len(masks)),
+                    "v": np.repeat(pdf["v"].to_numpy(), len(masks)),
+                    "sig": (sig[:, None] ^ masks[None, :]).ravel(),
+                    "own": np.tile(own, len(pdf)),
+                }
             )
-
-    # The signature frame feeds four plan branches (bucket side, probe
-    # side, both verify sides); persisting it computes the per-row
-    # hyperplane dot products once instead of four times.
-    v = scoped_persist(
-        e.select("vec_id", as_double_vec("embedding").alias("v")).mapInPandas(
-            sign_batches, "vec_id bigint, v array<double>, sig int"
-        )
-    )
-    # candidate ids only ride the bucket join; vectors rejoin afterwards
-    a = v.select(F.col("vec_id").alias("a_id"), "sig")
-    probes = v.select(
-        F.col("vec_id").alias("b_id"),
-        F.explode(
-            F.array(
-                F.col("sig"),
-                *[F.col("sig").bitwiseXOR(F.lit(1 << i)) for i in range(_LSH_PLANES)],
-            )
-        ).alias("sig"),
-    )
-    cand = (
-        a.join(probes, "sig")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    # Spread the verify BEFORE the vectors attach (r14 opt round, guide
-    # §8: decide placement on small rows, then attach the payload).
-    # The candidate-id shuffle is tiny (~2 MB for 271k pairs at sf0.1),
-    # so AQE coalesces it to ONE partition — but the joins below then
-    # explode each pair to 2×dim doubles (~280 MB) and the whole Arrow
-    # verify ran as a single 3.5 s task.  An explicit round-robin
-    # repartition of the ids (which AQE does not re-coalesce) makes the
-    # byte explosion and the numpy verify land on every core; the extra
-    # exchange moves only 16-byte id pairs.  defaultParallelism scales
-    # with the cluster; at real scale the candidate shuffle is large
-    # enough that AQE never coalesces it and this exchange is a cheap
-    # id-only no-op relative to the verify it parallelizes.
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
-    va = v.select(F.col("vec_id").alias("a_id"), F.col("v").alias("va"))
-    vb = v.select(F.col("vec_id").alias("b_id"), F.col("v").alias("vb"))
-    joined = cand.join(va, "a_id").join(vb, "b_id")
-    thresh = threshold
 
     def verify(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            B = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
-            # cumsum = the sequential ascending-dim fold in C (r14 opt
-            # round; see sign_batches) — this stage lands on ONE
-            # AQE-coalesced task at bench scale (the candidate shuffle
-            # is ~2 MB), so per-pair Python-loop cost was the entire
-            # head: measured 4.2 s -> ~0.1 s for the verify task.
+        pdfs = [pdf for pdf in batches if len(pdf)]
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        sig = pdf["sig"].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
+        order = np.lexsort((ids, sig))  # by bucket, then vec_id
+        sig, ids = sig[order], ids[order]
+        a = np.flatnonzero(pdf["own"].to_numpy()[order])
+        # the rows after an own row, up to its bucket's end, are its
+        # candidates; the id test drops only ties from duplicate ids
+        n_b = np.searchsorted(sig, sig[a], side="right") - a - 1
+        ai = np.repeat(a, n_b)
+        bi = ai + 1 + np.arange(len(ai)) - np.repeat(np.cumsum(n_b) - n_b, n_b)
+        keep = ids[ai] < ids[bi]
+        ai, bi = ai[keep], bi[keep]
+        M = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
+        for lo in range(0, len(ai), _LSH_VERIFY_BLOCK):
+            pa, pb = ai[lo : lo + _LSH_VERIFY_BLOCK], bi[lo : lo + _LSH_VERIFY_BLOCK]
+            A, B = M[pa], M[pb]
             acc = np.cumsum(A * B, axis=1)[:, -1]
             na = np.cumsum(A * A, axis=1)[:, -1]
             nb = np.cumsum(B * B, axis=1)[:, -1]
             sim = acc / (np.sqrt(na) * np.sqrt(nb))
-            m = sim >= thresh
+            m = sim >= threshold
             yield pd.DataFrame(
                 {
-                    "a_id": pdf["a_id"][m],
-                    "b_id": pdf["b_id"][m],
+                    "a_id": ids[pa][m],
+                    "b_id": ids[pb][m],
                     "cos_sim_raw": sim[m],
                 }
             )
 
-    out = joined.mapInPandas(verify, "a_id bigint, b_id bigint, cos_sim_raw double")
+    probes = e.select("vec_id", as_double_vec("embedding").alias("v")).mapInPandas(
+        sign_batches, "vec_id bigint, v array<double>, sig int, own boolean"
+    )
+    out = probes.repartition("sig").mapInPandas(
+        verify, "a_id bigint, b_id bigint, cos_sim_raw double"
+    )
     return out.select("a_id", "b_id", F.round("cos_sim_raw", 4).alias("cos_sim"))
 
 

@@ -104,9 +104,9 @@ def lsh_signature(v: F.Column, dim: int) -> F.Column:
 
     Stays on the zip_with fold deliberately: unrolling the 12×dim dot
     products into element_at chains was measured SLOWER (the ~770-term
-    expression falls out of whole-stage codegen entirely), so consumers
-    that evaluate signatures in several plan branches persist the
-    signature frame instead (see dedup._embedding_cosine_lsh_path)."""
+    expression falls out of whole-stage codegen entirely); the near-dup
+    verify computes the same signature in numpy instead (see
+    dedup._embedding_cosine_lsh_path)."""
     planes = _hyperplanes(dim)
     sig = F.lit(0)
     for i, p in enumerate(planes):

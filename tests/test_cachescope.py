@@ -39,7 +39,6 @@ CACHE_USING_QUERIES = [
     "customer_pareto",
     "orders_rfm",
     "source_term_drift",
-    "embedding_cosine_lsh",
     "orders_backlog_daily",
     "part_pagerank",
     "customer_revenue_gini",

@@ -207,20 +207,22 @@ def test_propagation_empty_corpus_converges(spark):
 def test_embedding_cosine_guard_routes_above_cap(spark, sf_dir):
     """Above the broadcast row cap the operator must NOT collect the
     table to the driver: it routes to the LSH-bucketed candidate path —
-    distinguishable from the exact GEMM by its bucket join + probe
-    explode (the GEMM plan is a single scan into one mapInPandas with a
-    driver-broadcast matrix and NO joins).  The routed output's
-    exact-verified pairs are a subset of the exact pair set."""
+    distinguishable from the exact GEMM by its bucket exchange between
+    a sign pass and a verify pass (the GEMM plan is a single scan into
+    one mapInPandas with a driver-broadcast matrix and NO exchange).
+    The routed output's exact-verified pairs are a subset of the exact
+    pair set."""
     from oxidsql_spark.operators.dedup import dedup_embedding_cosine, embedding_cosine_pairs
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     routed = embedding_cosine_pairs(spark, e, broadcast_row_cap=10)
     plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "Generate explode" in plan  # the hamming-1 probe fan-out
-    assert plan.count("Join") >= 3  # bucket join + two verify joins
+    assert "hashpartitioning(sig#" in plan  # the probe-bucket exchange
+    assert plan.count("MapInPandas") == 2  # sign pass + verify pass
 
     exact_df = dedup_embedding_cosine(spark, sf_dir)
-    assert "Join" not in exact_df._jdf.queryExecution().executedPlan().toString()
+    exact_plan = exact_df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in exact_plan and "Exchange" not in exact_plan
     exact = {(r.a_id, r.b_id) for r in exact_df.collect()}
     got = {(r.a_id, r.b_id) for r in routed.collect()}
     assert got <= exact  # exact verify on candidates: zero false positives
@@ -238,6 +240,91 @@ def test_registered_lsh_query_equals_guarded_route(spark, sf_dir):
     a = sorted(map(tuple, embedding_cosine_lsh(spark, sf_dir).collect()))
     b = sorted(map(tuple, embedding_cosine_pairs(spark, e, broadcast_row_cap=10).collect()))
     assert a == b and a
+
+
+def _half_up_4(x: float) -> float:
+    """Spark's round(x, 4) on a double: HALF_UP on its shortest repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP))
+
+
+def test_lsh_bucket_pairing_equals_bruteforce_across_batches(spark):
+    """The LSH verify pairs vectors inside probe buckets that arrive in
+    many small Arrow batches.  On a crafted corpus (exact duplicates, one
+    crowded bucket, pairs at hamming distance 0, 1 and 2) its output must
+    equal a brute force over {(a, b): a < b, hamming(sig a, sig b) <= 1,
+    cos >= t}: every pair exactly once, cos_sim bit-identical."""
+    import math
+
+    import numpy as np
+
+    from oxidsql_spark.operators.dedup import _embedding_cosine_lsh_path
+    from oxidsql_spark.operators.similarity import _hyperplanes
+
+    dim, t = 16, 0.8
+    rng = np.random.default_rng(7)
+    center = rng.standard_normal(dim)
+    crowd = center + 0.35 * rng.standard_normal((60, dim))  # one hot region
+    dups = np.repeat(crowd[:3], 2, axis=0)  # exact copies under new ids
+    far = rng.standard_normal((40, dim))
+    vecs = np.vstack([crowd, dups, far]).astype(np.float32)
+    ids = rng.permutation(len(vecs)) * 3 + 11  # id order != input order
+    rows = [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)]
+
+    # reference: plain sequential folds, the SQL evaluation order
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    planes = _hyperplanes(dim)
+    sig = {i: sum(1 << k for k, p in enumerate(planes) if dot(v, p) >= 0) for i, v in rows}
+    vec = dict(rows)
+    want, seen_ham = [], set()
+    for a in vec:
+        for b in vec:
+            if a >= b:
+                continue
+            cos = dot(vec[a], vec[b]) / (math.sqrt(dot(vec[a], vec[a])) * math.sqrt(dot(vec[b], vec[b])))
+            ham = bin(sig[a] ^ sig[b]).count("1")
+            if cos >= t:
+                seen_ham.add(min(ham, 2))
+                if ham <= 1:
+                    want.append((a, b, _half_up_4(cos)))
+    assert seen_ham == {0, 1, 2}  # the corpus exercises every case
+    assert max(np.unique(list(sig.values()), return_counts=True)[1]) >= 10
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")  # buckets span many Arrow batches
+    try:
+        e = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+        got = sorted(map(tuple, _embedding_cosine_lsh_path(e, t).collect()))
+    finally:
+        spark.conf.set(key, old)
+    assert len(got) == len({(a, b) for a, b, _ in got})  # each pair once
+    assert got == sorted(want)
+
+
+def test_embedding_cosine_lsh_plan_shape(spark, sf_dir):
+    """Two Python passes around one bucket exchange: no persisted
+    signature frame, no join re-attaching vectors to candidate ids."""
+    from oxidsql_spark.cachescope import scoped_cache_count
+    from oxidsql_spark.operators.dedup import embedding_cosine_lsh
+    from oxidsql_spark.plans import executed_plan
+
+    df = embedding_cosine_lsh(spark, sf_dir)
+    assert df.collect()
+    plan = executed_plan(df)
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 2
+    assert final.count("Exchange") == 1
+    assert "Exchange hashpartitioning(sig#" in final
+    assert "InMemoryTableScan" not in plan
+    assert "BroadcastHashJoin" not in plan
+    assert scoped_cache_count() == 0
 
 
 def test_prepared_pair_table_clusters_match_direct(spark, sf_dir, tmp_path):

@@ -16,6 +16,7 @@ import duckdb
 sys.path.insert(0, ".")
 sys.path.insert(0, "tests")
 
+from oxidsql_spark.cachescope import release_scoped_caches  # noqa: E402
 from oxidsql_spark.registry import load_all  # noqa: E402
 from oxidsql_spark.session import get_spark  # noqa: E402
 from oxidsql_spark.sources import TABLES  # noqa: E402
@@ -78,6 +79,10 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             bad += 1
             print(f"{name}: ERROR {type(e).__name__}: {str(e)[:300]}")
+        finally:
+            # one JVM runs the whole sweep: a query's scoped persists
+            # must not outlive it
+            release_scoped_caches()
     return 1 if bad else 0
 
 

@@ -8,7 +8,7 @@ WHERE a 6 s head spends its time (one big job? 30 closure micro-jobs?
 a fetch-bound stage?) without the (disabled) UI.
 
 Usage: python tools/profile_head.py mm_video_dedup dedup_ngram_jaccard ...
-       (no args = the top heads by BENCH_detail.json cost)
+       (no args = the top heads by BENCH_detail_c{SPARK_GRAFT_CPUS}.json cost)
 """
 
 from __future__ import annotations
@@ -138,9 +138,11 @@ def parse_event_log(log_dir: str) -> list[dict]:
 
 
 def _top_heads(n: int = 5) -> list[str]:
-    """The ``n`` heads with the largest warm median in BENCH_detail.json."""
+    """The ``n`` heads with the largest warm median in the bench detail
+    of the current core count, ``BENCH_detail_c{SPARK_GRAFT_CPUS}.json``."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "BENCH_detail.json")) as fh:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    with open(os.path.join(root, f"BENCH_detail_c{cpus}.json")) as fh:
         warm = json.load(fh)["queries"]
     return sorted(warm, key=warm.get, reverse=True)[:n]
 
