@@ -22,7 +22,7 @@ Layout:
   database.py   — OxidSQL-parity SQL facade (CREATE/INSERT/SELECT/DML/EXPLAIN)
   statistics.py — sample-based selectivity, partial-match fallback, and a
                   delete-capable Counting-HLL (reference §4 twins)
-  versioned.py  — snapshot/manifest tables (time travel, MERGE, vacuum)
+  versioned.py  — manifest-versioned tables (time travel, MERGE, vacuum)
   sinks.py      — format writers, bucketed/partitioned layout, compaction
   pipeline.py   — end-to-end training-corpus composition
   plans/        — plan introspection (pushdown/join/exchange summary)

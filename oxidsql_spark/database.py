@@ -761,34 +761,18 @@ class OxidSparkDatabase:
 
     def _optimize(self, m: "re.Match[str]") -> DataFrame:
         """OPTIMIZE t [ZORDER BY (c1, c2)] — Delta's maintenance verb
-        over the versioned backend: rewrite the CURRENT snapshot's
-        content compacted to ~128 MB files (and Morton-clustered when
-        ZORDER BY is given) as the NEXT version.  Content is untouched
-        (stats stay valid, time travel keeps the old layout), the
-        _SUCCESS marker is the commit, and concurrent readers of prior
-        versions never see a half-rewrite — the facade twin of
-        ``sinks.optimize_zordered``.  Returns one metrics row."""
-        import math
-
-        from .sinks import write_zordered
+        over the versioned backend: ``sinks.optimize`` rewrites the
+        CURRENT version's content compacted to ~128 MB files (and
+        Morton-clustered when ZORDER BY is given) as the NEXT version.
+        Content is untouched (stats stay valid, time travel keeps the
+        old layout) and concurrent readers of prior versions never see
+        a half-rewrite.  Returns one metrics row."""
+        from .sinks import optimize
 
         name = m.group(1).lower()
         vt = self._require_versioned(name)
         zcols = [c.strip() for c in m.group(2).split(",")] if m.group(2) else []
-        df = vt.read()
-        cur = vt._vdir(vt.latest_version())
-        nbytes = sum(
-            e.stat().st_size
-            for e in os.scandir(cur)
-            if e.name.endswith(".parquet")
-        )
-        n_files = max(1, math.ceil(nbytes / (128 * 1024 * 1024)))
-        next_v = vt.latest_version() + 1
-        out = vt._vdir(next_v)
-        if zcols:
-            write_zordered(df, out, *zcols, n_files=n_files, mode="errorifexists")
-        else:
-            df.repartition(n_files).write.mode("errorifexists").parquet(out)
+        next_v, n_files = optimize(self.spark, vt.path, *zcols)
         live = vt.read()
         live.createOrReplaceTempView(name)
         self._view_base[name] = live
@@ -1239,10 +1223,10 @@ class OxidSparkDatabase:
 
     def _describe_history(self, name: str) -> DataFrame:
         """DESCRIBE HISTORY t (Delta's spelling) for a durable versioned
-        table: one row per committed snapshot — version, file count,
-        byte size, and commit time (the _SUCCESS marker's mtime, i.e.
-        the moment the snapshot became visible).  The audit surface for
-        the snapshot model SHOW VERSIONS only lists ids for."""
+        table: one row per committed version — version, file count,
+        byte size, and commit time (the manifest's mtime, i.e. the
+        moment the version became visible).  The audit surface for
+        the version model SHOW VERSIONS only lists ids for."""
         import datetime as _dt
 
         if name in self._matviews:
@@ -1253,20 +1237,10 @@ class OxidSparkDatabase:
             raise AnalyzerError(f"'{name}' is not a durable versioned table")
         else:
             vt = self._vt(name)
-        rows = []
-        for v in vt.versions():
-            vdir = vt._vdir(v)
-            files = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
-            nbytes = sum(os.path.getsize(os.path.join(vdir, f)) for f in files)
-            ts = os.path.getmtime(os.path.join(vdir, "_SUCCESS"))
-            rows.append(
-                (
-                    v,
-                    len(files),
-                    nbytes,
-                    _dt.datetime.fromtimestamp(ts).isoformat(timespec="seconds"),
-                )
-            )
+        rows = [
+            (v, n, nbytes, _dt.datetime.fromtimestamp(ts).isoformat(timespec="seconds"))
+            for v, n, nbytes, ts in vt.history()
+        ]
         return local_rows_df(
             self.spark,
             rows,
@@ -1485,6 +1459,7 @@ class OxidSparkDatabase:
         self._persist_schema(name)
         self._commit(name, empty)
         self._new_stats(name)
+        self._save_stats(name)  # a reopen restores it instead of rescanning
         return None
 
     def _alter_add_column(self, name: str, col_src: str) -> None:

@@ -17,9 +17,8 @@ Design:
   state, re-aggregate by key — cost bounded by ``|delta| + |groups|``,
   never by the base table;
 * state lives in a ``versioned.VersionedTable``: every refresh commits
-  a new snapshot (``_SUCCESS``-marker protocol — object-store safe, no
-  renames), readers are never torn, and ``history()``/time travel come
-  for free;
+  a new version (one manifest file — object-store safe, no renames),
+  readers are never torn, and ``history()``/time travel come for free;
 * the contract is APPEND-ONLY deltas.  ``sum``/``cnt`` could absorb
   retractions, but ``min``/``max`` cannot (dropping the current min
   needs the base data) — the standard IMV limitation; deletes require
@@ -129,7 +128,7 @@ class AggView:
         return self._store.versions()
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop refresh snapshots beyond ``keep_last`` (same retention
+        """Drop refresh versions beyond ``keep_last`` (same retention
         semantics as the base `VersionedTable`)."""
         return self._store.vacuum(keep_last=keep_last)
 

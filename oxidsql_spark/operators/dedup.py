@@ -1785,17 +1785,15 @@ def merge_fingerprint_bloom(
     (asserted word-for-word in tests); cost is one bounded aggregation
     over old-words ∪ batch-words (≤ n_bits/64 + K·|batch| rows).
 
-    Commit is the manifest-snapshot protocol (``versioned.
-    SnapshotArtifact``): the merged word table lands in the next ``_v``
-    snapshot dir and that write job's ``_SUCCESS`` marker is the commit
-    — one object PUT, safe on object stores where a directory rename is
-    copy+delete; the previous filter stays fully readable through any
-    crash.  Read the live filter back with
-    ``versioned.read_artifact(spark, bloom_path)``."""
-    from ..versioned import SnapshotArtifact
+    The merged word table commits through ``versioned.VersionedTable.
+    write`` as the next version — one manifest file, never a directory
+    rename — so the previous filter stays fully readable through any
+    crash, and vacuum then keeps the newest two versions.  Read the
+    live filter back with ``versioned.read_artifact(spark,
+    bloom_path)``."""
+    from ..versioned import VersionedTable, read_artifact
 
-    art = SnapshotArtifact(spark, bloom_path)
-    words = art.read()
+    words = read_artifact(spark, bloom_path)
     n_bits = int(words.select("n_bits").first()["n_bits"])
     merged = (
         words.select("w", "m")
@@ -1804,8 +1802,9 @@ def merge_fingerprint_bloom(
         .agg(F.expr("bit_or(m)").alias("m"))
         .withColumn("n_bits", F.lit(n_bits).cast("bigint"))
     )
-    merged.write.mode("errorifexists").parquet(art.next_dir())
-    art.finalize()
+    vt = VersionedTable(spark, bloom_path)
+    vt.write(merged)
+    vt.vacuum(keep_last=2)
 
 
 def bloom_probe(fps: DataFrame, words: DataFrame, n_bits: int) -> DataFrame:

@@ -472,7 +472,7 @@ class IncrementalClusters:
     4. commit: remap the touched old labels, append the batch labels,
        append the batch's shingle rows to the index.
 
-    The labels table is a PartitionedVersionedTable bucketed by
+    The labels table is a VersionedTable partitioned by
     pmod(xxhash64(cluster_id), 64) — the Scd2History discipline — and
     every row is stored in its CURRENT cluster's bucket (the admit
     commit moves relabeled rows), so an admission reads only the
@@ -506,13 +506,13 @@ class IncrementalClusters:
     def __init__(self, spark: SparkSession, path: str):
         import os
 
-        from ..versioned import PartitionedVersionedTable
+        from ..versioned import VersionedTable
 
         self.spark = spark
         self.path = path
         self.index_path = os.path.join(path, "shingle_index")
         os.makedirs(self.index_path, exist_ok=True)
-        self._labels = PartitionedVersionedTable(
+        self._labels = VersionedTable(
             spark, os.path.join(path, "labels"), "bkt"
         )
         # Secondary label layout bucketed by DOC id (the primary is
@@ -520,7 +520,7 @@ class IncrementalClusters:
         # reads only the probed old ids' doc-buckets instead of the
         # whole labels table.  dbkt is a pure function of doc_id, so
         # its upserts skip the holding scan (partition_from_key).
-        self._by_doc = PartitionedVersionedTable(
+        self._by_doc = VersionedTable(
             spark, os.path.join(path, "labels_by_doc"), "dbkt"
         )
         self._by_doc_marker = os.path.join(path, "labels_by_doc", "_synced.json")
@@ -570,7 +570,7 @@ class IncrementalClusters:
         read; the O(corpus) rebuild is crash-recovery only."""
         latest = self._latest()
         if latest and self._by_doc_version() != latest:
-            self._by_doc.write_full(
+            self._by_doc.write(
                 self._labels.read()
                 .select("doc_id", "cluster_id")
                 .withColumn("dbkt", self._dbkt("doc_id"))
@@ -625,7 +625,7 @@ class IncrementalClusters:
         primary)."""
         next_v = self._latest() + 1
         self._write_segment(next_v, docs)
-        v = self._labels.write_full(
+        v = self._labels.write(
             cluster_documents(docs).withColumn("bkt", self._bkt("cluster_id"))
         )
         self._sync_by_doc()

@@ -38,10 +38,9 @@ from ..sources import fresh_dir, table
     """,
 )
 def compact_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-trip through small-file compaction under the
-    manifest-snapshot commit protocol (r7: ``sinks.compact`` commits a
-    new ``SnapshotArtifact`` snapshot via its _SUCCESS marker — no
-    renames): shatter orders into 48 small files, compact, read the
+    """Round-trip through small-file compaction under the manifest
+    commit protocol (``sinks.compact`` commits the rewrite as the next
+    ``versioned.VersionedTable`` version — no renames): shatter orders into 48 small files, compact, read the
     artifact back through the resolver, and aggregate — integer-exact,
     so the oracle (reading the original table) proves the
     rewrite-and-commit path is content-preserving end-to-end under the

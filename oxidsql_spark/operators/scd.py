@@ -140,8 +140,8 @@ _SCD_BUCKETS = 64  # default key-hash buckets for the partitioned history
 
 class Scd2History:
     """Partition-scoped SCD Type-2 history — the 100 TB maintenance
-    shape.  The history lives in a `versioned.PartitionedVersionedTable`
-    bucketed by ``pmod(xxhash64(key), n_buckets)``: a micro-batch merge
+    shape.  The history lives in a `versioned.VersionedTable`
+    partitioned by ``pmod(xxhash64(key), n_buckets)``: a micro-batch merge
     rewrites ONLY the buckets containing affected keys (closed intervals
     of every other key carry over by manifest reference, zero I/O), so
     per-batch commit cost is O(touched buckets), never O(history).  The
@@ -168,7 +168,7 @@ class Scd2History:
         tiebreak: list[str] | None = None,
         n_buckets: int = _SCD_BUCKETS,
     ):
-        from ..versioned import PartitionedVersionedTable
+        from ..versioned import VersionedTable
 
         self.spark = spark
         self.key = key
@@ -176,7 +176,7 @@ class Scd2History:
         self.ts_col = ts_col
         self.tiebreak = list(tiebreak or [])
         self.n_buckets = n_buckets
-        self._pvt = PartitionedVersionedTable(spark, path, self._KB)
+        self._pvt = VersionedTable(spark, path, self._KB)
 
     def _bucket(self, col: F.Column) -> F.Column:
         return F.pmod(F.xxhash64(col), F.lit(self.n_buckets))
@@ -194,7 +194,7 @@ class Scd2History:
             hist = scd2_build(
                 batch, self.key, self.attrs, self.ts_col, tiebreak=self.tiebreak
             )
-            self._pvt.write_full(self._with_bucket(hist))
+            self._pvt.write(self._with_bucket(hist))
             return
         # ≤ n_buckets values — a bounded collect, independent of data size
         buckets = [

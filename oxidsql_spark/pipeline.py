@@ -283,7 +283,7 @@ def admit_corpus_batch(
     from .versioned import read_artifact
 
     # resolver, not a plain read: after the first merge the filter lives
-    # in SnapshotArtifact's manifest-committed snapshot dirs
+    # in a manifest-committed VersionedTable
     words = read_artifact(spark, bloom_path)
     fresh = dedup_incremental_bloom(spark, new_docs, fp_path, words).filter(
         F.size(tokens(F.col("text"))) >= min_tokens

@@ -68,9 +68,10 @@ def get_spark(app_name: str = "oxidsql-spark", cpus: int | str | None = None) ->
     # truncated" WARN per release — informational here (the scope
     # contract already declares released results consumed), so keep it
     # out of bench/driver logs.
-    # Versioned snapshots live in `_v0000000N/` dirs; Spark's hidden-path
-    # rule matches the `_` prefix and WARNs "All paths were ignored" on
-    # every snapshot read, although the read does use the path.
+    # Side artifacts such as `sinks.write_stats_manifest`'s live in
+    # `_`-prefixed dirs; Spark's hidden-path rule matches the prefix and
+    # WARNs "All paths were ignored" on every read of one, although the
+    # read does use the path.
     try:
         jvm = spark.sparkContext._jvm
         for logger in (

@@ -15,10 +15,15 @@ wrapped with the layouts that matter at 100 TB:
 * ``write_sorted`` / ``write_zordered`` — range-clustered and Morton-
   clustered file layouts so parquet min/max statistics skip files on
   one / several predicate columns;
+* ``optimize`` / ``compact`` — the one maintenance rewrite (compaction,
+  optionally z-ordered) committed as the next version of a
+  ``versioned.VersionedTable``;
 * ``show`` / ``to_rows`` — the Print twin.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -124,62 +129,53 @@ def write_parquet_bloom(
     w.parquet(path)
 
 
-def compact(
+def optimize(
     spark: SparkSession,
     path: str,
+    *z_cols: str,
     target_file_mb: int = 128,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into files of
-    ~target_file_mb. Streaming sinks and fine-grained partition writes
-    leave thousands of small files; at 100 TB each file under ~100 MB
-    costs a task launch and a footer read per scan. Returns the new file
-    count.
+) -> tuple[int, int]:
+    """Table maintenance in one rewrite — the plain-parquet twin of
+    Delta/Iceberg ``OPTIMIZE [ZORDER BY]``: compact the current content
+    of ``path`` (plain files or a ``versioned.VersionedTable``) into
+    ~target_file_mb files AND, given ``z_cols``, restore Morton
+    clustering on them in the same pass (streaming sinks and
+    incremental appends both fragment files and destroy clustering;
+    fixing them separately would scan the data twice).  At 100 TB each
+    file under ~100 MB costs a task launch and a footer read per scan.
 
-    Commit is the manifest-snapshot protocol (``versioned.SnapshotArtifact``),
-    not a directory rename: the rewrite lands in the next ``_v`` snapshot
-    dir, whose ``_SUCCESS`` marker (one object PUT) makes it live —
-    object-store-safe, where rename is copy+delete with a visible
-    half-state.  The superseded copy is removed only post-commit, so a
-    crash at ANY point leaves the previous content fully readable via
-    ``versioned.read_artifact`` (which is also how compacted directories
-    must be read back)."""
+    The rewrite commits through ``VersionedTable.write`` as the next
+    version — one manifest, never a directory rename — so readers of
+    earlier versions never see a half-rewrite.  Content is untouched.
+    Returns ``(version, n_files)``."""
     import math
+    from urllib.parse import unquote, urlparse
 
-    from .versioned import SnapshotArtifact
+    from .versioned import VersionedTable, read_artifact
 
-    art = SnapshotArtifact(spark, path)
-    n_files = max(1, math.ceil(art.data_bytes() / (target_file_mb * 1024 * 1024)))
-    art.read().repartition(n_files).write.mode("errorifexists").parquet(art.next_dir())
-    art.finalize()
-    return n_files
+    df = read_artifact(spark, path)
+    nbytes = sum(os.path.getsize(unquote(urlparse(f).path)) for f in df.inputFiles())
+    n_files = max(1, math.ceil(nbytes / (target_file_mb * 1024 * 1024)))
+    out = zorder(df, *z_cols, n_files=n_files) if z_cols else df.repartition(n_files)
+    return VersionedTable(spark, path).write(out), n_files
 
 
-def optimize_zordered(
+def compact(
     spark: SparkSession,
     path: str,
     *z_cols: str,
     target_file_mb: int = 128,
 ) -> int:
-    """Table maintenance in one rewrite — the plain-parquet twin of
-    Delta/Iceberg ``OPTIMIZE ... ZORDER BY``: compact a directory's
-    small files to ~target_file_mb AND restore Morton clustering on
-    ``z_cols`` in the same pass (streaming sinks and incremental
-    appends both fragment files and destroy clustering; fixing them
-    separately would scan the data twice).  Returns the new file count.
+    """``optimize`` for a maintenance artifact, then retention: vacuum
+    keeps the newest two versions and removes the superseded files
+    (the initial build's plain files included).  A crash at ANY point
+    leaves the artifact fully readable through
+    ``versioned.read_artifact`` — which is also how compacted
+    directories must be read back.  Returns the new file count."""
+    from .versioned import VersionedTable
 
-    Commit discipline is ``compact``'s: the rewrite lands in the next
-    ``SnapshotArtifact`` snapshot dir and the ``_SUCCESS`` marker is the
-    commit — no renames, so the artifact is never missing or
-    half-written on object storage either; read it back with
-    ``versioned.read_artifact``."""
-    import math
-
-    from .versioned import SnapshotArtifact
-
-    art = SnapshotArtifact(spark, path)
-    n_files = max(1, math.ceil(art.data_bytes() / (target_file_mb * 1024 * 1024)))
-    write_zordered(art.read(), art.next_dir(), *z_cols, n_files=n_files, mode="errorifexists")
-    art.finalize()
+    _, n_files = optimize(spark, path, *z_cols, target_file_mb=target_file_mb)
+    VersionedTable(spark, path).vacuum(keep_last=2)
     return n_files
 
 
@@ -245,7 +241,7 @@ def scan_skipping(spark: SparkSession, path: str, col: str, lo, hi):
     satisfy a range predicate, so correctness only needs the residual
     filter.  Stale manifests are detected (file set mismatch) and
     rejected — at 100 TB manifest+data advance together under one
-    snapshot commit (``versioned.SnapshotArtifact``)."""
+    version commit (``versioned.VersionedTable``)."""
     from pyspark.sql import functions as F
 
     manifest = spark.read.parquet(path + "/_stats_manifest")
@@ -255,14 +251,12 @@ def scan_skipping(spark: SparkSession, path: str, col: str, lo, hi):
     listed = {
         r["_file"].removeprefix("file://").removeprefix("file:") for r in rows
     }
-    import os as _os
-
     actual = {
-        _os.path.join(path, f)
-        for f in _os.listdir(path)
+        os.path.join(path, f)
+        for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     }
-    if {_os.path.abspath(p) for p in listed} != {_os.path.abspath(p) for p in actual}:
+    if {os.path.abspath(p) for p in listed} != {os.path.abspath(p) for p in actual}:
         raise ValueError(
             f"stats manifest at {path}/_stats_manifest is stale "
             "(file set changed since write_stats_manifest)"
@@ -306,8 +300,14 @@ def write_zordered(
     n_files: int | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Multi-dimensional data-skipping layout: Z-order (Morton)
-    clustering on up to 3 columns.
+    """Write ``zorder(df, *z_cols, n_files=n_files)`` to ``path``."""
+    zorder(df, *z_cols, n_files=n_files).write.mode(mode).parquet(path)
+
+
+def zorder(df: DataFrame, *z_cols: str, n_files: int | None = None) -> DataFrame:
+    """Multi-dimensional data-skipping layout: ``df`` arranged in
+    ``n_files`` partitions Z-order (Morton) clustered on up to 3
+    columns, ready for any writer.
 
     ``write_sorted`` makes ONE column's file min/max ranges disjoint;
     a predicate on any other column still touches every file.  Z-order
@@ -328,7 +328,7 @@ def write_zordered(
     from pyspark.sql import functions as F
 
     if not 1 <= len(z_cols) <= 3:
-        raise ValueError("write_zordered supports 1-3 z columns")
+        raise ValueError("zorder supports 1-3 z columns")
     k = len(z_cols)
     bits = 16
     stats = df.agg(
@@ -350,10 +350,9 @@ def write_zordered(
             )
     zk = "__zorder_key"
     n = n_files or df.rdd.getNumPartitions()
-    out = (
+    return (
         df.withColumn(zk, z)
         .repartitionByRange(n, F.col(zk))
         .sortWithinPartitions(zk)
         .drop(zk)
     )
-    out.write.mode(mode).parquet(path)

@@ -523,7 +523,7 @@ def stream_upsert_versioned(
     spark: SparkSession, source_dir: str, table_path: str, checkpoint_dir: str
 ):
     """CDC landing pattern: the update-mode per-user spend stream upserts
-    into a snapshot-versioned table via ``foreachBatch`` — each
+    into a manifest-versioned table via ``foreachBatch`` — each
     micro-batch is one atomic MERGE commit (``VersionedTable.upsert``),
     so downstream readers only ever see whole batches, and the commit
     history IS the CDC log (time travel = replay to any batch boundary).

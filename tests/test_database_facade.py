@@ -516,9 +516,9 @@ def test_explain_analyze_reports_the_executed_join_strategy(db, spark):
 
 
 def test_describe_history_versions(spark, tmp_path):
-    """DESCRIBE HISTORY lists every committed snapshot with file count,
-    bytes, and the commit (_SUCCESS) timestamp — the audit surface for
-    the snapshot model."""
+    """DESCRIBE HISTORY lists every committed version with file count,
+    bytes, and the commit (manifest) timestamp — the audit surface for
+    the versioned model."""
     d = str(tmp_path / "hist_db")
     db = OxidSparkDatabase(spark, storage_dir=d)
     db.query("CREATE TABLE h (id INTEGER)")
@@ -673,8 +673,6 @@ def test_optimize_and_vacuum_sql(spark, tmp_path):
     versioned backend: content identical after the rewrite, layout
     committed as a NEW version (old versions still time-travelable
     until VACUUM drops them), metrics rows returned."""
-    import glob
-
     d = str(tmp_path / "opt_db")
     db = OxidSparkDatabase(spark, storage_dir=d)
     db.query("CREATE TABLE m (a INT, b INT)")
@@ -689,8 +687,7 @@ def test_optimize_and_vacuum_sql(spark, tmp_path):
     after = sorted((r.a, r.b) for r in db.query("SELECT a, b FROM m").collect())
     assert after == before
     # compacted to the metrics row's file count
-    vdir = f"{d}/m/_v{res.version:08d}"
-    assert len(glob.glob(f"{vdir}/*.parquet")) == res.n_files
+    assert len(db._vt("m").files(res.version)) == res.n_files
 
     # plain OPTIMIZE (no zorder) also commits a version
     res2 = db.query("OPTIMIZE m").collect()[0]

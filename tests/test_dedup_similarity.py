@@ -1188,7 +1188,7 @@ def test_incremental_clusters_rewrites_only_touched_buckets(spark, tmp_path):
     )
     state = IncrementalClusters(spark, str(tmp_path / "bstate"))
     state.build(corpus)
-    m1 = state._labels._manifest(state._latest())
+    m1 = state._labels._manifest(state._latest())["groups"]
 
     # one new doc near-dups exactly one existing cluster (doc 100)
     batch = spark.createDataFrame(
@@ -1196,7 +1196,7 @@ def test_incremental_clusters_rewrites_only_touched_buckets(spark, tmp_path):
         "doc_id bigint, text string",
     )
     state.admit(batch)
-    m2 = state._labels._manifest(state._latest())
+    m2 = state._labels._manifest(state._latest())["groups"]
 
     changed = {k for k in m1 if m2.get(k) != m1[k]} | (set(m2) - set(m1))
     expected = {
@@ -1220,7 +1220,7 @@ def test_incremental_clusters_admit_reads_no_full_labels(spark, tmp_path, monkey
     commit upserts skip the holding scan (extra_touched /
     partition_from_key)."""
     from oxidsql_spark.operators.graph import IncrementalClusters
-    from oxidsql_spark.versioned import PartitionedVersionedTable
+    from oxidsql_spark.versioned import VersionedTable
 
     corpus = spark.createDataFrame(
         [(i, " ".join(f"c{i}w{j}" for j in range(12))) for i in range(100, 140)],
@@ -1230,13 +1230,13 @@ def test_incremental_clusters_admit_reads_no_full_labels(spark, tmp_path, monkey
     state.build(corpus)
 
     full_reads = []
-    orig_read = PartitionedVersionedTable.read
+    orig_read = VersionedTable.read
 
     def spy(self, version=None):
         full_reads.append(self.path)
         return orig_read(self, version)
 
-    monkeypatch.setattr(PartitionedVersionedTable, "read", spy)
+    monkeypatch.setattr(VersionedTable, "read", spy)
     batch = spark.createDataFrame(
         [(50, " ".join(f"c100w{j}" for j in range(12)) + " extra")],
         "doc_id bigint, text string",

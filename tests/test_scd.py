@@ -138,10 +138,10 @@ def test_scd2_partitioned_single_key_rewrites_one_bucket(spark, tmp_path):
     )
     seed_rows = [(k, "a", t(1), 1) for k in range(40)]
     hist.merge(_mk(spark, seed_rows))
-    m1 = hist._pvt._manifest(1)
+    m1 = hist._pvt._manifest(1)["groups"]
     assert len(m1) > 1, "seed must span multiple buckets for the assertion to bite"
     hist.merge(_mk(spark, [(7, "b", t(2), 2)]))
-    m2 = hist._pvt._manifest(2)
+    m2 = hist._pvt._manifest(2)["groups"]
     changed = {b for b in m2 if m1.get(b) != m2[b]} | (set(m1) - set(m2))
     assert len(changed) == 1, f"single-key batch rewrote buckets {sorted(changed)}"
     # and the merge itself is correct: key 7 now has a closed + an open interval

@@ -108,48 +108,46 @@ def test_compact_small_files(spark, sf_dir, tmp_path):
     before = len(glob.glob(f"{path}/*.parquet"))
     assert before >= 64
     n = sinks.compact(spark, path, target_file_mb=128)
-    from oxidsql_spark.versioned import SnapshotArtifact
+    from oxidsql_spark.versioned import VersionedTable, read_artifact
 
-    art = SnapshotArtifact(spark, path)
-    after = len(glob.glob(f"{art.data_dir()}/*.parquet"))
+    after = len(VersionedTable(spark, path).files())
     assert after == n < before
-    got = art.read()
+    got = read_artifact(spark, path)
     assert got.count() == li.count()
     assert sorted(got.columns) == sorted(li.columns)
 
 
 def test_compact_recovers_from_crashed_leftover(spark, sf_dir, tmp_path):
-    """Debris from crashed maintenance — a legacy `.__old__` sibling
-    from the old rename-swap scheme AND an uncommitted snapshot dir
-    (no _SUCCESS) — must neither wedge a future compact nor leak into
+    """Debris from crashed maintenance — a data dir no manifest
+    references — must neither wedge a future compact nor leak into
     reads; the committed content wins and the debris is swept."""
     import os
 
     from oxidsql_spark import sinks
     from oxidsql_spark.sources import table
-    from oxidsql_spark.versioned import read_artifact
+    from oxidsql_spark.versioned import VersionedTable, read_artifact
 
     path = str(tmp_path / "wedged")
     table(spark, sf_dir, "region").write.parquet(path)
-    os.makedirs(path + ".__old__/junk")  # legacy rename-swap debris
-    os.makedirs(path + "/_v00000001/junk")  # crashed uncommitted rewrite
+    junk = os.path.join(VersionedTable(spark, path)._vdir(1), "junk")
+    os.makedirs(junk)  # crashed uncommitted rewrite
+    assert read_artifact(spark, path).count() == 5
     n = sinks.compact(spark, path)
     assert n >= 1
-    assert not os.path.exists(path + ".__old__")
-    assert not os.path.exists(path + "/_v00000001")
+    assert not os.path.exists(junk)
     assert read_artifact(spark, path).count() == 5
 
 
 def test_maintenance_commit_is_crash_safe_without_renames(spark, sf_dir, tmp_path):
-    """The object-store contract of the maintenance family
-    (compact / optimize_zordered / merge_fingerprint_bloom): commit is
-    the _SUCCESS marker of a NEW snapshot dir — no rename anywhere — so
-    at EVERY crash point the artifact reads back complete:
+    """The object-store contract of the maintenance family (compact and
+    merge_fingerprint_bloom): commit is ONE manifest file beside a fully
+    written data dir — no directory rename anywhere — so at EVERY crash
+    point the artifact reads back complete:
 
-    1. crash mid-rewrite (snapshot written, no _SUCCESS) → readers see
+    1. crash mid-rewrite (data dir written, no manifest) → readers see
        exactly the old content; the debris doesn't block the next run;
-    2. crash after commit, before retention cleanup → readers see
-       exactly the new content (stale copy still on disk is invisible);
+    2. crash after commit, in the vacuum step → readers see exactly the
+       new content (the stale plain files still on disk are invisible);
     3. the next maintenance run sweeps all debris and stays correct."""
     import glob
     import os
@@ -158,35 +156,34 @@ def test_maintenance_commit_is_crash_safe_without_renames(spark, sf_dir, tmp_pat
 
     from oxidsql_spark import sinks
     from oxidsql_spark.sources import table
-    from oxidsql_spark.versioned import SnapshotArtifact, read_artifact
+    from oxidsql_spark.versioned import VersionedTable, read_artifact
 
     path = str(tmp_path / "crashy")
     nat = table(spark, sf_dir, "nation")
     nat.repartition(8).write.parquet(path)
     want = sorted(map(tuple, nat.collect()))
 
-    # (1) mid-rewrite crash: full parquet content but NO _SUCCESS marker
-    art = SnapshotArtifact(spark, path)
-    debris = art.next_dir()
+    # (1) mid-rewrite crash: parquet content in the next data dir, NO manifest
+    vt = VersionedTable(spark, path)
+    debris = vt._vdir(1)
     nat.limit(3).write.parquet(debris)
-    os.remove(os.path.join(debris, "_SUCCESS"))
     assert sorted(map(tuple, read_artifact(spark, path).collect())) == want
 
-    # (2) commit lands, retention cleanup crashes before running
-    real_finalize = SnapshotArtifact.finalize
+    # (2) commit lands, the vacuum step crashes before running
+    real_vacuum = VersionedTable.vacuum
 
-    def exploding_finalize(self, keep_last=2):
+    def exploding_vacuum(self, keep_last=2):
         raise RuntimeError("injected crash between commit and cleanup")
 
-    SnapshotArtifact.finalize = exploding_finalize
+    VersionedTable.vacuum = exploding_vacuum
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             sinks.compact(spark, path, target_file_mb=128)
     finally:
-        SnapshotArtifact.finalize = real_finalize
+        VersionedTable.vacuum = real_vacuum
     # the commit already happened: new content is live, old files still
     # on disk are invisible to the resolver
-    assert SnapshotArtifact(spark, path)._vt.latest_version() is not None
+    assert vt.latest_version() == 1
     assert sorted(map(tuple, read_artifact(spark, path).collect())) == want
     assert glob.glob(f"{path}/*.parquet"), "stale plain files should still exist"
 
@@ -194,7 +191,10 @@ def test_maintenance_commit_is_crash_safe_without_renames(spark, sf_dir, tmp_pat
     sinks.compact(spark, path, target_file_mb=128)
     assert sorted(map(tuple, read_artifact(spark, path).collect())) == want
     assert not glob.glob(f"{path}/*.parquet")
-    assert not os.path.exists(debris)
+    # the retry replaced the 3-row debris with a full commit of version 1
+    assert sorted(map(tuple, vt.read(1).collect())) == want
+    live = {os.path.dirname(f) for v in vt.versions() for f in vt.files(v)}
+    assert live == set(glob.glob(f"{path}/_data/*"))
 
 
 def test_parquet_bloom_filter_layout(spark, sf_dir, tmp_path):
@@ -347,15 +347,14 @@ def test_optimize_zordered_compacts_and_reclusters(spark, sf_dir, tmp_path):
     assert len(glob.glob(f"{path}/*.parquet")) >= 40
 
     want = li.orderBy("l_partkey", "l_suppkey", "l_quantity").collect()
-    n = sinks.optimize_zordered(spark, path, "l_partkey", "l_suppkey")
-    from oxidsql_spark.versioned import SnapshotArtifact
+    n = sinks.compact(spark, path, "l_partkey", "l_suppkey")
+    from oxidsql_spark.versioned import VersionedTable, read_artifact
 
-    art = SnapshotArtifact(spark, path)
-    files = glob.glob(f"{art.data_dir()}/*.parquet")
+    files = VersionedTable(spark, path).files()
     assert len(files) == n and n < 40
 
     def mean_span(col):
-        df = art.read()
+        df = read_artifact(spark, path)
         lo, hi = df.agg(F.min(col), F.max(col)).collect()[0]
         per_file = (
             df.groupBy(F.input_file_name())
@@ -366,7 +365,7 @@ def test_optimize_zordered_compacts_and_reclusters(spark, sf_dir, tmp_path):
         return per_file / (hi - lo)
 
     # content identical, clustering restored on both z dimensions
-    got = art.read().orderBy("l_partkey", "l_suppkey", "l_quantity").collect()
+    got = read_artifact(spark, path).orderBy("l_partkey", "l_suppkey", "l_quantity").collect()
     assert got == want
     if n >= 4:  # spans only meaningful with several files
         assert mean_span("l_partkey") < 0.7 and mean_span("l_suppkey") < 0.7

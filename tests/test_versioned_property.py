@@ -1,7 +1,8 @@
 """Property-based check of VersionedTable: a random sequence of
-write / upsert / delete / rollback operations must match an in-memory
-dict model at every step, and time travel must reproduce every recorded
-historical state.
+write / upsert / delete / rollback operations (delete and rollback
+expressed as writes of a filtered / older version) must match an
+in-memory dict model at every step, and time travel must reproduce
+every recorded historical state.
 
 Mirrors the reference's seeded-randomized statistics tests
 (sampling.rs:558-832 discipline: determinism first), applied to the
@@ -55,12 +56,13 @@ def test_versioned_matches_model(spark, tmp_path_factory, ops):
         elif op == "delete_ge":
             from pyspark.sql import functions as F
 
-            vt.delete_where(F.col("v") >= arg)
+            cond = F.col("v") >= arg
+            vt.write(vt.read().filter(~cond.eqNullSafe(True)))
             model = {k: v for k, v in model.items() if v < arg}
         else:  # rollback_latest_minus
             versions = vt.versions()
             target = versions[max(0, len(versions) - 1 - arg)]
-            vt.rollback(target)
+            vt.write(vt.read(target))
             model = dict(history[target])
         history[vt.latest_version()] = dict(model)
         assert _read_model(vt) == model, f"after {op}({arg})"
@@ -95,15 +97,13 @@ _POPS = st.lists(
 )
 @given(ops=_POPS)
 def test_partitioned_versioned_matches_model(spark, tmp_path_factory, ops):
-    """PartitionedVersionedTable upserts (manifest model, only touched
-    partitions advance) must match a dict model keyed by k, and every
-    partition read must equal the model's slice."""
-    from oxidsql_spark.versioned import PartitionedVersionedTable
-
+    """Partitioned VersionedTable upserts (only touched partitions
+    advance) must match a dict model keyed by k, and every partition
+    read must equal the model's slice."""
     path = str(tmp_path_factory.mktemp("pvt_prop"))
-    pvt = PartitionedVersionedTable(spark, path, "part")
+    pvt = VersionedTable(spark, path, "part")
     model = {0: ("a", 0), 1: ("b", 10)}  # k -> (part, v)
-    pvt.write_full(
+    pvt.write(
         spark.createDataFrame(
             [(k, p, v) for k, (p, v) in sorted(model.items())], "k long, part string, v long"
         )
