@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .functions import local_rows_df
+from .versioned import Delta
 
 
 class AnalyzerError(ValueError):
@@ -203,6 +204,24 @@ def _split_top_level(s: str) -> list[str]:
     return parts
 
 
+# Most rows a table may hold for a DELETE or UPDATE to collect its
+# touched rows to the driver: the exact online rowcount bounds them, so
+# the driver never holds more.  Collect plus driver fold matched the
+# aggregation path near this size (SCALE.md, "statement cost follows
+# the delta").
+_DRIVER_ROWS = 25_000
+
+
+@dataclass
+class _Touched:
+    """A DELETE's or UPDATE's touched rows (see ``_touched``)."""
+
+    frame: DataFrame
+    rows: list | None = None  # collected, in table column order
+    extra: list | None = None  # the ``extra`` values of each row
+    files: frozenset | None = None  # manifest paths of the files holding them
+
+
 class OxidSparkDatabase:
     """The reference's OxidSQLDatabase (src/database.rs:36-45) rebuilt on
     a SparkSession: one ``query()`` entry point that parses/validates the
@@ -325,18 +344,63 @@ class OxidSparkDatabase:
         if name in self._stats:
             self._stats[name].rebuild(self.spark.table(name))
 
-    def _commit(self, name: str, df: DataFrame) -> None:
+    def _commit(self, name: str, content: DataFrame | Delta) -> None:
         """Publish a table's new content: durable snapshot when backed by
         storage (readers of older versions are unaffected), else a temp
-        view swap. Commits reset the single-row insert buffer: the
+        view swap — a ``Delta`` (durable tables only) writes just the
+        changed rows.  Commits reset the single-row insert buffer: the
         committed plan becomes the new base the buffer unions onto."""
         if self.storage_dir:
             vt = self._vt(name)
-            vt.write(df)
-            df = vt.read()
-        df.createOrReplaceTempView(name)
-        self._view_base[name] = df
+            vt.write(content)
+            content = vt.read()
+        content.createOrReplaceTempView(name)
+        self._view_base[name] = content
         self._row_buf[name] = []
+
+    def _append(self, name: str, new: DataFrame) -> None:
+        """Publish the table's rows followed by `new`: one Spark write of
+        only the new rows when durable, a view union in memory."""
+        self._commit(
+            name, Delta(add=new) if self.storage_dir else self.spark.table(name).unionByName(new)
+        )
+
+    def _touched(self, name: str, cond: str, extra: tuple = ()) -> _Touched:
+        """The rows a DELETE or UPDATE condition holds TRUE for, found by
+        ONE job.  While the table's exact online rowcount is at most
+        ``_DRIVER_ROWS``, that job collects them (table columns, then the
+        ``extra`` Columns) with the file each sits in; above it only the
+        files are collected, and the rows stay a frame.  In memory there
+        are no files."""
+        durable = bool(self.storage_dir)
+        vt = self._vt(name) if durable else None
+        base = vt.read() if durable else self.spark.table(name)
+        frame = base.alias(name).filter(f"coalesce(({cond}), false)")
+        if durable and not vt.files():  # an empty version: no file, no row
+            return _Touched(frame, [], [], frozenset())
+        path = [F.col("_metadata.file_path")] if durable else []
+        if self._stats[name].rowcount > _DRIVER_ROWS:
+            hit = _Touched(frame)
+            paths = [r[0] for r in frame.select(*path).distinct().collect()] if durable else []
+        else:
+            n, got = len(base.columns), frame.select("*", *extra, *path).collect()
+            hit = _Touched(
+                frame, [tuple(r[:n]) for r in got], [tuple(r[n : n + len(extra)]) for r in got]
+            )
+            paths = [r[-1] for r in got] if durable else []
+        if durable:
+            hit.files = frozenset(map(vt.relpath, paths))
+        return hit
+
+    def _rewrite(self, name: str, hit: _Touched, fn) -> None:
+        """Commit `fn`, a DELETE's or UPDATE's row rewrite: durable, over
+        only the files holding a touched row — every other file carries
+        over by reference — in memory, over the whole view."""
+        if not self.storage_dir:
+            self._commit(name, fn(self.spark.table(name)))
+            return
+        add = fn(self._vt(name).read_files(sorted(hit.files)).alias(name)) if hit.files else None
+        self._commit(name, Delta(add=add, drop=hit.files))
 
     # -- statement router (the reference's parse → analyze → plan → run) --
 
@@ -640,7 +704,7 @@ class OxidSparkDatabase:
         if viol is not None:
             return viol  # table untouched; the report IS the result
         n = aligned.count()
-        self._commit(name, cur.unionByName(aligned))
+        self._append(name, aligned)
         if name in self._stats:
             self._stats[name].update(aligned)
             self._save_stats(name)
@@ -742,7 +806,7 @@ class OxidSparkDatabase:
             n_dead = self.spark.read.parquet(dl_path).count()
             n_good = good.count()
             if n_good:
-                self._commit(name, cur.unionByName(good))
+                self._append(name, good)
                 if name in self._stats:
                     self._stats[name].update(good)
                     self._save_stats(name)
@@ -1548,8 +1612,8 @@ class OxidSparkDatabase:
             rows.append(tuple(vals.get(c.name) for c in specs))
         schema = T.StructType([T.StructField(c.name, c.spark_type, True) for c in specs])
         if self.storage_dir:
-            new = local_rows_df(self.spark, rows, schema)
-            self._commit(name, self.spark.table(name).union(new))
+            # one parquet file written on the driver: no Spark job
+            self._commit(name, Delta(add=rows))
         else:
             # buffered path: the view is always base ∪ one local batch of
             # every buffered row — the plan stays 2 nodes deep no matter
@@ -1636,7 +1700,7 @@ class OxidSparkDatabase:
             )
             if viol is not None:
                 return viol  # table untouched; the report IS the result
-        self._commit(name, self.spark.table(name).union(cast))
+        self._append(name, cast)
         self._stats[name].update(cast)
         self._save_stats(name)
         return None
@@ -1644,31 +1708,40 @@ class OxidSparkDatabase:
     # -- UPDATE / DELETE / DROP (reference TODOs, README.md:51) ---------
     #
     # Plain-parquet Spark has no in-place mutation; the portable pattern
-    # is rewrite: recompute the surviving/updated rows declaratively and
-    # swap the view. At 100 TB the same shape becomes a partition-scoped
-    # overwrite (dynamic partitionOverwriteMode) or a Delta/Iceberg
-    # MERGE — the SQL surface stays identical.
+    # is rewrite.  A statement pays for its delta, not its table: one job
+    # finds the touched rows and the files holding them, the statistics
+    # fold those rows, and one write job rewrites only those files —
+    # every other file of a durable table carries over by reference.
 
     def _delete(self, stmt: str) -> None:
         m = _DELETE_RE.match(stmt)
         name, where = m.group(1).lower(), m.group(2)
         if name not in self._tables:
             raise AnalyzerError(f"unknown table '{name}'")
-        df = self.spark.table(name)
+        if not where:  # every row goes: no row needs reading
+            self._stats[name].rebuild([])
+            if self.storage_dir:
+                vt = self._vt(name)
+                self._commit(name, Delta(drop=frozenset(map(vt.relpath, vt.files()))))
+            else:
+                self._commit(name, self.spark.table(name).limit(0))
+            self._save_stats(name)
+            return None
 
         # standard DELETE: only rows where the predicate is TRUE go away;
         # NULL-predicate rows survive.  The same rewrite keeps the
         # table's rows and the statistics sample's.
         def keep(rows: DataFrame) -> DataFrame:
-            return rows.filter(f"NOT coalesce(({where}), false)") if where else rows.limit(0)
+            return rows.filter(f"NOT coalesce(({where}), false)")
 
-        deleted = df.filter(f"coalesce(({where}), false)") if where else df
+        hit = self._touched(name, where)
         # subtract the deleted rows' counts from the counting sketches
         # BEFORE the view swap (the heap.rs:296-311 decrement path) —
         # stats stay fresh with no rescan of the surviving table
-        if name in self._stats:
-            self._stats[name].delete_batch(deleted, lambda s: keep(s.alias(name)))
-        self._commit(name, keep(df))
+        self._stats[name].delete_batch(
+            hit.frame if hit.rows is None else hit.rows, lambda s: keep(s.alias(name))
+        )
+        self._rewrite(name, hit, keep)
         self._save_stats(name)
         return None
 
@@ -1685,9 +1758,8 @@ class OxidSparkDatabase:
             if col not in types:
                 raise AnalyzerError(f"unknown column '{col}' in UPDATE")
             assignments[col] = expr.strip()
-        df = self.spark.table(name)
         cond = where if where else "true"
-        from pyspark.sql import functions as F  # local to keep header lean
+        sets = {c: F.expr(e).cast(types[c]) for c, e in assignments.items()}
 
         # columns beyond the table's (the statistics sample's __prio__)
         # pass through, so the sample takes the same rewrite
@@ -1696,10 +1768,7 @@ class OxidSparkDatabase:
 
         def apply_sets(rows: DataFrame) -> DataFrame:
             return rows.select(
-                *[
-                    F.expr(assignments[c]).cast(types[c]).alias(c) if c in assignments else F.col(c)
-                    for c in types
-                ],
+                *[sets[c].alias(c) if c in sets else F.col(c) for c in types],
                 *extra(rows),
             )
 
@@ -1718,10 +1787,8 @@ class OxidSparkDatabase:
                 return apply_sets(matched).unionByName(untouched)
             return rows.select(
                 *[
-                    F.when(F.expr(cond), F.expr(assignments[c]).cast(types[c]))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    if c in assignments
+                    F.when(F.expr(cond), sets[c]).otherwise(F.col(c)).alias(c)
+                    if c in sets
                     else F.col(c)
                     for c in types
                 ],
@@ -1729,18 +1796,21 @@ class OxidSparkDatabase:
             )
 
         # stats: UPDATE = the touched slice's pre-image counts −1 and its
-        # post-image +1 in one signed aggregation (heap.rs:296-345's
-        # update path pairs a delete-side and an insert-side sketch
-        # adjustment) — touches only the affected rows, never rescans the
-        # table; the sample takes the same rewrite
-        if name in self._stats:
-            touched = df.filter(f"coalesce(({cond}), false)")
-            self._stats[name].update(
-                apply_sets(touched),
-                pre_image=touched,
-                rewrite=lambda s: rewrite(s.alias(name)),
-            )
-        self._commit(name, rewrite(df))
+        # post-image +1 in one signed count (heap.rs:296-345's update
+        # path pairs a delete-side and an insert-side sketch adjustment)
+        # — touches only the affected rows, never rescans the table; the
+        # post-image rides the job that finds the touched rows, and the
+        # sample takes the same rewrite
+        hit = self._touched(name, cond, tuple(sets.values()))
+        if hit.rows is None:
+            pre, post = hit.frame, apply_sets(hit.frame)
+        else:
+            pre, post = hit.rows, []
+            for row, vals in zip(hit.rows, hit.extra):
+                new = dict(zip(sets, vals))
+                post.append(tuple(new.get(c, v) for c, v in zip(types, row)))
+        self._stats[name].update(post, pre_image=pre, rewrite=lambda s: rewrite(s.alias(name)))
+        self._rewrite(name, hit, rewrite)
         self._save_stats(name)
         return None
 

@@ -149,25 +149,12 @@ def _has_ltz(dt: T.DataType) -> bool:
     return isinstance(dt, T.TimestampType)
 
 
-def local_rows_df(spark, rows, schema):
-    """DataFrame from a small DRIVER-side row list, planned as a JVM
-    ``LocalRelation`` (``LocalTableScan``).
-
-    The rows become one Arrow table on the driver (schema from
-    ``to_arrow_schema``) and cross to the JVM as a single Arrow stream.
-    ``spark.createDataFrame(<list>)`` would instead build a pickled
-    Python RDD (``Scan ExistingRDD``): every action over it starts
-    Python workers to unpickle the rows — 230–420 ms for a
-    ``filter().count()`` over 1–1024 rows against 51–68 ms for the
-    local relation (4-core host).  A ``LocalRelation`` also carries its
-    true size, so Catalyst can broadcast it.
-
-    ``schema`` is a DDL string or a ``StructType``; ``rows`` are tuples
-    (or ``Row``s) in schema order.  Naive datetimes in ``timestamp``
-    columns keep the list path's reading (process-local zone, see
-    ``_utc_instant``).  This is the ONE way driver rows enter Spark —
-    tests/test_local_rows.py fails on any other ``createDataFrame``
-    call in the package."""
+def arrow_rows(rows, schema) -> "pyarrow.Table":
+    """One Arrow table of DRIVER-side rows: ``schema`` is a DDL string or
+    a ``StructType``, ``rows`` are tuples (or ``Row``s) in schema order.
+    Naive datetimes in ``timestamp`` columns keep the list path's reading
+    (process-local zone, see ``_utc_instant``).  ``local_rows_df`` and
+    the versioned-table append path both build their rows here."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -182,5 +169,26 @@ def local_rows_df(spark, rows, schema):
         )
         for col, f, a in zip(cols, schema.fields, arrow_schema)
     ]
-    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def local_rows_df(spark, rows, schema):
+    """DataFrame from a small DRIVER-side row list, planned as a JVM
+    ``LocalRelation`` (``LocalTableScan``).
+
+    The rows become one Arrow table on the driver (``arrow_rows``) and
+    cross to the JVM as a single Arrow stream.
+    ``spark.createDataFrame(<list>)`` would instead build a pickled
+    Python RDD (``Scan ExistingRDD``): every action over it starts
+    Python workers to unpickle the rows — 230–420 ms for a
+    ``filter().count()`` over 1–1024 rows against 51–68 ms for the
+    local relation (4-core host).  A ``LocalRelation`` also carries its
+    true size, so Catalyst can broadcast it.
+
+    ``schema`` is a DDL string or a ``StructType``; ``rows`` are tuples
+    (or ``Row``s) in schema order.  This is the ONE way driver rows enter
+    Spark — tests/test_local_rows.py fails on any other
+    ``createDataFrame`` call in the package."""
+    if not isinstance(schema, T.StructType):
+        schema = T._parse_datatype_string(schema)
+    return spark.createDataFrame(arrow_rows(rows, schema), schema)

@@ -1960,11 +1960,6 @@ def _gram_key(col):
     return F.substring(F.md5(col.cast("binary")), 1, 16)
 
 
-def _duck_gram_key(expr: str) -> str:
-    """DuckDB twin of _gram_key."""
-    return f"substring(md5({expr}), 1, 16)"
-
-
 def _span_oracle() -> str:
     k = _SPAN_K
     return f"""

@@ -124,6 +124,25 @@ def _final_plan_only(plan: str) -> str:
     return "\n".join(out)
 
 
+# Physical nodes that pass rows through a Python worker: scalar UDFs and
+# UDTFs, mapInPandas / mapInArrow, and the grouped and co-grouped applies.
+_PYTHON_NODES = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "BatchEvalPythonUDTF",
+    "ArrowEvalPythonUDTF",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInArrow",
+    "FlatMapGroupsInPandasWithState",
+    "AggregateInPandas",
+    "WindowInPandas",
+)
+
+
 def summarize_plan(plan: str) -> PlanSummary:
     """Summary of a formatted physical plan's text.  Of an executed
     adaptive plan, only the final plan counts."""
@@ -141,7 +160,7 @@ def summarize_plan(plan: str) -> PlanSummary:
         s.joins += [kind] * len(re.findall(rf"\(\d+\) {kind}", p))
     s.n_exchanges = len(re.findall(r"\(\d+\) Exchange", p))
     s.has_topk = "TakeOrderedAndProject" in p
-    s.python_evals = p.count("BatchEvalPython") + p.count("ArrowEvalPython")
+    s.python_evals = len(re.findall(rf"\(\d+\) (?:{'|'.join(_PYTHON_NODES)})\b", p))
     return s
 
 

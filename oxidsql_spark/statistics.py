@@ -132,13 +132,6 @@ class TableSample:
             sel *= s ** (0.5**i)
         return min(sel, 1.0)
 
-    def estimate_conjunct_cardinality(
-        self, predicates: list, zero_match_ndv: list[int | None] | None = None
-    ) -> int:
-        est = self.estimate_conjunct_selectivity(predicates, zero_match_ndv) * self.base_count
-        floor = self.base_count / (2 * SAMPLE_SIZE)
-        return max(int(est), int(floor), 1)
-
 
 class CountingHLL:
     """Delete-capable distinct-count sketch — the twin of the reference's
@@ -201,16 +194,22 @@ class CountingHLL:
 
 
 class _SignedCounter:
-    """The Columns of the signed CountingHLL aggregation over a fixed
-    column list, built once (a py4j build of the stack/hash Columns
-    costs ~90 ms, more than the aggregation it feeds on a small slice).
+    """The signed CountingHLL count over a fixed column list, its
+    Columns built once (a py4j build of the stack/hash Columns costs
+    ~90 ms, more than the aggregation it feeds on a small slice).
 
-    The input carries the columns plus an integer ``__sign__``; the
-    columns are stacked, hashed and split into (bucket, rho), and the
-    signs summed per ``(c, bucket, rho)``.  NULLs are skipped per column
-    (distinct-count semantics); the synthetic ``__rows__`` column nets
-    the rows.  Shuffle volume ≤ (ncols+1)×m×max_rho rows after partial
-    agg, whatever the input size."""
+    Each value is hashed and split into (bucket, rho), and the row signs
+    are summed per ``(column, bucket, rho)``.  NULLs are skipped per
+    column (distinct-count semantics).  Two forms, same hashes:
+
+    * ``counts`` — one aggregation query over a frame of the columns
+      plus an integer ``__sign__``: the columns are stacked and grouped,
+      so shuffle volume is ≤ (ncols+1)×m×max_rho rows after partial agg,
+      whatever the input size; the synthetic ``__rows__`` column nets
+      the rows;
+    * ``local_counts`` — driver rows: a projection of every value's hash
+      over their ``LocalRelation``, which Catalyst folds (no job), split
+      and summed with numpy."""
 
     def __init__(self, cols: list[str], m: int):
         from itertools import chain
@@ -234,6 +233,8 @@ class _SignedCounter:
             rho.alias("rho"),
         ]
         self._net = F.sum("__sign__").alias("n")
+        self._m = m
+        self._hashes = [F.xxhash64(F.col(c).cast("string")) for c in cols]
 
     def counts(self, signed: DataFrame) -> dict[str, list[tuple[int, int, int]]]:
         """Net (bucket, rho, count) rows per column and for ``__rows__``:
@@ -250,6 +251,48 @@ class _SignedCounter:
         for r in rows:
             out[r["c"]].append((int(r["bucket"]), int(r["rho"]), int(r["n"])))
         return out
+
+    def local_counts(
+        self, spark: SparkSession, rows: list[tuple], signs: list[int], schema: T.StructType
+    ) -> dict[str, list[tuple[int, int, int]]]:
+        """``counts`` of driver rows in ``schema``'s column order, each
+        with its sign, and no Spark job: the hashes are a projection over
+        the rows' ``LocalRelation`` (Catalyst folds it, one hash per
+        value), and numpy splits them into (bucket, rho) exactly as the
+        aggregation's keys do and sums the signs (``__rows__`` holds one
+        entry, the net row count)."""
+        import numpy as np
+
+        frame = local_rows_df(spark, rows, schema)
+        # tuples first: numpy probing a Row's attributes raises (slowly)
+        h = np.array([tuple(r) for r in frame.select(*self._hashes).collect()], dtype=np.int64)
+        h = h.reshape(-1, len(self.cols))
+        live = np.array([[v is not None for v in r] for r in rows], dtype=bool).reshape(h.shape)
+        sign = np.array(signs, dtype=np.int64)
+        bits = self._m.bit_length() - 1
+        bucket = h & (self._m - 1)
+        rho = (65 - bits) - _bit_length(h.view(np.uint64) >> np.uint64(bits))
+        code = bucket * 64 + rho  # rho <= 61 for every m >= 16
+        out: dict[str, list[tuple[int, int, int]]] = {}
+        for i, c in enumerate(self.cols):
+            keep = live[:, i]
+            net = np.bincount(code[keep, i], weights=sign[keep], minlength=self._m * 64)
+            out[c] = [(int(k) >> 6, int(k) & 63, int(net[k])) for k in np.flatnonzero(net)]
+        out["__rows__"] = [(0, 0, int(sign.sum()))]
+        return out
+
+
+def _bit_length(w):
+    """Exact bit length of each uint64 in `w` (``length(bin(w))``, 0 for
+    0), by halving — a float log2 rounds near powers of two."""
+    import numpy as np
+
+    n = np.zeros(w.shape, dtype=np.int64)
+    for s in (32, 16, 8, 4, 2, 1):
+        big = w >= np.uint64(1 << s)
+        n += big * s
+        w = np.where(big, w >> np.uint64(s), w)
+    return n + (w > 0)
 
 
 def column_bucket_rho_counts(
@@ -286,12 +329,15 @@ class OnlineTableStats:
       reservoir, but mergeable across batches and executors — the form
       that still works when ingest itself is distributed.
 
-    Cost model, per statement: ONE signed counting aggregation folds the
-    buffered INSERT … VALUES rows (+1), the statement's pre-image (−1)
-    and its post-image (+1) together; the sample follows the statement
-    by applying its own row rewrite to the ≤k sample rows as a
-    ``LocalRelation``, which Catalyst folds without a job.  INSERT …
-    VALUES and cardinality estimates run no job at all."""
+    Cost model, per statement: ONE signed count folds the buffered
+    INSERT … VALUES rows (+1), the statement's pre-image (−1) and its
+    post-image (+1) together — a projection Catalyst folds over their
+    ``LocalRelation`` when the statement hands over its touched rows as
+    driver lists (no job), else one aggregation query.  The sample
+    follows the statement by applying its own row rewrite to the ≤k
+    sample rows as a ``LocalRelation``, which Catalyst folds without a
+    job.  INSERT … VALUES, ``ndv`` and cardinality estimates run no job
+    at all."""
 
     NDV_M = 1024  # CountingHLL buckets (reference uses 64; see above)
 
@@ -319,16 +365,20 @@ class OnlineTableStats:
         self._unsampled.extend(rows)
         self.rowcount += len(rows)
 
-    def _fold(self, parts: list[tuple[DataFrame, int]]) -> int:
-        """The ONE signed counting aggregation: the buffered rows (+1) and
-        each ``(frame, sign)`` part, unioned with a sign column.  The net
-        counts go into the counter matrices and the net row count moves
-        ``rowcount``; returns the net row count of ``parts``."""
+    def _fold(self, parts: list[tuple[DataFrame | list, int]]) -> int:
+        """The ONE signed count: the buffered rows (+1) and each
+        ``(rows, sign)`` part, where ``rows`` is a frame or a list of
+        driver rows in schema order.  All-driver parts are counted by a
+        projection Catalyst folds, with no job; any frame makes it one
+        aggregation query over the parts unioned with a sign column.
+        The net counts go into the counter matrices and the net row
+        count moves ``rowcount``; returns the net row count of
+        ``parts``."""
         from functools import reduce
 
         pending = self._pending
         if pending:
-            parts = [(local_rows_df(self.spark, pending, self.schema), 1), *parts]
+            parts = [(pending, 1), *parts]
         if not parts:
             return 0
         if self._counter is None:
@@ -339,11 +389,17 @@ class OnlineTableStats:
             self._typed = [
                 F.col(f.name).cast(f.dataType).alias(f.name) for f in self.schema.fields
             ]
-        signed = reduce(
-            DataFrame.union,
-            [df.select(*self._typed, F.lit(sign).alias("__sign__")) for df, sign in parts],
-        )
-        counts = self._counter.counts(signed)
+        if all(isinstance(rows, list) for rows, _ in parts):
+            rows = [r for rows, _ in parts for r in rows]
+            signs = [sign for rows, sign in parts for _ in rows]
+            counts = self._counter.local_counts(self.spark, rows, signs, self.schema)
+        else:
+            frames = [
+                (local_rows_df(self.spark, rows, self.schema) if isinstance(rows, list) else rows)
+                .select(*self._typed, F.lit(sign).alias("__sign__"))
+                for rows, sign in parts
+            ]
+            counts = self._counter.counts(reduce(DataFrame.union, frames))
         self._pending = []
         for c in self._cols:
             if c not in self._sketches:
@@ -357,8 +413,10 @@ class OnlineTableStats:
         if self._pending:
             self._fold([])
 
-    def _prio_rows(self, rows) -> list[tuple[int, tuple]]:
-        return [(r["__prio__"], tuple(r[c] for c in self._cols)) for r in rows]
+    def _prio_rows(self, frame: DataFrame) -> list[tuple[int, tuple]]:
+        """(priority, row values) of a frame with ``__prio__``, collected
+        by position (a Row's by-name lookup costs ~10 µs a value)."""
+        return [(r[0], tuple(r[1:])) for r in frame.select("__prio__", *self._cols).collect()]
 
     def _merge_candidates(self, batch: DataFrame, n: int) -> None:
         """Bottom-k merge of an ``n``-row batch into the sample: each row
@@ -375,7 +433,7 @@ class OnlineTableStats:
             # the limit and the bare ORDER BY runs as a range-partitioned
             # global sort — three jobs instead of one top-k job
             cand = cand.orderBy("__prio__").limit(self.sample_size)
-        merged = self._sample + self._prio_rows(cand.collect())
+        merged = self._sample + self._prio_rows(cand)
         self._sample = sorted(merged, key=lambda t: t[0])[: self.sample_size]
         self._seq += n
 
@@ -403,17 +461,17 @@ class OnlineTableStats:
             [(p, *t) for p, t in self._sample],
             T.StructType([T.StructField("__prio__", T.LongType())] + self.schema.fields),
         )
-        return sorted(self._prio_rows(rewrite(frame).collect()), key=lambda t: t[0])
+        return sorted(self._prio_rows(rewrite(frame)), key=lambda t: t[0])
 
     def update(
         self,
-        batch: DataFrame,
-        pre_image: DataFrame | None = None,
+        batch: DataFrame | list,
+        pre_image: DataFrame | list | None = None,
         rewrite: Callable[[DataFrame], DataFrame] | None = None,
     ) -> None:
         """Fold one statement's inserted or rewritten rows in with ONE
-        signed counting aggregation (buffered rows +1, ``pre_image`` −1,
-        ``batch`` +1).
+        signed count (buffered rows +1, ``pre_image`` −1, ``batch`` +1);
+        each is a frame or a list of driver rows (see ``_fold``).
 
         * INSERT … SELECT: ``update(batch)``; the batch's rows are sample
           candidates (one bounded top-k job).
@@ -422,7 +480,8 @@ class OnlineTableStats:
           ``_rewritten_sample``).  Sample rows are rewritten IN PLACE and
           keep their priority (a touched row draws no new one): the
           sample stays the same k rows of the table, now holding their
-          post-image values."""
+          post-image values.  Given the touched rows as driver lists,
+          this runs no job."""
         if rewrite is not None:
             sample = self._rewritten_sample(rewrite)
             self._fold([(pre_image, -1), (batch, 1)])
@@ -430,6 +489,8 @@ class OnlineTableStats:
             return
         n = self._fold([(batch, 1)])
         if n > 0:
+            if isinstance(batch, list):
+                batch = local_rows_df(self.spark, batch, self.schema)
             self._merge_candidates(batch, n)
 
     def dumps(self) -> bytes:
@@ -479,24 +540,25 @@ class OnlineTableStats:
         return self
 
     def delete_batch(
-        self, deleted: DataFrame, rewrite: Callable[[DataFrame], DataFrame]
+        self, deleted: DataFrame | list, rewrite: Callable[[DataFrame], DataFrame]
     ) -> None:
-        """Fold a DELETE in: the ``deleted`` rows count −1 in the same
-        one signed aggregation that folds the buffered rows — the
-        reference CountingHLL's decrement path (counting_hyperloglog.rs
-        :76-180 via heap.rs:296-311), no rescan of the surviving table.
-        A value deleted while duplicates remain keeps its register alive
-        (its counter stays positive) — exactly the property max-register
-        HLLs cannot provide.  ``rewrite`` is the statement's own filter
-        of SURVIVING rows, applied to the sample as a ``LocalRelation``
-        with no job; it drops NULL-bearing rows exactly as the table
-        does."""
+        """Fold a DELETE in: the ``deleted`` rows (a frame, or a list of
+        driver rows — then with no job) count −1 in the same one signed
+        count that folds the buffered rows — the reference CountingHLL's
+        decrement path (counting_hyperloglog.rs:76-180 via
+        heap.rs:296-311), no rescan of the surviving table.  A value
+        deleted while duplicates remain keeps its register alive (its
+        counter stays positive) — exactly the property max-register HLLs
+        cannot provide.  ``rewrite`` is the statement's own filter of
+        SURVIVING rows, applied to the sample as a ``LocalRelation`` with
+        no job; it drops NULL-bearing rows exactly as the table does."""
         sample = self._rewritten_sample(rewrite)
         self._fold([(deleted, -1)])
         self._sample = sample
 
-    def rebuild(self, df: DataFrame) -> None:
-        """Full re-derivation from the table (create / reopen / MERGE)."""
+    def rebuild(self, df: DataFrame | list) -> None:
+        """Full re-derivation from the table's rows (create / reopen /
+        MERGE); ``rebuild([])`` empties the statistics with no job."""
         self.rowcount = 0
         self._sketches = {}
         self._sample = []

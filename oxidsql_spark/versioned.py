@@ -6,18 +6,29 @@ is the production shape for mutating plain-parquet data at scale, the
 same immutable-manifest model Delta/Iceberg formalize:
 
 * version N is ONE manifest file, ``_manifests/m0000000N.json``: the
-  Spark schema plus a map from group to data dir.  An unpartitioned
-  table has a single group; a table with ``partition_col`` has one
-  group per partition value;
-* a commit writes its data dir ``_data/v0000000N/`` fully, then makes
-  the manifest visible in one step (tmp file + ``os.rename`` on a local
-  disk, one PUT on an object store).  No directory rename is ever a
-  commit, so a crashed writer leaves only unreferenced files that
-  readers never see, the retry clears and ``vacuum`` removes;
+  Spark schema plus a map from group to a list of data paths.  An
+  unpartitioned table has a single group whose list names parquet
+  FILES; a table with ``partition_col`` has one group per partition
+  value, listing the dir its rows were written to;
+* a version is that list, and a commit writes only its NEW files, into
+  ``_data/v0000000N/``: ``write(df)`` replaces the content, while
+  ``write(Delta(add, drop))`` keeps the latest version's files but
+  ``drop`` and adds the rows ``add`` holds — an append writes one file,
+  a DELETE/UPDATE rewrites only the files it touches.  Rows known on
+  the driver are written there with pyarrow, with no Spark job.  A
+  commit that writes zero rows references no file;
+* the manifest becomes visible in one step (tmp file + ``os.rename`` on
+  a local disk, one PUT on an object store).  No directory rename is
+  ever a commit, so a crashed writer leaves only unreferenced files
+  that readers never see, the retry clears and ``vacuum`` removes —
+  and ``vacuum`` removes a file only when no kept manifest references
+  it;
 * a mutation of a partitioned table rewrites only the groups it
   touches; the new manifest references every other group's dir;
 * every read — reopen and time travel included — takes the schema from
-  the manifest, so no read runs a footer-inference job.
+  the manifest, so no read runs a footer-inference job.  A Delta
+  commit that would leave more than ``MAX_SMALL_FILES`` small files
+  merges them into one, so appends never pile files onto the reads.
 
 ``read_artifact`` is the one reader of the plain layout: a write-once
 artifact is plain parquet files until its first maintenance rewrite
@@ -30,7 +41,9 @@ import json
 import os
 import re
 import shutil
-from urllib.parse import unquote
+import uuid
+from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +60,29 @@ _WHOLE = ""
 # Partition-value column of a partitioned commit's one partitionBy write
 # (a copy of partition_col: partitionBy strips its key from the files).
 _PV = "__pv__"
+
+# A file under SMALL_FILE_BYTES is small: it costs Spark more to open
+# than to scan (openCostInBytes is 4 MiB).  A Delta commit that would
+# leave more than MAX_SMALL_FILES of them merges them into one on the
+# driver, so appends never pile files onto a version: each file added
+# ~2.7 ms to a point read (local[4]: 15 files 0.091 s, 1 file 0.052 s),
+# and more than 32 paths cost every read a listing job (SCALE.md,
+# "statement cost follows the delta").  The merge reads at most
+# (MAX_SMALL_FILES + 1) MiB on the driver.
+SMALL_FILE_BYTES = 1 << 20
+MAX_SMALL_FILES = 4
+
+
+@dataclass(frozen=True)
+class Delta:
+    """A commit relative to the latest version: its files but ``drop``
+    (manifest paths, see ``VersionedTable.relpath``) plus the rows of
+    ``add`` — a DataFrame (one Spark write job), a list of driver-side
+    row tuples in schema order (one parquet file written with pyarrow,
+    no job) or None."""
+
+    add: DataFrame | list | None = None
+    drop: frozenset = frozenset()
 
 
 class VersionedTable:
@@ -89,34 +125,112 @@ class VersionedTable:
 
     # -- write side ------------------------------------------------------
 
-    def write(self, df: DataFrame) -> int:
-        """Commit `df` as the whole content of the next version; returns
-        its version number.  Partitioned, this is ONE partitionBy pass
-        over the input, whatever the number of partition values."""
-        return self._commit(df, {})
+    def write(self, content: DataFrame | Delta) -> int:
+        """Commit the next version; returns its version number.  A
+        DataFrame is the version's whole content — partitioned, ONE
+        partitionBy pass over the input, whatever the number of
+        partition values.  A ``Delta`` (unpartitioned tables only) writes
+        only its own rows and references the latest version's other
+        files."""
+        if isinstance(content, Delta):
+            return self._commit_delta(content)
+        return self._commit(content, {})
 
-    def _commit(self, df: DataFrame, groups: dict[str, str]) -> int:
-        """Write `df` into the next version's data dir, then publish the
-        manifest `groups` + the groups `df` wrote.  A dir at the target
-        version can only be a crashed attempt's debris (no manifest
-        references it), so the retry clears it instead of failing on
-        errorifexists forever."""
+    def _next_dir(self) -> tuple[int, str]:
+        """The next version and its cleared data dir.  A dir at the
+        target version can only be a crashed attempt's debris (no
+        manifest references it), so the retry clears it instead of
+        failing on errorifexists forever."""
         v = (self.latest_version() or 0) + 1
-        vdir = self._vdir(v)
-        rel = os.path.relpath(vdir, self.path)
-        shutil.rmtree(vdir, ignore_errors=True)
+        shutil.rmtree(self._vdir(v), ignore_errors=True)
+        return v, self._vdir(v)
+
+    def _commit(self, df: DataFrame, groups: dict[str, list[str]]) -> int:
+        """Write `df` into the next version's data dir, then publish the
+        manifest `groups` + the groups `df` wrote."""
+        v, vdir = self._next_dir()
         if self.partition_col is None:
             df.write.mode("errorifexists").parquet(vdir)
-            groups = {_WHOLE: rel}
+            groups = {_WHOLE: self._written(vdir)}
         else:
+            rel = os.path.relpath(vdir, self.path)
             groups = dict(groups)
             df.withColumn(_PV, self._pv_expr()).write.mode("errorifexists").partitionBy(
                 _PV
             ).parquet(vdir)
             for name in os.listdir(vdir):
                 if name.startswith(f"{_PV}="):  # undo Hive path escaping
-                    groups[unquote(name[len(_PV) + 1 :])] = os.path.join(rel, name)
-        manifest = {"schema": json.loads(df.schema.json()), "groups": groups}
+                    groups[unquote(name[len(_PV) + 1 :])] = [os.path.join(rel, name)]
+        return self._publish(v, json.loads(df.schema.json()), groups)
+
+    def _commit_delta(self, delta: Delta) -> int:
+        if self.partition_col is not None:
+            raise ValueError("a Delta commits to an unpartitioned table")
+        m = self._manifest(None)
+        files = [f for f in _paths(m["groups"].values()) if f not in delta.drop]
+        v, vdir = self._next_dir()
+        if isinstance(delta.add, DataFrame):
+            delta.add.write.mode("errorifexists").parquet(vdir)
+            files += self._written(vdir)
+        elif delta.add:
+            from .functions import arrow_rows
+
+            files.append(self._write_arrow(vdir, arrow_rows(delta.add, _schema(m))))
+        return self._publish(v, m["schema"], {_WHOLE: self._merge_small(vdir, files, _schema(m))})
+
+    def _written(self, vdir: str) -> list[str]:
+        """The data files a Spark write left in `vdir`, as manifest
+        paths.  An empty write still leaves one zero-row file (Spark
+        keeps the schema in it); the manifest carries the schema, so
+        that file is deleted instead of referenced."""
+        import pyarrow.parquet as pq
+
+        out = []
+        for name in sorted(os.listdir(vdir)):
+            if not name.endswith(".parquet") or name.startswith((".", "_")):
+                continue
+            f = os.path.join(vdir, name)
+            if pq.read_metadata(f).num_rows:
+                out.append(os.path.relpath(f, self.path))
+            else:
+                os.remove(f)
+        return out
+
+    def _write_arrow(self, vdir: str, table) -> str:
+        """One zstd parquet file of an Arrow table, written on the driver."""
+        import pyarrow.parquet as pq
+
+        os.makedirs(vdir, exist_ok=True)
+        f = os.path.join(vdir, f"part-{uuid.uuid4().hex}.zstd.parquet")
+        pq.write_table(table, f, compression="zstd")
+        return os.path.relpath(f, self.path)
+
+    def _merge_small(self, vdir: str, files: list[str], schema: T.StructType) -> list[str]:
+        """Merge the files under SMALL_FILE_BYTES into one, on the
+        driver, once there are more than MAX_SMALL_FILES; the merged
+        files this commit just wrote are deleted (no manifest references
+        them), older ones stay for time travel."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        small = [f for f in files if os.path.getsize(os.path.join(self.path, f)) < SMALL_FILE_BYTES]
+        if len(small) <= MAX_SMALL_FILES:
+            return files
+        arrow = to_arrow_schema(schema)
+        merged = pa.concat_tables(
+            pq.read_table(os.path.join(self.path, f), columns=arrow.names).cast(arrow)
+            for f in small
+        )
+        out = [f for f in files if f not in small] + [self._write_arrow(vdir, merged)]
+        new = os.path.relpath(vdir, self.path) + os.sep
+        for f in small:
+            if f.startswith(new):
+                os.remove(os.path.join(self.path, f))
+        return out
+
+    def _publish(self, v: int, schema: dict, groups: dict[str, list[str]]) -> int:
+        manifest = {"schema": schema, "groups": groups}
         os.makedirs(self._mdir, exist_ok=True)
         tmp = os.path.join(self._mdir, f".m{v:08d}.tmp")
         with open(tmp, "w") as fh:
@@ -210,8 +324,9 @@ class VersionedTable:
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Keep the newest ``keep_last`` manifests; delete every data
-        dir or torn manifest tmp file no kept manifest references and —
-        once a manifest exists — the plain files of an initial build.
+        file or dir and torn manifest tmp file no kept manifest
+        references and — once a manifest exists — the plain files of an
+        initial build.
         Time travel within the window stays intact; returns the removed
         versions.  Pure cleanup: the commits already happened, so a
         crash anywhere in here leaves a readable table and a re-runnable
@@ -233,18 +348,8 @@ class VersionedTable:
         for name in os.listdir(self._mdir):
             if not _MANIFEST_RE.match(name):
                 os.remove(os.path.join(self._mdir, name))
-        live = {d for v in kept for d in self._manifest(v)["groups"].values()}
-        data = os.path.join(self.path, "_data")
-        for name in os.listdir(data) if os.path.isdir(data) else ():
-            rel = os.path.join("_data", name)
-            if rel in live:
-                continue
-            if not any(d.startswith(rel + os.sep) for d in live):
-                shutil.rmtree(os.path.join(self.path, rel))
-                continue
-            for sub in os.listdir(os.path.join(data, name)):  # partitioned groups
-                if sub.startswith(f"{_PV}=") and os.path.join(rel, sub) not in live:
-                    shutil.rmtree(os.path.join(data, name, sub))
+        live = {p for v in kept for p in _paths(self._manifest(v)["groups"].values())}
+        self._sweep("_data", live, {os.path.dirname(p) for p in live})
         for name in filter(_plain, os.listdir(self.path)):
             p = os.path.join(self.path, name)
             if os.path.isdir(p):
@@ -253,23 +358,50 @@ class VersionedTable:
                 os.remove(p)
         return removed
 
+    def _sweep(self, rel: str, live: set[str], parents: set[str]) -> None:
+        """Remove every entry under `rel` that is no live path (nor a
+        live file's Hadoop ``.crc``) and holds none: a version dir stays
+        while a kept manifest references one of its files."""
+        root = os.path.join(self.path, rel)
+        for name in os.listdir(root) if os.path.isdir(root) else ():
+            r = os.path.join(rel, name)
+            if r in live or os.path.join(rel, _uncrc(name)) in live:
+                continue
+            p = os.path.join(self.path, r)
+            if r in parents:
+                self._sweep(r, live, parents)
+            elif os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
+
     # -- read side -------------------------------------------------------
 
     def read(self, version: int | None = None) -> DataFrame:
         """Latest committed version, or time-travel to `version`."""
         m = self._manifest(version)
-        return self._scan(m, m["groups"].values())
+        return self._scan(m, _paths(m["groups"].values()))
 
     def read_partitions(self, values: list[str], version: int | None = None) -> DataFrame:
         """Partition-pruned read: scan only the named groups' data dirs
         — manifest-level pruning, no file listing of the rest."""
         m = self._manifest(version)
-        return self._scan(m, [m["groups"][str(v)] for v in values if str(v) in m["groups"]])
+        return self._scan(m, _paths(m["groups"][str(v)] for v in values if str(v) in m["groups"]))
+
+    def read_files(self, paths) -> DataFrame:
+        """The rows of the named files (manifest paths) of the latest
+        version."""
+        return self._scan(self._manifest(None), paths)
+
+    def relpath(self, file_path: str) -> str:
+        """The manifest path of a data file named by a URI or an
+        absolute path (``_metadata.file_path``, ``inputFiles()``)."""
+        return os.path.relpath(unquote(urlparse(file_path).path), self.path)
 
     def _scan(self, manifest: dict, rels) -> DataFrame:
         from .functions import local_rows_df
 
-        schema = T.StructType.fromJson(manifest["schema"])
+        schema = _schema(manifest)
         paths = [os.path.join(self.path, r) for r in rels]
         if not paths:
             return local_rows_df(self.spark, [], schema)
@@ -277,12 +409,14 @@ class VersionedTable:
 
     def files(self, version: int | None = None) -> list[str]:
         """The parquet data files of a committed version."""
-        return [
-            os.path.join(self.path, d, f)
-            for d in self._manifest(version)["groups"].values()
-            for f in os.listdir(os.path.join(self.path, d))
-            if f.endswith(".parquet")
-        ]
+        out = []
+        for r in _paths(self._manifest(version)["groups"].values()):
+            p = os.path.join(self.path, r)
+            if os.path.isdir(p):  # a partition group's dir
+                out += [os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")]
+            else:
+                out.append(p)
+        return out
 
     def history(self) -> list[tuple[int, int, int, float]]:
         """(version, data files, data bytes, commit time) per committed
@@ -296,12 +430,26 @@ class VersionedTable:
         return out
 
 
+def _paths(groups) -> list[str]:
+    """Every data path of some manifest groups (a manifest written before
+    groups held lists maps a group to one dir)."""
+    return [p for g in groups for p in ([g] if isinstance(g, str) else g)]
+
+
+def _schema(manifest: dict) -> T.StructType:
+    return T.StructType.fromJson(manifest["schema"])
+
+
+def _uncrc(name: str) -> str:
+    """The file a Hadoop ``.<name>.crc`` checksum belongs to, else `name`."""
+    return name[1:-4] if name.startswith(".") and name.endswith(".crc") else name
+
+
 def _plain(name: str) -> bool:
     """Is `name` (a top-level entry) part of a plain-layout build: a
     file or dir Spark's parquet listing reads, its ``_SUCCESS`` marker,
     or either one's ``.crc`` checksum?"""
-    if name.startswith(".") and name.endswith(".crc"):
-        name = name[1:-4]
+    name = _uncrc(name)
     return name == "_SUCCESS" or not name.startswith(("_", "."))
 
 

@@ -75,6 +75,15 @@ def test_pandas_ops_use_arrow(spark, sf_dir):
         assert "BatchEvalPython" not in p, name
 
 
+def test_python_evals_count_every_python_node(spark, sf_dir):
+    """``python_evals`` counts each node that hands rows to a Python
+    worker, mapInPandas passes included: the LSH sign and verify passes,
+    the PQ encode/ADC pass, none in a relational query."""
+    assert explain_summary(q(spark, sf_dir, "embedding_cosine_lsh")).python_evals == 2
+    assert explain_summary(q(spark, sf_dir, "ann_pq_adc")).python_evals >= 1
+    assert explain_summary(q(spark, sf_dir, "tpch_q3")).python_evals == 0
+
+
 @pytest.mark.parametrize("name", ["tpch_q1", "tpch_q6", "text_stats"])
 def test_wholestage_codegen_active(spark, sf_dir, name):
     """Codegen spans only materialize in the AQE executed plan — run the

@@ -27,12 +27,7 @@ from collections import Counter
 import duckdb
 from hypothesis import HealthCheck, settings
 from hypothesis import strategies as st
-from hypothesis.stateful import (
-    RuleBasedStateMachine,
-    initialize,
-    invariant,
-    rule,
-)
+from hypothesis.stateful import RuleBasedStateMachine, initialize, invariant, rule
 
 from oxidsql_spark.database import OxidSparkDatabase
 
@@ -196,8 +191,8 @@ def test_statement_fuzz_matches_duckdb(spark, tmp_path_factory):
     run_state_machine_as_test(
         StatementMachine,
         settings=settings(
-            max_examples=12 if slow else 4,
-            stateful_step_count=25 if slow else 8,
+            max_examples=12 if slow else 6,
+            stateful_step_count=25 if slow else 10,
             derandomize=True,
             deadline=None,
             suppress_health_check=list(HealthCheck),

@@ -330,6 +330,7 @@ def _jobs(spark, fn):
         out = fn()
     finally:
         sc.setJobGroup(f"{tag}-done", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(tag))
 
 
@@ -420,3 +421,107 @@ def test_facade_vacuum_keeps_table_metadata(spark, tmp_path):
     assert _rows(db2.query("SELECT id, v FROM t")) == want
     assert db2.stats("t").rowcount == len(want)
     assert "t" in db2._contracts
+
+
+# -- statement cost follows the delta ----------------------------------------
+
+
+def _durable(spark, tmp_path, n_files=3):
+    """A durable facade table `t` of 40 rows spread over `n_files`
+    files (ids 0-13 in the first)."""
+    from oxidsql_spark.database import OxidSparkDatabase
+
+    db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
+    db.query("CREATE TABLE t (id BIGINT, v INT)")
+    db.query(
+        "INSERT INTO t SELECT id, CAST(id % 3 AS INT) FROM "
+        f"(SELECT /*+ REPARTITION_BY_RANGE({n_files}, id) */ id FROM range(40))"
+    )
+    return db
+
+
+def test_durable_insert_values_runs_no_job(spark, tmp_path):
+    """INSERT … VALUES on a durable table writes its rows as one parquet
+    file on the driver: no Spark job, one new file, the old ones kept."""
+    db = _durable(spark, tmp_path)
+    vt = db._vt("t")
+    before = set(vt.files())
+    _, n = _jobs(spark, lambda: db.query("INSERT INTO t VALUES (100, 1), (101, NULL)"))
+    assert n == 0
+    after = set(vt.files())
+    assert before < after and len(after - before) == 1
+    assert _rows(db.query("SELECT id, v FROM t WHERE id >= 100")) == [(100, 1), (101, None)]
+
+
+def test_dml_touching_one_file_rewrites_only_it(spark, tmp_path):
+    """A DELETE or UPDATE whose touched rows sit in one of several files
+    runs at most 2 jobs (find the rows, rewrite their file), and every
+    other file path carries over unchanged."""
+    db = _durable(spark, tmp_path)
+    vt = db._vt("t")
+    assert len(vt.files()) == 3
+    for stmt, want in [
+        ("DELETE FROM t WHERE id < 3", lambda k, v: None if k < 3 else (k, v)),
+        ("UPDATE t SET v = v + 10 WHERE id BETWEEN 4 AND 6", lambda k, v: (k, v + 10 if 4 <= k <= 6 else v)),
+    ]:
+        old = set(vt.files())
+        expect = sorted(r for r in (want(*r) for r in _rows(db.query("SELECT id, v FROM t"))) if r)
+        _, n = _jobs(spark, lambda: db.query(stmt))
+        assert n <= 2, (stmt, n)
+        new = set(vt.files())
+        assert len(old - new) == 1 and len(new - old) == 1, stmt  # one file swapped
+        assert _rows(db.query("SELECT id, v FROM t")) == expect, stmt
+
+
+def test_single_row_inserts_keep_reads_job_free(spark, tmp_path):
+    """100 single-row INSERTs: a version never references more than
+    MAX_SMALL_FILES small files (the append that would cross it merges
+    them on the driver), and neither the inserts nor any read after them
+    runs a job."""
+    from oxidsql_spark.versioned import MAX_SMALL_FILES
+
+    db = _durable(spark, tmp_path, n_files=2)
+    vt = db._vt("t")
+    for i in range(100):
+        _, n_ins = _jobs(spark, lambda: db.query(f"INSERT INTO t VALUES ({100 + i}, {i})"))
+        _, n_read = _jobs(spark, lambda: vt.read())
+        assert (n_ins, n_read) == (0, 0), i
+        assert len(vt.files()) <= MAX_SMALL_FILES
+    got = _rows(db.query("SELECT id, v FROM t WHERE id >= 100"))
+    assert got == [(100 + i, i) for i in range(100)]
+    assert db.query("SELECT COUNT(*) FROM t").first()[0] == 140
+    # time travel to a version before the merge still reads its own files
+    assert db.query("SELECT COUNT(*) FROM t VERSION AS OF 10").first()[0] == 40 + 10 - 2
+
+
+def test_driver_appended_rows_read_back_like_spark_written(spark, tmp_path):
+    """Rows appended as a pyarrow-written file read back equal to the
+    same rows written by Spark, for every facade type and the CTAS
+    passthrough types."""
+    import datetime
+    import decimal
+
+    from oxidsql_spark.versioned import Delta
+
+    schema = (
+        "b BIGINT, i INT, s SMALLINT, v STRING, y BINARY, d DECIMAL(12,2), "
+        "dt DATE, ts TIMESTAMP, f DOUBLE, o BOOLEAN"
+    )
+    rows = [
+        (
+            -(2**62), 2**31 - 1, -(2**15), "héllo", b"\x00\xff", decimal.Decimal("1234567890.12"),
+            datetime.date(1999, 12, 31), datetime.datetime(2001, 2, 3, 4, 5, 6, 789),
+            1.5, True,
+        ),
+        (None,) * 10,
+    ]
+    ref = VersionedTable(spark, str(tmp_path / "ref"))
+    ref.write(spark.createDataFrame(rows, schema))
+    vt = VersionedTable(spark, str(tmp_path / "arrow"))
+    vt.write(spark.createDataFrame([], schema))
+    vt.write(Delta(add=rows))
+    assert vt.files() and all(f.endswith(".zstd.parquet") for f in vt.files())
+    key = lambda r: tuple((x is None, str(x)) for x in r)
+    assert sorted(map(tuple, vt.read().collect()), key=key) == sorted(
+        map(tuple, ref.read().collect()), key=key
+    )
