@@ -208,7 +208,8 @@ def _split_top_level(s: str) -> list[str]:
 # touched rows to the driver: the exact online rowcount bounds them, so
 # the driver never holds more.  Collect plus driver fold matched the
 # aggregation path near this size (SCALE.md, "statement cost follows
-# the delta").
+# the delta").  Above it a statement rewrites the whole table and folds
+# its statistics in the distributed signed aggregation.
 _DRIVER_ROWS = 25_000
 
 
@@ -219,7 +220,7 @@ class _Touched:
     frame: DataFrame
     rows: list | None = None  # collected, in table column order
     extra: list | None = None  # the ``extra`` values of each row
-    files: frozenset | None = None  # manifest paths of the files holding them
+    files: frozenset | None = None  # manifest paths of the files holding them; None: all
 
 
 class OxidSparkDatabase:
@@ -366,37 +367,34 @@ class OxidSparkDatabase:
         )
 
     def _touched(self, name: str, cond: str, extra: tuple = ()) -> _Touched:
-        """The rows a DELETE or UPDATE condition holds TRUE for, found by
-        ONE job.  While the table's exact online rowcount is at most
-        ``_DRIVER_ROWS``, that job collects them (table columns, then the
-        ``extra`` Columns) with the file each sits in; above it only the
-        files are collected, and the rows stay a frame.  In memory there
-        are no files."""
+        """The rows a DELETE or UPDATE condition holds TRUE for.  While
+        the table's exact online rowcount is at most ``_DRIVER_ROWS``,
+        ONE job collects them (table columns, then the ``extra`` Columns)
+        with the file each sits in.  Above it nothing is collected: the
+        rows stay a frame and the whole table is rewritten (``files`` is
+        None).  In memory there are no files."""
         durable = bool(self.storage_dir)
         vt = self._vt(name) if durable else None
         base = vt.read() if durable else self.spark.table(name)
         frame = base.alias(name).filter(f"coalesce(({cond}), false)")
         if durable and not vt.files():  # an empty version: no file, no row
             return _Touched(frame, [], [], frozenset())
-        path = [F.col("_metadata.file_path")] if durable else []
         if self._stats[name].rowcount > _DRIVER_ROWS:
-            hit = _Touched(frame)
-            paths = [r[0] for r in frame.select(*path).distinct().collect()] if durable else []
-        else:
-            n, got = len(base.columns), frame.select("*", *extra, *path).collect()
-            hit = _Touched(
-                frame, [tuple(r[:n]) for r in got], [tuple(r[n : n + len(extra)]) for r in got]
-            )
-            paths = [r[-1] for r in got] if durable else []
-        if durable:
-            hit.files = frozenset(map(vt.relpath, paths))
-        return hit
+            return _Touched(frame)
+        path = [F.col("_metadata.file_path")] if durable else []
+        n, got = len(base.columns), frame.select("*", *extra, *path).collect()
+        return _Touched(
+            frame,
+            [tuple(r[:n]) for r in got],
+            [tuple(r[n : n + len(extra)]) for r in got],
+            frozenset(vt.relpath(r[-1]) for r in got) if durable else None,
+        )
 
     def _rewrite(self, name: str, hit: _Touched, fn) -> None:
-        """Commit `fn`, a DELETE's or UPDATE's row rewrite: durable, over
-        only the files holding a touched row — every other file carries
-        over by reference — in memory, over the whole view."""
-        if not self.storage_dir:
+        """Commit `fn`, a DELETE's or UPDATE's row rewrite: over only the
+        files holding a touched row when they are known — every other
+        file carries over by reference — else over the whole table."""
+        if hit.files is None:
             self._commit(name, fn(self.spark.table(name)))
             return
         add = fn(self._vt(name).read_files(sorted(hit.files)).alias(name)) if hit.files else None

@@ -8,15 +8,17 @@ same immutable-manifest model Delta/Iceberg formalize:
 * version N is ONE manifest file, ``_manifests/m0000000N.json``: the
   Spark schema plus a map from group to a list of data paths.  An
   unpartitioned table has a single group whose list names parquet
-  FILES; a table with ``partition_col`` has one group per partition
-  value, listing the dir its rows were written to;
+  files and whole-write dirs; a table with ``partition_col`` has one
+  group per partition value, listing the dir its rows were written to;
 * a version is that list, and a commit writes only its NEW files, into
-  ``_data/v0000000N/``: ``write(df)`` replaces the content, while
-  ``write(Delta(add, drop))`` keeps the latest version's files but
-  ``drop`` and adds the rows ``add`` holds — an append writes one file,
-  a DELETE/UPDATE rewrites only the files it touches.  Rows known on
-  the driver are written there with pyarrow, with no Spark job.  A
-  commit that writes zero rows references no file;
+  ``_data/v0000000N/``: ``write(df)`` replaces the content and is
+  referenced as that ONE dir, while ``write(Delta(add, drop))`` keeps
+  the latest version's paths but the files in ``drop`` (a dir holding
+  one of them becomes its other files) and adds the rows ``add`` holds
+  — an append writes one file, a DELETE/UPDATE rewrites only the files
+  it touches.  Rows known on the driver are written there with
+  pyarrow, with no Spark job.  A commit that writes zero rows
+  references no file;
 * the manifest becomes visible in one step (tmp file + ``os.rename`` on
   a local disk, one PUT on an object store).  No directory rename is
   ever a commit, so a crashed writer leaves only unreferenced files
@@ -27,8 +29,10 @@ same immutable-manifest model Delta/Iceberg formalize:
   touches; the new manifest references every other group's dir;
 * every read — reopen and time travel included — takes the schema from
   the manifest, so no read runs a footer-inference job.  A Delta
-  commit that would leave more than ``MAX_SMALL_FILES`` small files
-  merges them into one, so appends never pile files onto the reads.
+  commit that would leave more than ``MAX_SMALL_FILES`` files in small
+  paths merges those into one, and one that would leave more than
+  ``MAX_PATHS`` paths rewrites them all as one dir, so appends never
+  pile files onto the reads.
 
 ``read_artifact`` is the one reader of the plain layout: a write-once
 artifact is plain parquet files until its first maintenance rewrite
@@ -61,16 +65,24 @@ _WHOLE = ""
 # (a copy of partition_col: partitionBy strips its key from the files).
 _PV = "__pv__"
 
-# A file under SMALL_FILE_BYTES is small: it costs Spark more to open
-# than to scan (openCostInBytes is 4 MiB).  A Delta commit that would
-# leave more than MAX_SMALL_FILES of them merges them into one on the
-# driver, so appends never pile files onto a version: each file added
-# ~2.7 ms to a point read (local[4]: 15 files 0.091 s, 1 file 0.052 s),
-# and more than 32 paths cost every read a listing job (SCALE.md,
-# "statement cost follows the delta").  The merge reads at most
-# (MAX_SMALL_FILES + 1) MiB on the driver.
+# A path (file or dir) under SMALL_FILE_BYTES is small: its files cost
+# Spark more to open than to scan (openCostInBytes is 4 MiB).  A Delta
+# commit that would leave more than MAX_SMALL_FILES files in small paths
+# merges those paths into one file on the driver, so appends never pile
+# files onto a version: each file added ~2.7 ms to a point read
+# (local[4]: 15 files 0.091 s, 1 file 0.052 s).  The merge reads at
+# most (MAX_SMALL_FILES + 1) MiB on the driver; more small bytes than
+# that stay as they are, under the MAX_PATHS bound.
 SMALL_FILE_BYTES = 1 << 20
 MAX_SMALL_FILES = 4
+
+# Most paths a version may reference: Spark lists more than 32 root
+# paths (parallelPartitionDiscovery.threshold) with a Spark job, which
+# every read of the version would pay (33 one-file dirs: 1 job, 0.43 s;
+# 32: 0 jobs, 0.07 s).  A Delta commit that would leave more rewrites
+# them all as one dir with one Spark job (SCALE.md, "statement cost
+# follows the delta").
+MAX_PATHS = 32
 
 
 @dataclass(frozen=True)
@@ -151,7 +163,7 @@ class VersionedTable:
         v, vdir = self._next_dir()
         if self.partition_col is None:
             df.write.mode("errorifexists").parquet(vdir)
-            groups = {_WHOLE: self._written(vdir)}
+            groups = {_WHOLE: self._whole(vdir)}
         else:
             rel = os.path.relpath(vdir, self.path)
             groups = dict(groups)
@@ -167,34 +179,57 @@ class VersionedTable:
         if self.partition_col is not None:
             raise ValueError("a Delta commits to an unpartitioned table")
         m = self._manifest(None)
-        files = [f for f in _paths(m["groups"].values()) if f not in delta.drop]
+        schema = _schema(m)
+        paths = self._drop(_paths(m["groups"].values()), delta.drop)
         v, vdir = self._next_dir()
         if isinstance(delta.add, DataFrame):
             delta.add.write.mode("errorifexists").parquet(vdir)
-            files += self._written(vdir)
+            paths += self._written(vdir)
         elif delta.add:
             from .functions import arrow_rows
 
-            files.append(self._write_arrow(vdir, arrow_rows(delta.add, _schema(m))))
-        return self._publish(v, m["schema"], {_WHOLE: self._merge_small(vdir, files, _schema(m))})
+            paths.append(self._write_arrow(vdir, arrow_rows(delta.add, schema)))
+        paths = self._merge_small(vdir, paths, schema)
+        if len(paths) > MAX_PATHS:
+            paths = self._compact(vdir, paths, schema)
+        return self._publish(v, m["schema"], {_WHOLE: paths})
+
+    def _drop(self, paths: list[str], drop: frozenset) -> list[str]:
+        """`paths` but the files in `drop`; a dir holding a dropped file
+        becomes its other files.  A dropped file the paths do not
+        reference is an error: its rows would survive beside their
+        rewrite."""
+        dirs = {os.path.dirname(f) for f in drop}
+        out, seen = [], set()
+        for p in paths:
+            files = [p]
+            if p in dirs and os.path.isdir(os.path.join(self.path, p)):
+                files = [os.path.relpath(f, self.path) for f in self._files(p)]
+            seen |= drop.intersection(files)
+            out += [f for f in files if f not in drop]
+        if drop - seen:
+            raise ValueError(f"not files of the latest version at {self.path}: {sorted(drop - seen)}")
+        return out
 
     def _written(self, vdir: str) -> list[str]:
         """The data files a Spark write left in `vdir`, as manifest
-        paths.  An empty write still leaves one zero-row file (Spark
-        keeps the schema in it); the manifest carries the schema, so
-        that file is deleted instead of referenced."""
+        paths — none when it wrote no row.  Only task 0 writes a file
+        for an empty partition, so several files hold rows; a lone
+        zero-row file is deleted instead of referenced (the manifest
+        carries the schema)."""
         import pyarrow.parquet as pq
 
-        out = []
-        for name in sorted(os.listdir(vdir)):
-            if not name.endswith(".parquet") or name.startswith((".", "_")):
-                continue
-            f = os.path.join(vdir, name)
-            if pq.read_metadata(f).num_rows:
-                out.append(os.path.relpath(f, self.path))
-            else:
-                os.remove(f)
-        return out
+        files = self._files(vdir)
+        if len(files) == 1 and not pq.read_metadata(files[0]).num_rows:
+            os.remove(files[0])
+            files = []
+        return [os.path.relpath(f, self.path) for f in files]
+
+    def _whole(self, vdir: str) -> list[str]:
+        """The manifest paths of a whole-content Spark write: its dir as
+        ONE path, which a read lists without a job however many files it
+        holds, or none when it wrote no row."""
+        return [os.path.relpath(vdir, self.path)] if self._written(vdir) else []
 
     def _write_arrow(self, vdir: str, table) -> str:
         """One zstd parquet file of an Arrow table, written on the driver."""
@@ -205,29 +240,50 @@ class VersionedTable:
         pq.write_table(table, f, compression="zstd")
         return os.path.relpath(f, self.path)
 
-    def _merge_small(self, vdir: str, files: list[str], schema: T.StructType) -> list[str]:
-        """Merge the files under SMALL_FILE_BYTES into one, on the
-        driver, once there are more than MAX_SMALL_FILES; the merged
-        files this commit just wrote are deleted (no manifest references
-        them), older ones stay for time travel."""
+    def _merge_small(self, vdir: str, paths: list[str], schema: T.StructType) -> list[str]:
+        """Merge the paths under SMALL_FILE_BYTES into one file, on the
+        driver, once they hold more than MAX_SMALL_FILES files and at
+        most (MAX_SMALL_FILES + 1) MiB; the merged files this commit
+        just wrote are deleted (no manifest references them), older ones
+        stay for time travel."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        small = [f for f in files if os.path.getsize(os.path.join(self.path, f)) < SMALL_FILE_BYTES]
-        if len(small) <= MAX_SMALL_FILES:
-            return files
+        files = {p: self._files(p) for p in paths}
+        size = {p: sum(map(os.path.getsize, files[p])) for p in paths}
+        small = [p for p in paths if size[p] < SMALL_FILE_BYTES]
+        if sum(len(files[p]) for p in small) <= MAX_SMALL_FILES or sum(
+            size[p] for p in small
+        ) > (MAX_SMALL_FILES + 1) * SMALL_FILE_BYTES:
+            return paths
         arrow = to_arrow_schema(schema)
+        # Spark writes TIMESTAMP as INT96: read it as microseconds, the
+        # facade's unit, so no year outside 1677-2262 overflows
         merged = pa.concat_tables(
-            pq.read_table(os.path.join(self.path, f), columns=arrow.names).cast(arrow)
-            for f in small
+            pq.read_table(f, columns=arrow.names, coerce_int96_timestamp_unit="us").cast(arrow)
+            for p in small
+            for f in files[p]
         )
-        out = [f for f in files if f not in small] + [self._write_arrow(vdir, merged)]
-        new = os.path.relpath(vdir, self.path) + os.sep
-        for f in small:
-            if f.startswith(new):
-                os.remove(os.path.join(self.path, f))
+        out = [p for p in paths if p not in small] + [self._write_arrow(vdir, merged)]
+        self._remove_new(vdir, small)
         return out
+
+    def _compact(self, vdir: str, paths: list[str], schema: T.StructType) -> list[str]:
+        """Rewrite every path as one dir, ``<vdir>/c``, with one Spark
+        job; the files this commit wrote beside it are deleted."""
+        out = os.path.join(vdir, "c")
+        full = [os.path.join(self.path, p) for p in paths]
+        self.spark.read.schema(schema).parquet(*full).write.mode("errorifexists").parquet(out)
+        self._remove_new(vdir, paths)
+        return self._whole(out)
+
+    def _remove_new(self, vdir: str, paths: list[str]) -> None:
+        """Delete the files among `paths` this commit wrote into `vdir`."""
+        new = os.path.relpath(vdir, self.path) + os.sep
+        for p in paths:
+            if p.startswith(new):
+                os.remove(os.path.join(self.path, p))
 
     def _publish(self, v: int, schema: dict, groups: dict[str, list[str]]) -> int:
         manifest = {"schema": schema, "groups": groups}
@@ -409,14 +465,19 @@ class VersionedTable:
 
     def files(self, version: int | None = None) -> list[str]:
         """The parquet data files of a committed version."""
-        out = []
-        for r in _paths(self._manifest(version)["groups"].values()):
-            p = os.path.join(self.path, r)
-            if os.path.isdir(p):  # a partition group's dir
-                out += [os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")]
-            else:
-                out.append(p)
-        return out
+        return [f for r in _paths(self._manifest(version)["groups"].values()) for f in self._files(r)]
+
+    def _files(self, rel: str) -> list[str]:
+        """The parquet data files of one manifest path: itself, or the
+        files a dir holds."""
+        p = os.path.join(self.path, rel)
+        if not os.path.isdir(p):
+            return [p]
+        return [
+            os.path.join(p, n)
+            for n in sorted(os.listdir(p))
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+        ]
 
     def history(self) -> list[tuple[int, int, int, float]]:
         """(version, data files, data bytes, commit time) per committed
@@ -431,9 +492,8 @@ class VersionedTable:
 
 
 def _paths(groups) -> list[str]:
-    """Every data path of some manifest groups (a manifest written before
-    groups held lists maps a group to one dir)."""
-    return [p for g in groups for p in ([g] if isinstance(g, str) else g)]
+    """Every data path of some manifest groups."""
+    return [p for g in groups for p in g]
 
 
 def _schema(manifest: dict) -> T.StructType:

@@ -435,8 +435,8 @@ def test_dml_stats_equal_full_rebuild_after_every_statement(spark, tmp_path):
 
 def test_dml_above_driver_row_bound_equals_full_rebuild(spark, tmp_path, monkeypatch):
     """The same sequence with every table above the driver-row bound:
-    DELETE and UPDATE find their files with a distinct-path job and fold
-    their statistics in one aggregation, with the same results."""
+    DELETE and UPDATE rewrite the whole table and fold their statistics
+    in one aggregation, with the same results."""
     from oxidsql_spark import database
 
     monkeypatch.setattr(database, "_DRIVER_ROWS", -1)

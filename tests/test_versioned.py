@@ -473,9 +473,15 @@ def test_dml_touching_one_file_rewrites_only_it(spark, tmp_path):
         assert _rows(db.query("SELECT id, v FROM t")) == expect, stmt
 
 
+def _paths(vt, version=None):
+    from oxidsql_spark.versioned import _paths
+
+    return _paths(vt._manifest(version)["groups"].values())
+
+
 def test_single_row_inserts_keep_reads_job_free(spark, tmp_path):
     """100 single-row INSERTs: a version never references more than
-    MAX_SMALL_FILES small files (the append that would cross it merges
+    MAX_SMALL_FILES small paths (the append that would cross it merges
     them on the driver), and neither the inserts nor any read after them
     runs a job."""
     from oxidsql_spark.versioned import MAX_SMALL_FILES
@@ -486,7 +492,7 @@ def test_single_row_inserts_keep_reads_job_free(spark, tmp_path):
         _, n_ins = _jobs(spark, lambda: db.query(f"INSERT INTO t VALUES ({100 + i}, {i})"))
         _, n_read = _jobs(spark, lambda: vt.read())
         assert (n_ins, n_read) == (0, 0), i
-        assert len(vt.files()) <= MAX_SMALL_FILES
+        assert len(_paths(vt)) <= MAX_SMALL_FILES
     got = _rows(db.query("SELECT id, v FROM t WHERE id >= 100"))
     assert got == [(100 + i, i) for i in range(100)]
     assert db.query("SELECT COUNT(*) FROM t").first()[0] == 140
@@ -525,3 +531,90 @@ def test_driver_appended_rows_read_back_like_spark_written(spark, tmp_path):
     assert sorted(map(tuple, vt.read().collect()), key=key) == sorted(
         map(tuple, ref.read().collect()), key=key
     )
+
+
+def test_whole_write_of_many_files_reads_without_a_job(spark, tmp_path, monkeypatch):
+    """A whole-content write of more files than Spark lists without a
+    job is ONE manifest path, so its reads run no job.  A Delta that
+    drops one of its files turns the dir into its other files: small
+    ones merge on the driver while they total at most (MAX_SMALL_FILES
+    + 1) small-file sizes, and a version that would reference more than
+    MAX_PATHS paths is rewritten as one dir instead."""
+    from oxidsql_spark import versioned
+    from oxidsql_spark.versioned import MAX_PATHS, MAX_SMALL_FILES, Delta
+
+    cases = {  # name -> SMALL_FILE_BYTES given the written files' sizes
+        "merged": lambda sizes: versioned.SMALL_FILE_BYTES,
+        "too_many_bytes": lambda sizes: max(sizes) + 1,
+        "compacted": lambda sizes: 0,
+    }
+    for name, small_bytes in cases.items():
+        vt = VersionedTable(spark, str(tmp_path / name))
+        n = 12 if name == "too_many_bytes" else MAX_PATHS + 8
+        vt.write(spark.range(200).repartition(n))
+        assert len(vt.files()) == n
+        assert _paths(vt) == [os.path.relpath(vt._vdir(1), vt.path)]
+        assert _jobs(spark, vt.read)[1] == 0
+        monkeypatch.setattr(versioned, "SMALL_FILE_BYTES", small_bytes(
+            [os.path.getsize(f) for f in vt.files()]
+        ))
+        f = vt.files()[0]
+        gone = {r.id for r in spark.read.parquet(f).collect()}
+        want = sorted(({r.id for r in vt.read().collect()} - gone) | {1000})
+        vt.write(Delta(add=[(1000,)], drop=frozenset([vt.relpath(f)])))
+        assert gone and sorted(r.id for r in vt.read().collect()) == want, name
+        assert _jobs(spark, vt.read)[1] == 0, name
+        got = _paths(vt)
+        if name == "merged":
+            assert len(got) <= MAX_SMALL_FILES
+        elif name == "too_many_bytes":  # the dir's other files and the new one
+            assert len(got) == n
+        else:
+            assert got == [os.path.join(os.path.relpath(vt._vdir(2), vt.path), "c")]
+        vt.vacuum(keep_last=1)
+        assert sorted(r.id for r in vt.read().collect()) == want, name
+
+
+def test_merge_keeps_spark_written_timestamps_outside_nanosecond_range(spark, tmp_path):
+    """The small-file merge reads Spark-written (INT96) timestamps as
+    microseconds: a 9999-12-31 sentinel survives it."""
+    import datetime
+
+    from oxidsql_spark import versioned
+    from oxidsql_spark.versioned import Delta
+
+    vt = VersionedTable(spark, str(tmp_path / "ts"))
+    vt.write(spark.sql("SELECT 0L AS id, TIMESTAMP'9999-12-31 23:59:59' AS ts"))
+    for i in range(1, versioned.MAX_SMALL_FILES + 2):
+        vt.write(Delta(add=[(i, datetime.datetime(2020, 1, i))]))
+    assert len(_paths(vt)) < versioned.MAX_SMALL_FILES  # the merge ran
+    assert vt.read().filter("id = 0").first().ts == vt.read(1).first().ts
+    assert vt.read().filter("id = 0").first().ts.year == 9999
+
+
+def test_delta_dropping_an_unreferenced_file_raises(spark, tmp_path):
+    """A Delta that drops a file the latest version does not reference
+    fails instead of keeping that file's rows beside their rewrite."""
+    import pytest
+
+    from oxidsql_spark.versioned import Delta
+
+    vt = VersionedTable(spark, str(tmp_path / "d"))
+    vt.write(spark.range(4))
+    with pytest.raises(ValueError, match="not files of the latest version"):
+        vt.write(Delta(add=[(9,)], drop=frozenset(["_data/v00000001/nope.parquet"])))
+    assert vt.versions() == [1]
+
+
+def test_dml_above_driver_row_bound_rewrites_the_whole_table(spark, tmp_path, monkeypatch):
+    """Above the driver-row bound a DELETE or UPDATE collects nothing
+    and commits the whole table as one rewritten dir."""
+    from oxidsql_spark import database
+
+    db = _durable(spark, tmp_path)
+    vt = db._vt("t")
+    monkeypatch.setattr(database, "_DRIVER_ROWS", -1)
+    for stmt in ["DELETE FROM t WHERE id < 3", "UPDATE t SET v = v + 10 WHERE id = 5"]:
+        db.query(stmt)
+        assert _paths(vt) == [os.path.relpath(vt._vdir(vt.latest_version()), vt.path)], stmt
+    assert _rows(db.query("SELECT id, v FROM t WHERE id < 6")) == [(3, 0), (4, 1), (5, 12)]
