@@ -213,6 +213,23 @@ def _split_top_level(s: str) -> list[str]:
 _DRIVER_ROWS = 25_000
 
 
+def _over_cap_counts(capped: list[ColumnSpec], value) -> list:
+    """One aggregate per VARCHAR(n) column: how many of its values,
+    ``value(column name)``, are longer than n."""
+    return [F.sum((F.length(value(c.name)) > c.length).cast("long")).alias(c.name) for c in capped]
+
+
+def _reject_over_cap(capped: list[ColumnSpec], counts) -> None:
+    """The reference rejects an over-length string (types.rs:182-191):
+    raise for the first column of ``capped`` that ``counts`` (by name)
+    gives a nonzero over-length count."""
+    for c in capped:
+        if counts[c.name]:
+            raise AnalyzerError(
+                f"{counts[c.name]} value(s) exceed VARCHAR({c.length}) for column '{c.name}'"
+            )
+
+
 @dataclass
 class _Touched:
     """A DELETE's or UPDATE's touched rows (see ``_touched``)."""
@@ -1676,19 +1693,7 @@ class OxidSparkDatabase:
             # source can't pass the check and then commit different
             # values; all caps are counted in one job, not one per column.
             cast = cast.localCheckpoint(eager=True)
-            counts = cast.select(
-                *[
-                    F.sum((F.length(s.name) > s.length).cast("long")).alias(s.name)
-                    for s in capped
-                ]
-            ).first()
-            for s in capped:
-                over = counts[s.name] or 0
-                if over:
-                    raise AnalyzerError(
-                        f"{over} value(s) exceed VARCHAR({s.length}) for "
-                        f"column '{s.name}'"
-                    )
+            _reject_over_cap(capped, cast.select(*_over_cap_counts(capped, F.col)).first())
         if name in self._contracts:
             # pin the batch so the gated rows are the committed rows even
             # for a non-deterministic source
@@ -1736,8 +1741,10 @@ class OxidSparkDatabase:
         # subtract the deleted rows' counts from the counting sketches
         # BEFORE the view swap (the heap.rs:296-311 decrement path) —
         # stats stay fresh with no rescan of the surviving table
-        self._stats[name].delete_batch(
-            hit.frame if hit.rows is None else hit.rows, lambda s: keep(s.alias(name))
+        self._stats[name].update(
+            [],
+            pre_image=hit.frame if hit.rows is None else hit.rows,
+            rewrite=lambda s: keep(s.alias(name)),
         )
         self._rewrite(name, hit, keep)
         self._save_stats(name)
@@ -1800,13 +1807,25 @@ class OxidSparkDatabase:
         # post-image rides the job that finds the touched rows, and the
         # sample takes the same rewrite
         hit = self._touched(name, cond, tuple(sets.values()))
+        # a SET on a VARCHAR(n) column is checked as INSERT checks it
+        # (types.rs:182-191), before anything is folded or committed
+        capped = [
+            c for c in self._tables[name] if c.name in sets and c.type_name == "varchar" and c.length
+        ]
         if hit.rows is None:
             pre, post = hit.frame, apply_sets(hit.frame)
+            if capped:
+                _reject_over_cap(capped, hit.frame.select(*_over_cap_counts(capped, sets.get)).first())
         else:
             pre, post = hit.rows, []
             for row, vals in zip(hit.rows, hit.extra):
                 new = dict(zip(sets, vals))
                 post.append(tuple(new.get(c, v) for c, v in zip(types, row)))
+            at = list(types).index
+            _reject_over_cap(
+                capped,
+                {c.name: sum(len(r[at(c.name)] or "") > c.length for r in post) for c in capped},
+            )
         self._stats[name].update(post, pre_image=pre, rewrite=lambda s: rewrite(s.alias(name)))
         self._rewrite(name, hit, rewrite)
         self._save_stats(name)

@@ -383,8 +383,8 @@ def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends on partition layout and engine), a content-addressed sample is
     reproducible across cluster sizes, repartitions, and engines — the
     form a production corpus pipeline pins its eval/holdout splits with.
-    The RNG path (df.sample, scan-pushed) remains in
-    statistics.TableSample where only the distribution matters."""
+    The facade's planner sample (statistics.OnlineTableStats) is a
+    bottom-k over content hashes too, kept up by every statement."""
     o = table(spark, sf_dir, "orders")
     h = F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10).cast("long")
     return o.filter(h % 10000 < 500).select("o_orderkey", "o_totalprice")
@@ -533,8 +533,8 @@ def correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stats_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table profiling — the query-level face of the statistics layer
-    (rowcount + ndv + min/max; what ANALYZE TABLE persists for CBO and
-    what the reference maintains online, heap.rs:245-292)."""
+    (rowcount + ndv + min/max; what the reference maintains online,
+    heap.rs:245-292, and statistics.OnlineTableStats per facade table)."""
     o = table(spark, sf_dir, "orders")
     return o.agg(
         F.lit("orders").alias("tbl"),

@@ -1,20 +1,20 @@
-"""Statistics capabilities — the reference's 'crown jewels' (SURVEY §4)
-mapped to Spark-native equivalents.
+"""Statistics — the reference's 'crown jewels' (SURVEY §4), kept the
+way the reference keeps them: online, advanced by every statement, with
+no batch re-derivation step.
 
-Reference machinery → Spark twin:
-* online cardinality counter + Counting-HLL ndv sketches per column
-  (access/heap.rs:245-292, statistics/counting_hyperloglog.rs)
-  → ``analyze_table`` (ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS —
-  Catalyst's CBO consumes rowCount/ndv the way DPccp was meant to
-  consume the reference's sketches) and ``ndv_sketch`` for the
-  query-level HLL (approx_count_distinct — same sketch family);
-* 1024-row reservoir sample per table, predicates executed against the
-  sample for cardinality estimation (planner/bottomup.rs:111-168,
-  SAMPLE_SIZE catalog/mod.rs:37)
-  → ``TableSample``: a seeded ``df.sample`` materialized once (cheap at
-  any scale — the sample is tiny and reusable), with
-  ``estimate_selectivity`` reproducing the estimate = matching/total,
+Reference machinery → Spark twin, all held by ``OnlineTableStats``:
+* online cardinality counter (access/heap.rs:245-292) → ``rowcount``,
+  moved by each statement's one signed fold;
+* Counting-HLL ndv sketch per column (statistics/counting_hyperloglog.rs)
+  → ``CountingHLL``, fed (bucket, rho) counts by ``_SignedCounter``:
+  a projection over driver rows (no job) or one aggregation query;
+* 1024-row reservoir sample (heap.rs:258-289, SAMPLE_SIZE
+  catalog/mod.rs:37) → a bottom-k hash-priority sample, and
+  ``estimate_cardinality`` reproducing estimate = matching/total,
   floored at base/(2·SAMPLE_SIZE) and 1 (bottomup.rs:159-161).
+
+The count-min sketch at the end is a query operator (per-item
+frequencies), not planner statistics.
 """
 
 from __future__ import annotations
@@ -28,109 +28,6 @@ from pyspark.sql import types as T
 from .functions import local_rows_df
 
 SAMPLE_SIZE = 1024  # the reference's SAMPLE_SIZE (catalog/mod.rs:37)
-SAMPLE_SEED = 42
-
-
-class TableSample:
-    """Persisted-in-memory seeded sample of a table — the Spark twin of
-    the reference's reservoir-sample shadow table (heap.rs:258-289).
-
-    At 100 TB the sample is built with one pass (df.sample pushes the
-    bernoulli filter into the scan) and cached; every subsequent
-    estimate is driver-local arithmetic over ≤ ~SAMPLE_SIZE rows."""
-
-    def __init__(self, df: DataFrame, sample_size: int = SAMPLE_SIZE, seed: int = SAMPLE_SEED):
-        self.base_count = df.count()
-        if self.base_count == 0:
-            fraction = 0.0
-        else:
-            # oversample slightly then cap — df.sample is approximate
-            fraction = min(1.0, (sample_size * 1.2) / self.base_count)
-        self.sample = df.sample(fraction=fraction, seed=seed).limit(sample_size).cache()
-        self.sample_count = self.sample.count()
-
-    def close(self) -> None:
-        """Release the cached sample blocks.  The sample is bounded
-        (≤ ~SAMPLE_SIZE rows), but a session that profiles many tables
-        should still return the storage — same lifecycle discipline as
-        cachescope (a TableSample owns its cache, so it exposes its own
-        release instead of the scope ledger)."""
-        self.sample.unpersist(blocking=True)
-
-    def __enter__(self) -> "TableSample":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-    def estimate_selectivity(self, predicate: Column | str) -> float:
-        """matching/total over the sample (bottomup.rs:121-161)."""
-        if self.sample_count == 0:
-            return 1.0
-        pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        matching = self.sample.filter(pred).count()
-        return matching / self.sample_count
-
-    def estimate_cardinality(self, predicate: Column | str) -> int:
-        """estimate = sel × base, floored at base/(2·SAMPLE_SIZE) and 1 —
-        exactly the reference's floor rule (bottomup.rs:159-161)."""
-        est = self.estimate_selectivity(predicate) * self.base_count
-        floor = self.base_count / (2 * SAMPLE_SIZE)
-        return max(int(est), int(floor), 1)
-
-    def conjunct_counts(self, predicates: list) -> tuple[int, list[int]]:
-        """ONE pass over the sample accumulating the full-match count and
-        per-conjunct partial-match counts — the same accumulation the
-        reference's sample scan performs into ``partial_matching_counts``
-        (bottomup.rs:133-156). A NULL predicate result counts as no match
-        (sum skips NULLs), matching SQL WHERE semantics."""
-        preds = [F.expr(p) if isinstance(p, str) else p for p in predicates]
-        full = preds[0]
-        for p in preds[1:]:
-            full = full & p
-        row = self.sample.agg(
-            F.sum(full.cast("long")).alias("__full__"),
-            *[F.sum(p.cast("long")).alias(f"__p{i}__") for i, p in enumerate(preds)],
-        ).first()
-        return (
-            int(row["__full__"] or 0),
-            [int(row[f"__p{i}__"] or 0) for i in range(len(preds))],
-        )
-
-    def estimate_conjunct_selectivity(
-        self, predicates: list, zero_match_ndv: list[int | None] | None = None
-    ) -> float:
-        """The reference's full estimation ladder (statistics/mod.rs:24-31,
-        the fallback its TODO at bottomup.rs:133 plans to build on the
-        partial counts):
-
-        1. any sample row matches the WHOLE conjunction → matching/total;
-        2. none does → combine per-conjunct partial-match fractions with
-           exponentially decaying weights (most-selective at full weight,
-           then sqrt of the next, etc. — the Moerkotte-style backoff the
-           essay cites), which always lands at or below the most
-           selective single conjunct;
-        3. a conjunct with ZERO partial matches contributes 1/ndv when
-           its column ndv is known (equi-predicate rule), else the
-           1/sample_count resolution bound."""
-        if self.sample_count == 0:
-            return 1.0
-        full, partial = self.conjunct_counts(predicates)
-        if full > 0:
-            return full / self.sample_count
-        sels = []
-        for i, c in enumerate(partial):
-            if c > 0:
-                sels.append(c / self.sample_count)
-            elif zero_match_ndv and i < len(zero_match_ndv) and zero_match_ndv[i]:
-                sels.append(1.0 / zero_match_ndv[i])
-            else:
-                sels.append(1.0 / self.sample_count)
-        sels.sort()
-        sel = 1.0
-        for i, s in enumerate(sels):
-            sel *= s ** (0.5**i)
-        return min(sel, 1.0)
 
 
 class CountingHLL:
@@ -146,9 +43,9 @@ class CountingHLL:
     and the probabilistic counter is a memory trick, not a semantic one.
 
     The per-value hashing/counting runs IN SPARK (see
-    ``column_bucket_rho_counts``): at most m×max_rho groups survive
-    map-side combine, so folding any batch — or a 100 TB table — ships
-    only ~thousands of count rows to the driver.
+    ``_SignedCounter``): at most m×max_rho groups survive map-side
+    combine, so folding any batch — or a 100 TB table — ships only
+    ~thousands of count rows to the driver.
     """
 
     def __init__(self, m: int = 64):
@@ -293,14 +190,6 @@ def _bit_length(w):
         n += big * s
         w = np.where(big, w >> np.uint64(s), w)
     return n + (w > 0)
-
-
-def column_bucket_rho_counts(
-    batch: DataFrame, cols: list[str], m: int = 64
-) -> dict[str, list[tuple[int, int, int]]]:
-    """One exact mini-aggregation producing CountingHLL input for every
-    column at once (every row counted +1, see ``_SignedCounter``)."""
-    return _SignedCounter(cols, m).counts(batch.select(*cols, F.lit(1).alias("__sign__")))
 
 
 class OnlineTableStats:
@@ -469,9 +358,10 @@ class OnlineTableStats:
         pre_image: DataFrame | list | None = None,
         rewrite: Callable[[DataFrame], DataFrame] | None = None,
     ) -> None:
-        """Fold one statement's inserted or rewritten rows in with ONE
-        signed count (buffered rows +1, ``pre_image`` −1, ``batch`` +1);
-        each is a frame or a list of driver rows (see ``_fold``).
+        """Fold one statement's rows in with ONE signed count (buffered
+        rows +1, ``pre_image`` −1, ``batch`` +1); each is a frame or a
+        list of driver rows (see ``_fold``): the one fold entry point of
+        INSERT … SELECT, UPDATE and DELETE.
 
         * INSERT … SELECT: ``update(batch)``; the batch's rows are sample
           candidates (one bounded top-k job).
@@ -480,8 +370,18 @@ class OnlineTableStats:
           ``_rewritten_sample``).  Sample rows are rewritten IN PLACE and
           keep their priority (a touched row draws no new one): the
           sample stays the same k rows of the table, now holding their
-          post-image values.  Given the touched rows as driver lists,
-          this runs no job."""
+          post-image values.
+        * DELETE: ``update([], pre_image=deleted, rewrite=keep)``: the
+          deleted rows count −1, the reference CountingHLL's decrement
+          path (counting_hyperloglog.rs:76-180 via heap.rs:296-311), with
+          no rescan of the surviving table.  A value deleted while
+          duplicates remain keeps its register alive (its counter stays
+          positive), the property max-register HLLs cannot provide.
+          ``keep``, the statement's own filter of surviving rows, drops
+          the deleted rows from the sample, NULL-bearing ones included.
+
+        Given the touched rows as driver lists, UPDATE and DELETE run no
+        job."""
         if rewrite is not None:
             sample = self._rewritten_sample(rewrite)
             self._fold([(pre_image, -1), (batch, 1)])
@@ -497,17 +397,25 @@ class OnlineTableStats:
         """Serialize the full stats state (counter matrices, sample,
         buffered rows) — the twin of the reference persisting its sketch
         blobs into catalog VarBinary columns (catalog/mod.rs:574-577).
-        A few hundred KB per table regardless of table size."""
+        Each counter matrix is stored as its nonzero counters (flat
+        indices and values), so the blob grows with the distinct values
+        seen, up to a few hundred KB per column, whatever the table's
+        size."""
         import pickle
 
+        import numpy as np
+
+        sketches = {}
+        for c, sk in self._sketches.items():
+            # a column's matrix is mostly zeros: keep the nonzero counters
+            idx = np.flatnonzero(sk._counts)
+            sketches[c] = (sk.m, idx.astype(np.int32).tobytes(), sk._counts.flat[idx].tobytes())
         return pickle.dumps(
             {
                 "rowcount": self.rowcount,
                 "seq": self._seq,
                 "sample_size": self.sample_size,
-                "sketches": {
-                    c: (sk.m, sk._counts.tobytes()) for c, sk in self._sketches.items()
-                },
+                "sketches": sketches,
                 "sample": self._sample,
                 "pending": self._pending,
                 "unsampled": self._unsampled,
@@ -526,35 +434,22 @@ class OnlineTableStats:
         self = cls(spark, schema, sample_size=st["sample_size"])
         self.rowcount = st["rowcount"]
         self._seq = st["seq"]
-        self._sample = [tuple(x) if not isinstance(x, tuple) else x for x in st["sample"]]
+        self._sample = st["sample"]
         self._pending = st["pending"]
-        # a blob written before the sample buffer existed had sampled
-        # none of its pending rows
-        self._unsampled = st.get("unsampled", list(st["pending"]))
-        for c, (m, raw) in st["sketches"].items():
+        self._unsampled = st["unsampled"]
+        for c, (m, idx, vals) in st["sketches"].items():
             sk = CountingHLL(m)
-            sk._counts = np.frombuffer(raw, dtype=np.int64).reshape(
-                (m, sk.max_rho + 1)
-            ).copy()
+            sk._counts.flat[np.frombuffer(idx, dtype=np.int32)] = np.frombuffer(vals, dtype=np.int64)
             self._sketches[c] = sk
         return self
 
     def delete_batch(
         self, deleted: DataFrame | list, rewrite: Callable[[DataFrame], DataFrame]
     ) -> None:
-        """Fold a DELETE in: the ``deleted`` rows (a frame, or a list of
-        driver rows — then with no job) count −1 in the same one signed
-        count that folds the buffered rows — the reference CountingHLL's
-        decrement path (counting_hyperloglog.rs:76-180 via
-        heap.rs:296-311), no rescan of the surviving table.  A value
-        deleted while duplicates remain keeps its register alive (its
-        counter stays positive) — exactly the property max-register HLLs
-        cannot provide.  ``rewrite`` is the statement's own filter of
-        SURVIVING rows, applied to the sample as a ``LocalRelation`` with
-        no job; it drops NULL-bearing rows exactly as the table does."""
-        sample = self._rewritten_sample(rewrite)
-        self._fold([(deleted, -1)])
-        self._sample = sample
+        """``update([], pre_image=deleted, rewrite=rewrite)``.  No engine
+        path calls it: it stays because ``perfbench/run.py`` wraps this
+        name in its traced runs."""
+        self.update([], pre_image=deleted, rewrite=rewrite)
 
     def rebuild(self, df: DataFrame | list) -> None:
         """Full re-derivation from the table's rows (create / reopen /
@@ -593,29 +488,6 @@ class OnlineTableStats:
         est = matching / total * self.rowcount
         floor = self.rowcount / (2 * self.sample_size)
         return max(int(est), int(floor), 1)
-
-
-def ndv_sketch(df: DataFrame, *cols: str, rsd: float = 0.05) -> dict[str, int]:
-    """Per-column approximate distinct counts via HyperLogLog++ — the
-    query-level twin of the reference's CountingHLL (its test bound is
-    ±20% at 200k distinct; HLL++ at rsd=0.05 is tighter)."""
-    row = df.agg(
-        *[F.approx_count_distinct(c, rsd).alias(c) for c in cols]
-    ).collect()[0]
-    return {c: row[c] for c in cols}
-
-
-def exact_ndv(df: DataFrame, *cols: str) -> dict[str, int]:
-    row = df.agg(*[F.countDistinct(c).alias(c) for c in cols]).collect()[0]
-    return {c: row[c] for c in cols}
-
-
-def analyze_table(spark: SparkSession, name: str, columns: list[str] | None = None) -> None:
-    """ANALYZE TABLE — refresh the catalog statistics CBO join-reorder
-    consumes; the batch twin of the reference's online stats maintenance
-    (re-run after each ingest batch, SURVEY §7 risk register)."""
-    cols = f" FOR COLUMNS {', '.join(columns)}" if columns else ""
-    spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS{cols}")
 
 
 # ---------------------------------------------------------------------------

@@ -82,3 +82,26 @@ def test_delete_update_with_subquery_predicates(db):
     assert got == {0: 0, 2: -1, 4: -1, 5: 50}
     db.query("DROP TABLE facts")
     db.query("DROP TABLE bad_ids")
+
+
+@pytest.mark.parametrize("above_bound", [False, True])
+def test_update_enforces_varchar_cap(spark, tmp_path, monkeypatch, above_bound):
+    """A SET on a VARCHAR(n) column is rejected as INSERT rejects it
+    (types.rs:182-191), on both sides of the driver-row bound: nothing is
+    committed and the statistics stay as they were.  A SET that no row
+    takes commits, and a value within the cap is written."""
+    from oxidsql_spark import database
+
+    if above_bound:
+        monkeypatch.setattr(database, "_DRIVER_ROWS", -1)
+    db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
+    db.query("CREATE TABLE t (id INT, s VARCHAR(2))")
+    db.query("INSERT INTO t VALUES (1, 'a'), (2, NULL)")
+    version, blob = db._vt("t").latest_version(), db.stats("t").dumps()
+    with pytest.raises(AnalyzerError, match=r"1 value\(s\) exceed VARCHAR\(2\)"):
+        db.query("UPDATE t SET s = concat(s, 'bcdef') WHERE id > 0")
+    assert db._vt("t").latest_version() == version
+    assert db.stats("t").dumps() == blob
+    db.query("UPDATE t SET s = 'abcdef' WHERE id > 5")
+    db.query("UPDATE t SET s = 'zz', id = id + 1 WHERE id = 1")
+    assert {r.s: r.id for r in db.query("SELECT id, s FROM t").collect()} == {None: 2, "zz": 2}

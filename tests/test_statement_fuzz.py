@@ -6,7 +6,13 @@ with a storage dir and an in-memory DuckDB with the same random
 statements: INSERT … VALUES and INSERT … SELECT with NULLs, DELETE and
 UPDATE under AND-connected comparison predicates (NULL operands
 included), TRUNCATE, ``VACUUM … RETAIN k``, reopening the storage dir
-and ``VERSION AS OF v``.  After every step:
+and ``VERSION AS OF v``.  Some INSERT rows and UPDATE assignments break
+a column's type: a string over the VARCHAR(6) cap, or a value out of
+the SMALLINT range.  DuckDB rejects the SMALLINT ones itself but keeps
+no VARCHAR(n) cap, so a statement whose DuckDB result holds an
+over-length string is rolled back there.  Whenever DuckDB's side is
+rejected, the facade must reject the statement too and commit nothing.
+After every step:
 
 * the table equals DuckDB's as a multiset;
 * ``OnlineTableStats.rowcount`` is exact;
@@ -25,14 +31,17 @@ import os
 from collections import Counter
 
 import duckdb
+import pytest
 from hypothesis import HealthCheck, settings
 from hypothesis import strategies as st
 from hypothesis.stateful import RuleBasedStateMachine, initialize, invariant, rule
+from pyspark.errors import ArithmeticException
 
-from oxidsql_spark.database import OxidSparkDatabase
+from oxidsql_spark.database import AnalyzerError, OxidSparkDatabase
 
 _COLS = ("a", "b", "c", "s")
-_DDL = "CREATE TABLE t (a BIGINT, b INT, c SMALLINT, s VARCHAR(6))"
+_CAP = 6
+_DDL = f"CREATE TABLE t (a BIGINT, b INT, c SMALLINT, s VARCHAR({_CAP}))"
 _DUCK_DDL = "CREATE TABLE t (a BIGINT, b INTEGER, c SMALLINT, s VARCHAR)"
 
 _INT = {"a": st.integers(-5, 30), "b": st.integers(-3, 8), "c": st.integers(0, 5)}
@@ -46,9 +55,18 @@ def _lit(v) -> str:
     return f"'{v}'" if isinstance(v, str) else str(v)
 
 
+def _values(row) -> str:
+    return f"({', '.join(map(_lit, row))})"
+
+
 _ROW = st.tuples(
     *[st.one_of(st.none(), _INT[c]) for c in "abc"], st.one_of(st.none(), _STR)
-).map(lambda r: f"({', '.join(map(_lit, r))})")
+).map(_values)
+# one value over the VARCHAR cap or out of the SMALLINT range
+_BAD_ROW = st.one_of(
+    st.tuples(_INT["a"], _INT["b"], _INT["c"], st.sampled_from(["abcdefg", "bbbbbbbbb"])),
+    st.tuples(_INT["a"], _INT["b"], st.sampled_from([-32769, 32768, 40000]), _STR),
+).map(_values)
 
 
 @st.composite
@@ -72,6 +90,9 @@ _PRED = st.lists(_atom(), min_size=1, max_size=2).map(" AND ".join)
 _SET = st.sampled_from(
     ["b = b + 1", "a = a - 7", "s = 'ba'", "s = NULL", "c = NULL", "b = c", "c = c + 1"]
 )
+# over the cap or out of range on every row they touch, or (``||``) only
+# on rows whose string is 2 or more long
+_BAD_SET = st.sampled_from(["s = 'abcdefg'", "s = s || 'abcde'", "c = c + 40000"])
 
 # |ndv - exact| <= 2 + exact / 10.  In the linear-counting range the
 # 1024-bucket sketch's standard error is sqrt(m (e^t - t - 1)), t = n/m:
@@ -86,6 +107,7 @@ def _rows(df) -> Counter:
 class StatementMachine(RuleBasedStateMachine):
     spark = None
     tmp = None
+    rejected = 0  # statements both sides rejected, over all examples
 
     def __init__(self):
         super().__init__()
@@ -109,9 +131,23 @@ class StatementMachine(RuleBasedStateMachine):
         self.history[self.db._vt("t").latest_version()] = self._model()
 
     def _both(self, sql: str, duck_sql: str | None = None) -> None:
-        self.db.query(sql)
-        self.duck.execute(duck_sql or sql)
-        self._committed()
+        self.duck.execute("BEGIN TRANSACTION")
+        try:
+            self.duck.execute(duck_sql or sql)
+            q = f"SELECT count(*) FROM t WHERE length(s) > {_CAP}"
+            ok = not self.duck.execute(q).fetchone()[0]
+        except duckdb.Error:  # SMALLINT range
+            ok = False
+        self.duck.execute("COMMIT" if ok else "ROLLBACK")
+        if ok:
+            self.db.query(sql)
+            self._committed()
+            return
+        version = self.db._vt("t").latest_version()
+        with pytest.raises((AnalyzerError, ArithmeticException)):
+            self.db.query(sql)
+        assert self.db._vt("t").latest_version() == version, sql
+        type(self).rejected += 1
 
     @initialize(rows=st.lists(_ROW, min_size=3, max_size=8))
     def seed_rows(self, rows):
@@ -121,14 +157,20 @@ class StatementMachine(RuleBasedStateMachine):
     # switches whole rules off per example, which in a short run left
     # most examples with one or two kinds of step.
     @rule(
-        kind=st.integers(0, 19),
+        kind=st.integers(0, 23),
         rows=st.lists(_ROW, min_size=1, max_size=4),
         pred=_PRED,
         sets=st.lists(_SET, min_size=1, max_size=2, unique_by=lambda s: s[0]),
         n=st.integers(1, 40),
+        bad_row=_BAD_ROW,
+        bad_set=_BAD_SET,
     )
-    def step(self, kind, rows, pred, sets, n):
-        if kind < 5:
+    def step(self, kind, rows, pred, sets, n, bad_row, bad_set):
+        if kind >= 22:
+            self._both(f"UPDATE t SET {bad_set} WHERE {pred}")
+        elif kind >= 20:
+            self._both(f"INSERT INTO t VALUES {', '.join([*rows, bad_row])}")
+        elif kind < 5:
             self._both(f"INSERT INTO t VALUES {', '.join(rows)}")
         elif kind < 8:
             if n % 2:  # unnamed columns backfill NULL
@@ -188,6 +230,7 @@ def test_statement_fuzz_matches_duckdb(spark, tmp_path_factory):
     slow = os.environ.get("RUN_SLOW_TESTS") == "1"
     StatementMachine.spark = spark
     StatementMachine.tmp = tmp_path_factory
+    StatementMachine.rejected = 0
     run_state_machine_as_test(
         StatementMachine,
         settings=settings(
@@ -198,3 +241,4 @@ def test_statement_fuzz_matches_duckdb(spark, tmp_path_factory):
             suppress_health_check=list(HealthCheck),
         ),
     )
+    assert StatementMachine.rejected > 0  # the rejection path ran

@@ -8,74 +8,50 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from oxidsql_spark.sources import table
-from oxidsql_spark.statistics import SAMPLE_SIZE, TableSample, exact_ndv, ndv_sketch
+from oxidsql_spark.statistics import SAMPLE_SIZE, OnlineTableStats
+
+
+def _rebuilt(spark, df) -> OnlineTableStats:
+    st = OnlineTableStats(spark, df.schema)
+    st.rebuild(df)
+    return st
 
 
 def test_selectivity_estimate_within_tolerance(spark, sf_dir):
     """The reference's estimator test shape (bottomup.rs:599-605: expect
-    ~4/10 for id<5), scaled: estimate vs true selectivity on orders."""
-    o = table(spark, sf_dir, "orders")
-    ts = TableSample(o)
-    true_sel = o.filter(F.col("o_totalprice") > 200000.0).count() / ts.base_count
-    est_sel = ts.estimate_selectivity(F.col("o_totalprice") > 200000.0)
+    ~4/10 for id<5), scaled: the maintained sample's estimate vs the true
+    selectivity on orders."""
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    st = _rebuilt(spark, o)
+    true_sel = o.filter(F.col("o_totalprice") > 200000.0).count() / st.rowcount
+    est_sel = st.estimate_cardinality(F.col("o_totalprice") > 200000.0) / st.rowcount
     assert abs(est_sel - true_sel) < 0.08, (est_sel, true_sel)
 
 
 def test_cardinality_floor_rule(spark, sf_dir):
     """floor at base/(2*SAMPLE_SIZE) and 1 — bottomup.rs:159-161."""
-    o = table(spark, sf_dir, "orders")
-    ts = TableSample(o)
+    st = _rebuilt(spark, table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice"))
     # impossible predicate → floored, never 0
-    est = ts.estimate_cardinality(F.col("o_totalprice") < -1.0)
-    assert est == max(int(ts.base_count / (2 * SAMPLE_SIZE)), 1)
+    est = st.estimate_cardinality(F.col("o_totalprice") < -1.0)
+    assert est == max(int(st.rowcount / (2 * SAMPLE_SIZE)), 1)
 
 
 def test_ndv_sketch_accuracy(spark, sf_dir):
-    """HLL++ ndv within the reference's own ±20% test bound
+    """The CountingHLL ``ndv`` within the reference's own ±20% test bound
     (counting_hyperloglog.rs:264-291)."""
-    li = table(spark, sf_dir, "lineitem")
-    approx = ndv_sketch(li, "l_orderkey", "l_partkey")
-    exact = exact_ndv(li, "l_orderkey", "l_partkey")
-    for c in approx:
-        assert abs(approx[c] - exact[c]) / exact[c] < 0.2, (c, approx[c], exact[c])
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    st = _rebuilt(spark, li)
+    exact = li.agg(*[F.countDistinct(c).alias(c) for c in li.columns]).first()
+    for c in li.columns:
+        assert abs(st.ndv(c) - exact[c]) / exact[c] < 0.2, (c, st.ndv(c), exact[c])
 
 
 def test_sample_deterministic(spark, sf_dir):
-    o = table(spark, sf_dir, "orders")
-    a = TableSample(o).sample.select("o_orderkey").collect()
-    b = TableSample(o).sample.select("o_orderkey").collect()
-    assert [r.o_orderkey for r in a] == [r.o_orderkey for r in b]
-
-
-def test_analyze_feeds_cbo_and_broadcast_choice(spark, sf_dir):
-    """ANALYZE TABLE statistics must reach the optimizer (the CBO path
-    that subsumes the reference's DPccp + sample estimator): the leaf
-    rowCount equals the analyzed count, and a small managed table joins
-    broadcast WITHOUT an explicit hint — size chosen from catalog stats,
-    exactly how the 100 TB cluster decides build sides."""
-    from oxidsql_spark.sources import table
-    from oxidsql_spark.statistics import analyze_table
-
-    for t in ("cbo_nation", "cbo_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    table(spark, sf_dir, "nation").write.saveAsTable("cbo_nation")
-    table(spark, sf_dir, "lineitem").write.saveAsTable("cbo_lineitem")
-    try:
-        analyze_table(spark, "cbo_nation", ["n_nationkey", "n_name"])
-        analyze_table(spark, "cbo_lineitem")
-
-        n = spark.table("cbo_nation")
-        stats = n._jdf.queryExecution().optimizedPlan().stats()
-        assert stats.rowCount().isDefined()
-        assert stats.rowCount().get() == 25
-
-        li = spark.table("cbo_lineitem")
-        j = li.join(n, li.l_suppkey == n.n_nationkey)  # no broadcast() hint
-        plan = j._jdf.queryExecution().sparkPlan().toString()
-        assert "BroadcastHashJoin" in plan
-    finally:
-        for t in ("cbo_nation", "cbo_lineitem"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    """Two rebuilds from the same table keep the same sample rows, with
+    the same priorities."""
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    a, b = _rebuilt(spark, o), _rebuilt(spark, o)
+    assert a._sample and a._sample == b._sample
 
 
 def test_online_stats_fresh_after_insert_no_analyze(spark):
@@ -107,49 +83,23 @@ def test_online_stats_fresh_after_insert_no_analyze(spark):
     db.query("DROP TABLE t_online")
 
 
-def test_conjunct_fallback_estimator(spark, sf_dir):
-    """statistics/mod.rs:24-31 estimation ladder on partial-match counts
-    (bottomup.rs:133-156): full-match primary, exponential-backoff
-    combine when no sample row matches every conjunct, 1/ndv for a
-    zero-match equi conjunct."""
-    from oxidsql_spark.sources import table
-    from oxidsql_spark.statistics import TableSample
+def _counts(df, cols: list[str], m: int):
+    """(bucket, rho, count) rows per column, every row of ``df`` +1."""
+    from oxidsql_spark.statistics import _SignedCounter
 
-    orders = table(spark, sf_dir, "orders")
-    ts = TableSample(orders, sample_size=1 << 30)  # sample == full table
-
-    # 1. full matches exist → plain matching/total (equal to 1-predicate path)
-    sel = ts.estimate_conjunct_selectivity(
-        ["o_orderpriority = '1-URGENT'", "o_totalprice > 100"]
-    )
-    exact = orders.filter("o_orderpriority = '1-URGENT' AND o_totalprice > 100").count()
-    assert abs(sel - exact / ts.sample_count) < 1e-9
-
-    # 2. contradictory conjuncts → no full match; backoff combine must
-    # land at or below the most selective single conjunct
-    s_low = ts.estimate_selectivity("o_totalprice < 2000")
-    sel2 = ts.estimate_conjunct_selectivity(
-        ["o_totalprice < 2000", "o_totalprice > 500000"]
-    )
-    assert 0 < sel2 <= max(s_low, 1.0 / ts.sample_count) + 1e-9
-
-    # 3. zero partial matches with known ndv → 1/ndv contribution
-    full, partial = ts.conjunct_counts(["o_orderkey = -1"])
-    assert full == 0 and partial == [0]
-    sel3 = ts.estimate_conjunct_selectivity(["o_orderkey = -1"], zero_match_ndv=[15000])
-    assert abs(sel3 - 1.0 / 15000) < 1e-12
+    return _SignedCounter(cols, m).counts(df.select(*cols, F.lit(1).alias("__sign__")))
 
 
 def test_counting_hll_reference_bounds(spark):
     """CountingHLL twin of counting_hyperloglog.rs: estimate within the
     reference's own test tolerance (±20%, :264-291) at the reference
     geometry (m=64), and delete = exact counter subtraction."""
-    from oxidsql_spark.statistics import CountingHLL, column_bucket_rho_counts
+    from oxidsql_spark.statistics import CountingHLL
 
     # 200k distinct at m=64 — the reference test's own geometry
     n = 200_000
     df = spark.range(n).selectExpr("id AS a", "CAST(id % 500 AS STRING) AS b")
-    counts = column_bucket_rho_counts(df, ["a", "b"], m=64)
+    counts = _counts(df, ["a", "b"], m=64)
 
     sk_a, sk_b = CountingHLL(64), CountingHLL(64)
     sk_a.add_counts(counts["a"])
@@ -160,7 +110,7 @@ def test_counting_hll_reference_bounds(spark):
 
     # delete the top half: estimate tracks the survivors, no rescan of them
     dele = spark.range(n // 2, n).selectExpr("id AS a", "CAST(id % 500 AS STRING) AS b")
-    sk_a.add_counts(column_bucket_rho_counts(dele, ["a"], m=64)["a"], sign=-1)
+    sk_a.add_counts(_counts(dele, ["a"], m=64)["a"], sign=-1)
     assert abs(sk_a.estimate() - n // 2) <= 0.2 * (n // 2)
 
 
@@ -168,17 +118,17 @@ def test_counting_hll_duplicate_delete_property(spark):
     """The counting property max-register HLLs lack: deleting ONE copy of
     a duplicated value must not forget the value; deleting the last copy
     must."""
-    from oxidsql_spark.statistics import CountingHLL, column_bucket_rho_counts
+    from oxidsql_spark.statistics import CountingHLL
 
     vals = spark.createDataFrame([(i,) for i in range(200)] * 2, "a long")
     one_copy = spark.createDataFrame([(i,) for i in range(200)], "a long")
 
     sk = CountingHLL(1024)
-    sk.add_counts(column_bucket_rho_counts(vals, ["a"], m=1024)["a"])
+    sk.add_counts(_counts(vals, ["a"], m=1024)["a"])
     before = sk.estimate()
-    sk.add_counts(column_bucket_rho_counts(one_copy, ["a"], m=1024)["a"], sign=-1)
+    sk.add_counts(_counts(one_copy, ["a"], m=1024)["a"], sign=-1)
     assert sk.estimate() == before  # duplicates remain -> ndv unchanged
-    sk.add_counts(column_bucket_rho_counts(one_copy, ["a"], m=1024)["a"], sign=-1)
+    sk.add_counts(_counts(one_copy, ["a"], m=1024)["a"], sign=-1)
     assert sk.estimate() == 0  # last copies gone -> empty
 
 
@@ -273,17 +223,6 @@ def test_stats_checkpoint_survives_reopen_without_rescan(spark, tmp_path):
         assert st.estimate_cardinality("id < 75") > 0
     finally:
         OnlineTableStats.rebuild = orig_rebuild
-
-
-def test_table_sample_close_releases_cache(spark, sf_dir):
-    from oxidsql_spark.sources import table
-    from oxidsql_spark.statistics import TableSample
-
-    n0 = spark.sparkContext._jsc.getPersistentRDDs().size()
-    with TableSample(table(spark, sf_dir, "customer")) as ts:
-        assert ts.sample_count > 0
-        assert spark.sparkContext._jsc.getPersistentRDDs().size() == n0 + 1
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n0
 
 
 def test_count_min_overestimate_guarantee(spark, sf_dir):
@@ -470,7 +409,7 @@ def _stats_jobs_per_call(spark, monkeypatch):
 
         monkeypatch.setattr(OnlineTableStats, method, wrapper)
 
-    for m in ("add_rows", "update", "delete_batch", "estimate_cardinality"):
+    for m in ("add_rows", "update", "estimate_cardinality"):
         tagged(m)
 
     def jobs() -> dict[str, list[int]]:
@@ -484,10 +423,10 @@ def _stats_jobs_per_call(spark, monkeypatch):
 
 
 def test_dml_stats_run_one_aggregation_per_statement(spark, tmp_path, monkeypatch):
-    """DELETE and UPDATE fold their statistics with buffered INSERT rows
-    riding along: below the driver-row bound the touched rows arrive as
-    driver lists and the fold runs no job; INSERT … VALUES and
-    cardinality estimates run no job."""
+    """DELETE and UPDATE fold their statistics through ``update``, with
+    buffered INSERT rows riding along: below the driver-row bound the
+    touched rows arrive as driver lists and the fold runs no job;
+    INSERT … VALUES and cardinality estimates run no job."""
     from oxidsql_spark.database import OxidSparkDatabase
 
     db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
@@ -503,8 +442,7 @@ def test_dml_stats_run_one_aggregation_per_statement(spark, tmp_path, monkeypatc
     got = jobs()
     assert got["add_rows"] == [0, 0], got
     assert got["estimate_cardinality"] == [0, 0], got
-    assert got["delete_batch"] == [0], got
-    assert got["update"] == [0], got
+    assert got["update"] == [0, 0], got
 
 
 def test_update_rewrites_sample_in_place(spark):
@@ -531,20 +469,106 @@ def test_update_rewrites_sample_in_place(spark):
         assert final[p] == (i, -1 if i < 5 else v), (p, final[p])
 
 
-def test_stats_blob_without_sample_buffer_samples_pending_rows(spark):
-    """A blob written before buffered rows were sampled separately from
-    their counts restores with those rows still to be sampled."""
-    import pickle
-
+def test_stats_blob_round_trips(spark):
+    """``dumps`` keeps only the nonzero CountingHLL counters; ``loads``
+    restores the same counter matrices, sample and buffered rows."""
+    import numpy as np
     from pyspark.sql import types as T
 
-    from oxidsql_spark.statistics import OnlineTableStats
-
-    schema = T.StructType([T.StructField("id", T.IntegerType())])
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("s", T.StringType())]
+    )
     st = OnlineTableStats(spark, schema)
-    st.add_rows([(1,), (2,)])
-    blob = pickle.loads(st.dumps())
-    del blob["unsampled"]
-    back = OnlineTableStats.loads(spark, schema, pickle.dumps(blob))
-    assert sorted(r.id for r in back.sample_df().collect()) == [1, 2]
-    assert back.rowcount == 2 and back.ndv("id") == 2
+    st.rebuild([(i, None if i % 3 else f"v{i % 7}") for i in range(200)])
+    st.add_rows([(1000, "new"), (1001, None)])
+    blob = st.dumps()
+    back = OnlineTableStats.loads(spark, schema, blob)
+    assert back.rowcount == st.rowcount == 202
+    assert back._sample == st._sample and back._seq == st._seq
+    assert back._pending == st._pending and back._unsampled == st._unsampled
+    for c in ("id", "s"):
+        assert np.array_equal(back._sketches[c]._counts, st._sketches[c]._counts), c
+    # two dense 1024 × 56 int64 matrices would be ~0.9 MB
+    assert len(blob) < 50_000, len(blob)
+
+
+def _first_join_columns(df) -> list[str]:
+    """Output column names of the deepest join of ``df``'s optimized
+    plan: the pair of relations joined first."""
+
+    def joins(node):
+        kids = node.children()
+        found = [j for i in range(kids.size()) for j in joins(kids.apply(i))]
+        return found + [node] if node.nodeName() == "Join" else found
+
+    out = joins(df._jdf.queryExecution().optimizedPlan())[0].output()
+    return [out.apply(i).name() for i in range(out.size())]
+
+
+def test_cbo_settings_reorder_in_memory_facade_joins(spark):
+    """The session's CBO settings (``spark.sql.cbo.enabled`` and
+    ``spark.sql.cbo.joinReorder.enabled``) change no registered query's
+    plan; what they do change is the in-memory facade's multi-join order.
+    Over tables of 200k, 2k and 20 rows, Catalyst joins ``mid ⋈ small``
+    first with them on and keeps the text order, ``big ⋈ mid``, with them
+    off.  Only plans are inspected: no job runs."""
+    from oxidsql_spark.database import OxidSparkDatabase
+
+    db = OxidSparkDatabase(spark)
+    for name, cols, n, mod in (
+        ("cbo_big", "a INT, b INT", 200_000, 2000),
+        ("cbo_mid", "b INT, c INT", 2000, 20),
+        ("cbo_small", "c INT, x INT", 20, 2),
+    ):
+        db.query(f"CREATE TABLE {name} ({cols})")
+        db.query(f"INSERT INTO {name} SELECT CAST(id AS INT), CAST(id % {mod} AS INT) FROM range({n})")
+    q = (
+        "SELECT * FROM cbo_big AS big, cbo_mid AS mid, cbo_small AS small "
+        "WHERE big.b = mid.b AND mid.c = small.c AND small.x = 1"
+    )
+    sc = spark.sparkContext
+    keys = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
+    assert [spark.conf.get(k) for k in keys] == ["true", "true"]
+    sc.setJobGroup("cbo-plan-shape", "cbo-plan-shape")
+    try:
+        assert _first_join_columns(db.query(q)) == ["b", "c", "c", "x"]
+        for k in keys:
+            spark.conf.set(k, "false")
+        assert _first_join_columns(db.query(q)) == ["a", "b", "b", "c"]
+    finally:
+        for k in keys:
+            spark.conf.set(k, "true")
+        sc.setJobGroup("cbo-outside", "cbo-outside")
+        for name in ("cbo_big", "cbo_mid", "cbo_small"):
+            db.query(f"DROP TABLE {name}")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("cbo-plan-shape")) == []
+
+
+def test_online_statistics_are_the_only_statistics_code():
+    """One statistics stack: no engine module defines or calls the batch
+    statistics kit that the online ``OnlineTableStats`` replaced, nor
+    issues ``ANALYZE TABLE``.  ``OnlineTableStats.delete_batch`` is kept
+    only as a delegate to ``update`` for perfbench's traced runs, and no
+    engine module calls it."""
+    import ast
+    import re
+    from pathlib import Path
+
+    gone = {"TableSample", "ndv_sketch", "exact_ndv", "analyze_table", "column_bucket_rho_counts"}
+    pkg = Path(__file__).resolve().parent.parent / "oxidsql_spark"
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        rel = p.relative_to(pkg.parent)
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)) and node.name in gone:
+                offenders.append(f"{rel}:{node.lineno} defines {node.name}")
+            elif isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in gone | {"delete_batch"}:
+                    offenders.append(f"{rel}:{node.lineno} calls {name}()")
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if re.match(r"\s*ANALYZE\s+TABLE\b", node.value, re.IGNORECASE):
+                    offenders.append(f"{rel}:{node.lineno} issues ANALYZE TABLE")
+    assert not offenders, "the online statistics are the only statistics: " + ", ".join(offenders)
