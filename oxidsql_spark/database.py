@@ -26,6 +26,7 @@ semantics (not first-match-only), negative literals allowed.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 from dataclasses import dataclass
@@ -205,8 +206,9 @@ def _split_top_level(s: str) -> list[str]:
 
 
 # Most rows a table may hold for a DELETE or UPDATE to collect its
-# touched rows to the driver: the exact online rowcount bounds them, so
-# the driver never holds more.  Collect plus driver fold matched the
+# touched rows to the driver and rewrite the files holding them there:
+# the exact online rowcount bounds both, so the driver never holds more
+# rows than the table has.  Collect plus driver fold matched the
 # aggregation path near this size (SCALE.md, "statement cost follows
 # the delta").  Above it a statement rewrites the whole table and folds
 # its statistics in the distributed signed aggregation.
@@ -230,6 +232,28 @@ def _reject_over_cap(capped: list[ColumnSpec], counts) -> None:
             )
 
 
+def _range_checked(statement):
+    """Wrap a statement method: Spark's ANSI cast overflow met inside a
+    job (a value out of a column's integer range) is re-raised as the
+    AnalyzerError INSERT … VALUES raises.  The failed job committed
+    nothing."""
+
+    @functools.wraps(statement)
+    def run(*args, **kwargs):
+        from pyspark.errors import ArithmeticException
+
+        try:
+            return statement(*args, **kwargs)
+        except ArithmeticException as e:
+            if e.getCondition() != "CAST_OVERFLOW":
+                raise
+            p = e.getMessageParameters()  # a SQL literal: 40000, 2147483648L
+            value, to = p["value"].rstrip("LSYBD"), p["targetType"].strip('"').lower()
+            raise AnalyzerError(f"value {value} out of range for {to}") from e
+
+    return run
+
+
 @dataclass
 class _Touched:
     """A DELETE's or UPDATE's touched rows (see ``_touched``)."""
@@ -237,7 +261,9 @@ class _Touched:
     frame: DataFrame
     rows: list | None = None  # collected, in table column order
     extra: list | None = None  # the ``extra`` values of each row
-    files: frozenset | None = None  # manifest paths of the files holding them; None: all
+    # manifest path of each file holding some -> their row indices in it;
+    # None: the whole table
+    positions: dict[str, list[int]] | None = None
 
 
 class OxidSparkDatabase:
@@ -387,35 +413,46 @@ class OxidSparkDatabase:
         """The rows a DELETE or UPDATE condition holds TRUE for.  While
         the table's exact online rowcount is at most ``_DRIVER_ROWS``,
         ONE job collects them (table columns, then the ``extra`` Columns)
-        with the file each sits in.  Above it nothing is collected: the
-        rows stay a frame and the whole table is rewritten (``files`` is
-        None).  In memory there are no files."""
+        with the file each sits in and its index there
+        (``_metadata.row_index``, Spark's twin of the reference's
+        ``RelationTID``), so the condition is evaluated once.  Above it
+        nothing is collected: the rows stay a frame and the whole table
+        is rewritten (``positions`` is None).  In memory there are no
+        files."""
         durable = bool(self.storage_dir)
         vt = self._vt(name) if durable else None
         base = vt.read() if durable else self.spark.table(name)
         frame = base.alias(name).filter(f"coalesce(({cond}), false)")
         if durable and not vt.files():  # an empty version: no file, no row
-            return _Touched(frame, [], [], frozenset())
+            return _Touched(frame, [], [], {})
         if self._stats[name].rowcount > _DRIVER_ROWS:
             return _Touched(frame)
-        path = [F.col("_metadata.file_path")] if durable else []
-        n, got = len(base.columns), frame.select("*", *extra, *path).collect()
+        tid = [F.col("_metadata.file_path"), F.col("_metadata.row_index")] if durable else []
+        n, got = len(base.columns), frame.select("*", *extra, *tid).collect()
+        positions = None
+        if durable:
+            by_file: dict[str, list[int]] = {}
+            for r in got:
+                by_file.setdefault(r[-2], []).append(r[-1])
+            positions = {vt.relpath(f): idx for f, idx in by_file.items()}
         return _Touched(
             frame,
             [tuple(r[:n]) for r in got],
             [tuple(r[n : n + len(extra)]) for r in got],
-            frozenset(vt.relpath(r[-1]) for r in got) if durable else None,
+            positions,
         )
 
-    def _rewrite(self, name: str, hit: _Touched, fn) -> None:
-        """Commit `fn`, a DELETE's or UPDATE's row rewrite: over only the
-        files holding a touched row when they are known — every other
-        file carries over by reference — else over the whole table."""
-        if hit.files is None:
+    def _rewrite(self, name: str, hit: _Touched, fn, post: list = ()) -> None:
+        """Commit a DELETE's or UPDATE's rewrite.  With the touched rows'
+        positions known, on the driver with no job: each file holding a
+        touched row is read with pyarrow, less those rows, plus `post`
+        (an UPDATE's collected post-image rows) — every other file
+        carries over by reference.  Else `fn`, the statement's row
+        rewrite, over the whole table."""
+        if hit.positions is None:
             self._commit(name, fn(self.spark.table(name)))
             return
-        add = fn(self._vt(name).read_files(sorted(hit.files)).alias(name)) if hit.files else None
-        self._commit(name, Delta(add=add, drop=hit.files))
+        self._commit(name, self._vt(name).without_rows(hit.positions, post))
 
     # -- statement router (the reference's parse → analyze → plan → run) --
 
@@ -1645,6 +1682,7 @@ class OxidSparkDatabase:
         self._save_stats(name)
         return None
 
+    @_range_checked
     def _insert_select(self, stmt: str) -> None:
         """INSERT INTO t [(cols)] SELECT … (a reference TODO; the
         set-oriented twin of VALUES). Arity-checked like the reference's
@@ -1712,9 +1750,11 @@ class OxidSparkDatabase:
     #
     # Plain-parquet Spark has no in-place mutation; the portable pattern
     # is rewrite.  A statement pays for its delta, not its table: one job
-    # finds the touched rows and the files holding them, the statistics
-    # fold those rows, and one write job rewrites only those files —
-    # every other file of a durable table carries over by reference.
+    # finds the touched rows with their file and row index, the
+    # statistics fold those rows, and the driver rewrites only those
+    # files with pyarrow, less the touched rows, plus an UPDATE's
+    # post-image — every other file of a durable table carries over by
+    # reference.  Above ``_DRIVER_ROWS`` the whole table is rewritten.
 
     def _delete(self, stmt: str) -> None:
         m = _DELETE_RE.match(stmt)
@@ -1750,6 +1790,7 @@ class OxidSparkDatabase:
         self._save_stats(name)
         return None
 
+    @_range_checked
     def _update(self, stmt: str) -> None:
         m = _UPDATE_RE.match(stmt)
         name, sets_src, where = m.group(1).lower(), m.group(2), m.group(3)
@@ -1764,7 +1805,18 @@ class OxidSparkDatabase:
                 raise AnalyzerError(f"unknown column '{col}' in UPDATE")
             assignments[col] = expr.strip()
         cond = where if where else "true"
-        sets = {c: F.expr(e).cast(types[c]) for c, e in assignments.items()}
+        values = {c: F.expr(e) for c, e in assignments.items()}
+        sets = {c: v.cast(types[c]) for c, v in values.items()}
+        # a SET on an integer column is range-checked as INSERT checks it
+        # (types.rs:162-203): the touched-row collect takes its try_cast
+        # value and, per column, the value its ANSI cast would overflow
+        # on, so no task fails and the driver raises AnalyzerError
+        ints = [c for c in sets if isinstance(types[c], T.IntegralType)]
+        tried = {c: values[c].try_cast(types[c]) for c in ints}
+        overflow = [
+            F.when(tried[c].isNull() & values[c].isNotNull(), values[c].cast("string"))
+            for c in ints
+        ]
 
         # columns beyond the table's (the statistics sample's __prio__)
         # pass through, so the sample takes the same rewrite
@@ -1806,7 +1858,7 @@ class OxidSparkDatabase:
         # — touches only the affected rows, never rescans the table; the
         # post-image rides the job that finds the touched rows, and the
         # sample takes the same rewrite
-        hit = self._touched(name, cond, tuple(sets.values()))
+        hit = self._touched(name, cond, (*[tried.get(c, v) for c, v in sets.items()], *overflow))
         # a SET on a VARCHAR(n) column is checked as INSERT checks it
         # (types.rs:182-191), before anything is folded or committed
         capped = [
@@ -1817,6 +1869,10 @@ class OxidSparkDatabase:
             if capped:
                 _reject_over_cap(capped, hit.frame.select(*_over_cap_counts(capped, sets.get)).first())
         else:
+            for i, c in enumerate(ints, start=len(sets)):
+                bad = next((e[i] for e in hit.extra if e[i] is not None), None)
+                if bad is not None:
+                    raise AnalyzerError(f"value {bad} out of range for {types[c].simpleString()}")
             pre, post = hit.rows, []
             for row, vals in zip(hit.rows, hit.extra):
                 new = dict(zip(sets, vals))
@@ -1827,7 +1883,7 @@ class OxidSparkDatabase:
                 {c.name: sum(len(r[at(c.name)] or "") > c.length for r in post) for c in capped},
             )
         self._stats[name].update(post, pre_image=pre, rewrite=lambda s: rewrite(s.alias(name)))
-        self._rewrite(name, hit, rewrite)
+        self._rewrite(name, hit, rewrite, post)
         self._save_stats(name)
         return None
 

@@ -17,8 +17,10 @@ same immutable-manifest model Delta/Iceberg formalize:
   one of them becomes its other files) and adds the rows ``add`` holds
   — an append writes one file, a DELETE/UPDATE rewrites only the files
   it touches.  Rows known on the driver are written there with
-  pyarrow, with no Spark job.  A commit that writes zero rows
-  references no file;
+  pyarrow, with no Spark job: ``without_rows`` drops rows by their
+  position in a file (Spark's ``_metadata.row_index``, the twin of a
+  heap tuple id) by reading that file on the driver.  A commit that
+  writes zero rows references no file;
 * the manifest becomes visible in one step (tmp file + ``os.rename`` on
   a local disk, one PUT on an object store).  No directory rename is
   ever a commit, so a crashed writer leaves only unreferenced files
@@ -90,10 +92,11 @@ class Delta:
     """A commit relative to the latest version: its files but ``drop``
     (manifest paths, see ``VersionedTable.relpath``) plus the rows of
     ``add`` — a DataFrame (one Spark write job), a list of driver-side
-    row tuples in schema order (one parquet file written with pyarrow,
-    no job) or None."""
+    row tuples in schema order or a ``pyarrow.Table`` in the manifest's
+    Arrow schema (either one parquet file written with pyarrow, no job)
+    or None."""
 
-    add: DataFrame | list | None = None
+    add: "DataFrame | list | pyarrow.Table | None" = None
     drop: frozenset = frozenset()
 
 
@@ -185,10 +188,12 @@ class VersionedTable:
         if isinstance(delta.add, DataFrame):
             delta.add.write.mode("errorifexists").parquet(vdir)
             paths += self._written(vdir)
-        elif delta.add:
+        elif delta.add is not None:
             from .functions import arrow_rows
 
-            paths.append(self._write_arrow(vdir, arrow_rows(delta.add, schema)))
+            rows = arrow_rows(delta.add, schema) if isinstance(delta.add, list) else delta.add
+            if rows.num_rows:
+                paths.append(self._write_arrow(vdir, rows))
         paths = self._merge_small(vdir, paths, schema)
         if len(paths) > MAX_PATHS:
             paths = self._compact(vdir, paths, schema)
@@ -246,10 +251,6 @@ class VersionedTable:
         most (MAX_SMALL_FILES + 1) MiB; the merged files this commit
         just wrote are deleted (no manifest references them), older ones
         stay for time travel."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         files = {p: self._files(p) for p in paths}
         size = {p: sum(map(os.path.getsize, files[p])) for p in paths}
         small = [p for p in paths if size[p] < SMALL_FILE_BYTES]
@@ -257,17 +258,50 @@ class VersionedTable:
             size[p] for p in small
         ) > (MAX_SMALL_FILES + 1) * SMALL_FILE_BYTES:
             return paths
-        arrow = to_arrow_schema(schema)
-        # Spark writes TIMESTAMP as INT96: read it as microseconds, the
-        # facade's unit, so no year outside 1677-2262 overflows
-        merged = pa.concat_tables(
-            pq.read_table(f, columns=arrow.names, coerce_int96_timestamp_unit="us").cast(arrow)
-            for p in small
-            for f in files[p]
-        )
+        merged = self._read_arrow([f for p in small for f in files[p]], schema)
         out = [p for p in paths if p not in small] + [self._write_arrow(vdir, merged)]
         self._remove_new(vdir, small)
         return out
+
+    def _read_arrow(self, files: list[str], schema: T.StructType):
+        """The rows of data files (manifest paths or absolute paths), in
+        file and row order, as one Arrow table in `schema`.  Spark writes
+        TIMESTAMP as INT96: it is read as microseconds, the facade's
+        unit, so no year outside 1677-2262 overflows."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+        return pa.concat_tables(
+            pq.read_table(
+                os.path.join(self.path, f), columns=arrow.names, coerce_int96_timestamp_unit="us"
+            ).cast(arrow)
+            for f in files
+        )
+
+    def without_rows(self, positions: dict[str, list[int]], add: list = ()) -> Delta:
+        """The Delta that deletes rows by position and appends `add`
+        (driver rows in schema order), with no Spark job: `positions`
+        maps a data file of the latest version (a manifest path) to the
+        indices of its rows to delete, as Spark's ``_metadata.row_index``
+        counts them.  Each file is read on the driver, less those rows;
+        the rest of it and `add` become ONE new file, and the file is
+        dropped."""
+        import numpy as np
+        import pyarrow as pa
+
+        from .functions import arrow_rows
+
+        schema = _schema(self._manifest(None))
+        kept = []
+        for f, idx in sorted(positions.items()):
+            rows = self._read_arrow([f], schema)
+            keep = np.ones(rows.num_rows, dtype=bool)
+            keep[idx] = False
+            kept.append(rows.filter(pa.array(keep)))
+        add = pa.concat_tables([*kept, arrow_rows(list(add), schema)])
+        return Delta(add=add, drop=frozenset(positions))
 
     def _compact(self, vdir: str, paths: list[str], schema: T.StructType) -> list[str]:
         """Rewrite every path as one dir, ``<vdir>/c``, with one Spark
@@ -443,11 +477,6 @@ class VersionedTable:
         — manifest-level pruning, no file listing of the rest."""
         m = self._manifest(version)
         return self._scan(m, _paths(m["groups"][str(v)] for v in values if str(v) in m["groups"]))
-
-    def read_files(self, paths) -> DataFrame:
-        """The rows of the named files (manifest paths) of the latest
-        version."""
-        return self._scan(self._manifest(None), paths)
 
     def relpath(self, file_path: str) -> str:
         """The manifest path of a data file named by a URI or an

@@ -105,3 +105,37 @@ def test_update_enforces_varchar_cap(spark, tmp_path, monkeypatch, above_bound):
     db.query("UPDATE t SET s = 'abcdef' WHERE id > 5")
     db.query("UPDATE t SET s = 'zz', id = id + 1 WHERE id = 1")
     assert {r.s: r.id for r in db.query("SELECT id, s FROM t").collect()} == {None: 2, "zz": 2}
+
+
+@pytest.mark.parametrize("above_bound", [False, True])
+def test_integer_overflow_raises_analyzer_error(spark, tmp_path, monkeypatch, above_bound):
+    """An UPDATE SET or INSERT … SELECT value out of an integer column's
+    range raises the AnalyzerError INSERT … VALUES raises, on both sides
+    of the driver-row bound: nothing is committed and the statistics
+    describe the same rows.  A SET that no row takes commits."""
+    from oxidsql_spark import database
+
+    if above_bound:
+        monkeypatch.setattr(database, "_DRIVER_ROWS", -1)
+    db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
+    db.query("CREATE TABLE t (id INT, c SMALLINT)")
+    db.query("INSERT INTO t VALUES (1, 3), (2, NULL)")
+
+    def state():
+        st = db.stats("t")
+        st.sample_df()  # buffered rows join the sample
+        return st.rowcount, [st.ndv(c) for c in ("id", "c")], sorted(st._sample)
+
+    version, stats = db._vt("t").latest_version(), state()
+    for stmt, msg in [
+        ("UPDATE t SET c = c + 40000 WHERE id > 0", "value 40003 out of range for smallint"),
+        ("UPDATE t SET id = 2147483648 WHERE c IS NULL", "value 2147483648 out of range for int"),
+        ("INSERT INTO t SELECT 3, 40000", "value 40000 out of range for smallint"),
+    ]:
+        with pytest.raises(AnalyzerError, match=msg):
+            db.query(stmt)
+        assert db._vt("t").latest_version() == version, stmt
+        assert state() == stats, stmt
+    db.query("UPDATE t SET c = c + 40000 WHERE id > 5")
+    db.query("UPDATE t SET c = 32767 WHERE id = 1")
+    assert sorted(map(tuple, db.query("SELECT id, c FROM t").collect()), key=str) == [(1, 32767), (2, None)]

@@ -455,8 +455,9 @@ def test_durable_insert_values_runs_no_job(spark, tmp_path):
 
 def test_dml_touching_one_file_rewrites_only_it(spark, tmp_path):
     """A DELETE or UPDATE whose touched rows sit in one of several files
-    runs at most 2 jobs (find the rows, rewrite their file), and every
-    other file path carries over unchanged."""
+    runs exactly 1 job (find the rows with their file and row index; the
+    driver rewrites their file), and every other file path carries over
+    unchanged."""
     db = _durable(spark, tmp_path)
     vt = db._vt("t")
     assert len(vt.files()) == 3
@@ -467,10 +468,110 @@ def test_dml_touching_one_file_rewrites_only_it(spark, tmp_path):
         old = set(vt.files())
         expect = sorted(r for r in (want(*r) for r in _rows(db.query("SELECT id, v FROM t"))) if r)
         _, n = _jobs(spark, lambda: db.query(stmt))
-        assert n <= 2, (stmt, n)
+        assert n == 1, (stmt, n)
         new = set(vt.files())
         assert len(old - new) == 1 and len(new - old) == 1, stmt  # one file swapped
         assert _rows(db.query("SELECT id, v FROM t")) == expect, stmt
+
+
+def _model_dml(db, vt, stmts):
+    """Run each (statement, model) on `db`, where the model maps one row
+    (a tuple of the table's columns) to its rows after the statement,
+    and check the table equals the model applied to its rows before."""
+    from collections import Counter
+
+    for stmt, model in stmts:
+        before = Counter(map(tuple, vt.read().collect()))
+        want = Counter(out for r, k in before.items() for out in model(r) for _ in range(k))
+        db.query(stmt)
+        assert Counter(map(tuple, vt.read().collect())) == want, stmt
+        assert db.stats("t").rowcount == sum(want.values()), stmt
+
+
+def test_dml_positions_survive_row_group_skipping(spark, tmp_path):
+    """The touched rows of a file of many row groups, where min/max lets
+    Parquet skip the first ones, are found at their true row index: the
+    driver rewrite deletes or updates exactly them."""
+    import pyarrow.parquet as pq
+
+    from oxidsql_spark.database import OxidSparkDatabase
+
+    db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
+    db.query("CREATE TABLE t (id BIGINT, v INT)")
+    spark.conf.set("parquet.block.size", "1024")  # ~100-row row groups
+    try:
+        db.query("INSERT INTO t SELECT /*+ REPARTITION(1) */ id, CAST(id % 7 AS INT) FROM range(600)")
+    finally:
+        spark.conf.unset("parquet.block.size")
+    vt = db._vt("t")
+    [f] = vt.files()
+    assert pq.ParquetFile(f).metadata.num_row_groups >= 3
+    _model_dml(db, vt, [
+        ("DELETE FROM t WHERE id >= 590 OR id = 450", lambda r: [] if r[0] >= 590 or r[0] == 450 else [r]),
+        ("UPDATE t SET v = v + 100 WHERE id BETWEEN 520 AND 530",
+         lambda r: [(r[0], r[1] + 100) if 520 <= r[0] <= 530 else r]),
+        ("DELETE FROM t WHERE v > 100 AND id > 525", lambda r: [] if r[1] > 100 and r[0] > 525 else [r]),
+    ])
+
+
+def test_dml_positions_with_duplicate_and_null_predicate_rows(spark, tmp_path):
+    """Duplicate rows each take an UPDATE once, and rows whose predicate
+    is NULL are neither deleted nor updated."""
+    from oxidsql_spark.database import OxidSparkDatabase
+
+    db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
+    db.query("CREATE TABLE t (id BIGINT, v INT)")
+    db.query("INSERT INTO t VALUES (1, 1), (1, 1), (2, NULL), (NULL, 1), (3, 3), (3, 3), (3, 3)")
+    db.query("INSERT INTO t VALUES (1, 1), (2, 2), (NULL, NULL)")
+    vt = db._vt("t")
+    assert len(vt.files()) == 2
+    _model_dml(db, vt, [
+        ("UPDATE t SET v = v + 10 WHERE id = v", lambda r: [(r[0], r[1] + 10) if r[0] is not None and r[0] == r[1] else r]),
+        ("DELETE FROM t WHERE v = 13", lambda r: [] if r[1] == 13 else [r]),
+        ("UPDATE t SET id = 7 WHERE v > id", lambda r: [(7, r[1]) if None not in r and r[1] > r[0] else r]),
+        ("DELETE FROM t WHERE id <> 7", lambda r: [] if r[0] is not None and r[0] != 7 else [r]),
+    ])
+
+
+def test_driver_rewrite_keeps_every_type(spark, tmp_path):
+    """A driver-side DELETE or UPDATE rewrite keeps the untouched rows of
+    the file it reads equal to what Spark wrote, for every facade and
+    CTAS passthrough type, a Spark-written (INT96) 9999-12-31 timestamp
+    included."""
+    import datetime
+    import decimal
+
+    from oxidsql_spark.database import OxidSparkDatabase
+
+    schema = (
+        "b BIGINT, i INT, s SMALLINT, v STRING, y BINARY, d DECIMAL(12,2), "
+        "dt DATE, ts TIMESTAMP, f DOUBLE, o BOOLEAN"
+    )
+    rows = [
+        (
+            -(2**62), 2**31 - 1, -(2**15), "héllo", b"\x00\xff", decimal.Decimal("1234567890.12"),
+            datetime.date(1999, 12, 31), datetime.datetime(2001, 2, 3, 4, 5, 6, 789),
+            1.5, True,
+        ),
+        (None,) * 10,
+        (1, 2, 3, "x", b"", decimal.Decimal("-0.01"), datetime.date(1, 1, 1), None, -0.0, False),
+        (2, None, None, None, None, None, None, None, None, None),
+    ]
+    spark.createDataFrame(rows, schema).coalesce(1).createOrReplaceTempView("typed_src")
+    db = OxidSparkDatabase(spark, storage_dir=str(tmp_path / "db"))
+    db.query("CREATE TABLE t AS SELECT *, TIMESTAMP'9999-12-31 23:59:59' AS end_ts FROM typed_src")
+    vt = db._vt("t")
+    written = list(map(tuple, vt.read().collect()))
+    assert len(vt.files()) == 1 and written[0][-1].year == 9999
+    key = lambda r: tuple((x is None, str(x)) for x in r)
+    db.query("DELETE FROM t WHERE b = 2")
+    assert vt.files()[0].endswith(".zstd.parquet")  # rewritten on the driver
+    assert sorted(map(tuple, vt.read().collect()), key=key) == sorted(
+        (r for r in written if r[0] != 2), key=key
+    )
+    db.query("UPDATE t SET f = f + 1 WHERE b = 1")
+    want = [r[:8] + (r[8] + 1,) + r[9:] if r[0] == 1 else r for r in written if r[0] != 2]
+    assert sorted(map(tuple, vt.read().collect()), key=key) == sorted(want, key=key)
 
 
 def _paths(vt, version=None):
